@@ -1,11 +1,12 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS].  Prints ONE JSON line:
+sf0.1) on local[N], N from get_spark's default (SPARK_GRAFT_CPUS, else the
+CPUs available).  Prints ONE JSON line:
 {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 The headline is the north-star pipeline: chunk -> geocode -> PIP join +
 tile rollup (BASELINE.json "metric": PIP-join + tile-assignment throughput,
-docs/sec).  Scaling evidence across two parallelism levels is produced by
-tools/scaling_bench.py (separate JVMs needed for different masters).
+docs/sec).  The repository benchmark is perfbench/run.py; this script keeps
+the older per-stage timings.
 """
 
 from __future__ import annotations
@@ -30,9 +31,9 @@ def run(cores: int | None = None, sf_dir: str | None = None) -> dict:
     from tree_code_chunker_spark.sources.datagen import gen_knn_queries, gen_polygons
 
     sf_dir = sf_dir or os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-    spark = get_spark(f"bench-{cores}", cores=cores)
+    spark = get_spark("bench", cores=cores)
+    cores = spark.sparkContext.defaultParallelism
     spark.sparkContext.setLogLevel("ERROR")
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -128,7 +129,8 @@ def run(cores: int | None = None, sf_dir: str | None = None) -> dict:
     timings["knn"] = round(min(knn_once() for _ in range(2)), 3)
 
     # corpus-vs-corpus kNN through the DISTRIBUTED planner (broadcast SAT
-    # + mapInPandas radius planning — the probe side is never collected):
+    # + mapInPandas radius planning — the probe side is never collected;
+    # the ~200k-row probe is above DRIVER_PROBE_CAP, so knn_ring picks it):
     # a ~200k-point slice of the corpus, INCLUDING the hot boxes, probes
     # the full 9.2M-point index for its nearest other points.  This is
     # the ANN-dedup / getSiblings shape the r3 driver-side planner could
@@ -147,8 +149,7 @@ def run(cores: int | None = None, sf_dir: str | None = None) -> dict:
 
     def knn_self_once():
         t0 = time.perf_counter()
-        knn_ring(probe_self, k=4, index=kidx_self, probe_mode="distributed",
-                 exclude_self=True).count()
+        knn_ring(probe_self, k=4, index=kidx_self, exclude_self=True).count()
         return time.perf_counter() - t0
 
     timings["knn_self_200k"] = round(

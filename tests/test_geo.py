@@ -173,20 +173,13 @@ def test_pip_join_with_prebuilt_index_matches(spark):
 
 
 def test_pip_join_argument_validation(spark):
-    from tree_code_chunker_spark.operators.pip import (
-        build_polygon_index,
-        pip_join,
-    )
-    from tree_code_chunker_spark.sources.datagen import gen_polygons
+    from tree_code_chunker_spark.operators.pip import pip_join
 
     pts = spark.createDataFrame(
         [("d0", 0, 100, 100)],
         "doc_id string, span_pos long, qlat long, qlon long")
     with pytest.raises(ValueError, match="build side"):
         pip_join(pts)
-    idx = build_polygon_index(gen_polygons(spark, 3, seed=43))
-    with pytest.raises(ValueError, match="PolygonIndex"):
-        pip_join(pts, exact="jvm", index=idx)
 
 
 # ------------------------------------------------------ cover compaction ----

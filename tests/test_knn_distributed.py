@@ -9,8 +9,9 @@ from pyspark.sql import functions as F
 
 from tree_code_chunker_spark.config import GRID_BITS
 from tree_code_chunker_spark.operators.geo import derive_point_cols
+from tree_code_chunker_spark.operators import knn
 from tree_code_chunker_spark.operators.knn import (
-    KnnIndex, knn_bruteforce, knn_ring, knn_self_join, plan_radii_np,
+    KnnIndex, knn_bruteforce, knn_ring, knn_self_join, plan_radii_dcap_np,
 )
 
 
@@ -81,7 +82,7 @@ def test_plan_radii_vectorized_matches_loop(k):
     sat = _sat_from_grid(grid)
     qlat = rng.randint(0, 1 << GRID_BITS, 4000).astype(np.int64)
     qlon = rng.randint(0, 1 << GRID_BITS, 4000).astype(np.int64)
-    got = plan_radii_np(sat, qlat, qlon, res_hist, res, k)
+    got = plan_radii_dcap_np(sat, qlat, qlon, res_hist, res, k)[0]
     want = _plan_radii_loop(sat, qlat, qlon, res_hist, res, k)
     assert np.array_equal(got, want)
 
@@ -93,7 +94,7 @@ def test_plan_radii_infeasible_caps_to_grid():
     grid[0, 0] = 3  # corpus of 3 points total
     sat = _sat_from_grid(grid)
     q = np.array([12345], dtype=np.int64)
-    out = plan_radii_np(sat, q, q, res_hist, res, k=10)
+    out = plan_radii_dcap_np(sat, q, q, res_hist, res, k=10)[0]
     assert out[0] == (1 << res)  # k > corpus: search the whole grid
 
 
@@ -116,7 +117,8 @@ def _key(rows):
 def test_knn_distributed_matches_bruteforce_large_probe(spark):
     """>=1e5 probe rows through the mapInPandas planner (the probe side is
     never collected) == brute force.  This is the corpus-vs-corpus scale
-    shape the driver planner cannot reach."""
+    shape the driver planner cannot reach: the probe exceeds
+    DRIVER_PROBE_CAP, so the size rule plans it on the executors."""
     n_q = 120_000
     corpus = _corpus(spark, 250).cache()
     qlat, qlon = derive_point_cols(F.col("id") * 7 + 3, F.lit(5))
@@ -124,24 +126,53 @@ def test_knn_distributed_matches_bruteforce_large_probe(spark):
         F.col("id").cast("string").alias("query_id"),
         qlat.alias("qlat"), qlon.alias("qlon")).cache()
     k = 3
-    got = knn_ring(queries, corpus, k, res=8,
-                   probe_mode="distributed").collect()
+    assert n_q > knn.DRIVER_PROBE_CAP
+    got = knn_ring(queries, corpus, k, res=8).collect()
     want = knn_bruteforce(queries, corpus, k).collect()
     assert _key(got) == _key(want)
     assert len(want) == n_q * k
 
 
-def test_knn_distributed_matches_driver_small(spark):
+def test_knn_distributed_matches_driver_small(spark, monkeypatch):
     corpus = _corpus(spark, 500).cache()
     qlat, qlon = derive_point_cols(F.col("id") * 11 + 1, F.lit(2))
     queries = spark.range(200).select(
         F.col("id").cast("string").alias("query_id"),
         qlat.alias("qlat"), qlon.alias("qlon")).cache()
     idx = KnnIndex(corpus, res=9)
-    a = knn_ring(queries, k=4, index=idx, probe_mode="driver").collect()
-    b = knn_ring(queries, k=4, index=idx, probe_mode="distributed").collect()
-    c = knn_ring(queries, k=4, index=idx, probe_mode="auto").collect()
-    assert _key(a) == _key(b) == _key(c)
+    a = knn_ring(queries, k=4, index=idx).collect()  # fits: driver planner
+    monkeypatch.setattr(knn, "DRIVER_PROBE_CAP", 0)
+    b = knn_ring(queries, k=4, index=idx).collect()  # distributed planner
+    assert _key(a) == _key(b)
+
+
+def test_knn_probe_size_picks_planner(spark, monkeypatch):
+    """The size rule at its boundary: with DRIVER_PROBE_CAP = n, a probe
+    of n rows is planned on the driver and one of n+1 rows on the
+    executors — both exact."""
+    n = 40
+    corpus = _corpus(spark, 300).cache()
+    idx = KnnIndex(corpus, res=9)
+    monkeypatch.setattr(knn, "DRIVER_PROBE_CAP", n)
+    driver_calls = []
+    plan = knn.plan_radii_dcap_np
+
+    def spy(sat, qlat, *a):
+        driver_calls.append(len(qlat))  # executor-side calls land elsewhere
+        return plan(sat, qlat, *a)
+
+    monkeypatch.setattr(knn, "plan_radii_dcap_np", spy)
+    for rows, want_calls in ((n, [n]), (n + 1, [])):
+        qlat, qlon = derive_point_cols(F.col("id") * 11 + 1, F.lit(2))
+        queries = spark.range(rows).select(
+            F.col("id").cast("string").alias("query_id"),
+            qlat.alias("qlat"), qlon.alias("qlon"))
+        driver_calls.clear()
+        got = knn_ring(queries, k=4, index=idx).collect()
+        assert driver_calls == want_calls, rows
+        want = knn_bruteforce(queries, corpus, 4).collect()
+        assert _key(got) == _key(want)
+        assert len(got) == rows * 4
 
 
 def test_knn_self_join_matches_bruteforce(spark):
@@ -203,13 +234,16 @@ def _cluster_corpus(spark, n_hot=20_000, n_uniform=3_000):
     return hot.unionByName(uni)
 
 
-def test_knn_fine_tier_self_join_matches_bruteforce(spark):
+def test_knn_fine_tier_self_join_matches_bruteforce(spark, monkeypatch):
     """Self-join kNN over a corpus with a dense cluster: the fine tier
     must activate (hot cells get local SATs) and the result must equal
     brute force — including co-located duplicates inside the cluster and
-    cell-edge probes that fall back to the coarse plan."""
+    cell-edge probes that fall back to the coarse plan.  Planned on the
+    executors, as the self-join is."""
+    monkeypatch.setattr(knn, "HOT_CELL_CAP", 2_000)
+    monkeypatch.setattr(knn, "DRIVER_PROBE_CAP", 0)
     corpus = _cluster_corpus(spark).cache()
-    idx = KnnIndex(corpus, res=10, res_hist=10, hot_cell_cap=2_000)
+    idx = KnnIndex(corpus, res=10, res_hist=10)
     assert idx.fine_sats, "dense cluster must trigger the fine tier"
     assert idx.corp_fine is not None
     from tree_code_chunker_spark.operators.knn import knn_self_join
@@ -226,31 +260,35 @@ def test_knn_fine_tier_self_join_matches_bruteforce(spark):
         F.concat_ws(":", F.col("doc_id"),
                     F.col("span_pos").cast("string")).alias("query_id"),
         "qlat", "qlon")
-    got = knn_ring(probes, k=k, index=idx, probe_mode="distributed",
-                   exclude_self=True).collect()
+    got = knn_ring(probes, k=k, index=idx, exclude_self=True).collect()
     want = knn_bruteforce(probes, corpus, k, exclude_self=True).collect()
     assert _key(got) == _key(want)
     assert len(got) == probes_src.count() * k
 
 
-def test_knn_fine_tier_interactive_queries(spark):
+def test_knn_fine_tier_interactive_queries(spark, monkeypatch):
     """Driver-planned (small probe set) queries inside and around the
-    dense cluster route through the fine tier and stay exact."""
+    dense cluster route through the fine tier and stay exact — and so do
+    the same queries planned on the executors."""
+    monkeypatch.setattr(knn, "HOT_CELL_CAP", 2_000)
     corpus = _cluster_corpus(spark).cache()
-    idx = KnnIndex(corpus, res=10, res_hist=10, hot_cell_cap=2_000)
+    idx = KnnIndex(corpus, res=10, res_hist=10)
     rows = [("inhot", 1030, 1030), ("edge", 1000, 1063),
             ("nearhot", 1100, 1100), ("far", 50000, 50000)]
     queries = spark.createDataFrame(
         rows, "query_id string, qlat long, qlon long")
-    for mode in ("driver", "distributed"):
-        got = knn_ring(queries, k=5, index=idx, probe_mode=mode).collect()
-        want = knn_bruteforce(queries, corpus, 5).collect()
-        assert _key(got) == _key(want), mode
+    want = knn_bruteforce(queries, corpus, 5).collect()
+    for cap in (knn.DRIVER_PROBE_CAP, 0):  # driver, then distributed
+        monkeypatch.setattr(knn, "DRIVER_PROBE_CAP", cap)
+        got = knn_ring(queries, k=5, index=idx).collect()
+        assert _key(got) == _key(want), cap
 
 
-def test_knn_fine_tier_disabled_still_exact(spark):
+def test_knn_fine_tier_disabled_still_exact(spark, monkeypatch):
     corpus = _cluster_corpus(spark, n_hot=5_000, n_uniform=500).cache()
-    idx = KnnIndex(corpus, res=10, res_hist=10, hot_cell_cap=None)
+    # a cap of the corpus size is above any cell count: no hot cells
+    monkeypatch.setattr(knn, "HOT_CELL_CAP", 5_500)
+    idx = KnnIndex(corpus, res=10, res_hist=10)
     assert not idx.fine_sats and idx.corp_fine is None
     queries = spark.createDataFrame(
         [("a", 1030, 1030), ("b", 40000, 40000)],
@@ -260,12 +298,15 @@ def test_knn_fine_tier_disabled_still_exact(spark):
     assert _key(got) == _key(want)
 
 
-def test_knn_salted_merge_path_equals_broadcast_path(spark):
-    """broadcast_cap_rows=0 forces the co-repartitioned sort-merge path
+def test_knn_salted_merge_path_equals_broadcast_path(spark, monkeypatch):
+    """BROADCAST_CAP_ROWS=0 forces the co-repartitioned sort-merge path
     WITH known-hot salting (the cluster corpus has hot cells) — results
-    must be bit-equal to the broadcast-hash path on the same probes."""
+    must be bit-equal to the broadcast-hash path on the same probes, both
+    planned on the executors."""
+    monkeypatch.setattr(knn, "HOT_CELL_CAP", 2_000)
+    monkeypatch.setattr(knn, "DRIVER_PROBE_CAP", 0)
     corpus = _cluster_corpus(spark, n_hot=8_000, n_uniform=2_000).cache()
-    idx = KnnIndex(corpus, res=10, res_hist=10, hot_cell_cap=2_000)
+    idx = KnnIndex(corpus, res=10, res_hist=10)
     assert idx.fine_sats
     probes = corpus.filter(
         F.substring("doc_id", 2, 10).cast("long") % 23 == 0
@@ -273,10 +314,9 @@ def test_knn_salted_merge_path_equals_broadcast_path(spark):
         F.concat_ws(":", F.col("doc_id"),
                     F.col("span_pos").cast("string")).alias("query_id"),
         "qlat", "qlon").cache()
-    a = knn_ring(probes, k=3, index=idx, probe_mode="distributed",
-                 exclude_self=True).collect()
-    b = knn_ring(probes, k=3, index=idx, probe_mode="distributed",
-                 exclude_self=True, broadcast_cap_rows=0).collect()
+    a = knn_ring(probes, k=3, index=idx, exclude_self=True).collect()
+    monkeypatch.setattr(knn, "BROADCAST_CAP_ROWS", 0)
+    b = knn_ring(probes, k=3, index=idx, exclude_self=True).collect()
     assert _key(a) == _key(b)
     assert len(a) == probes.count() * 3
 
@@ -338,16 +378,17 @@ def test_knn_self_key_collision_safe(spark):
         assert (r["k1"], r["k2"]) == twin[r["query_id"]], r.asDict()
 
 
-def test_knn_sparse_cap_falls_back_to_nonbroadcast(spark):
-    """A sparse probe set larger than sparse_broadcast_cap must route
+def test_knn_sparse_cap_falls_back_to_nonbroadcast(spark, monkeypatch):
+    """A sparse probe set larger than SPARSE_BROADCAST_CAP must route
     through the non-broadcast scored join and still be exact."""
-    corpus = _corpus(spark, 50)  # tiny corpus: most probes plan rho > max_rho
+    monkeypatch.setattr(knn, "MAX_RHO", 1)
+    monkeypatch.setattr(knn, "SPARSE_BROADCAST_CAP", 10)
+    corpus = _corpus(spark, 50)  # tiny corpus: most probes plan rho > MAX_RHO
     queries = spark.range(200).select(
         F.col("id").cast("string").alias("query_id"),
         (F.abs(F.xxhash64("id")) % 65536).alias("qlat"),
         (F.abs(F.xxhash64("id", F.lit(7))) % 65536).alias("qlon"),
     )
-    got = knn_ring(queries, corpus, k=3, res=8, max_rho=1,
-                   sparse_broadcast_cap=10).collect()
+    got = knn_ring(queries, corpus, k=3, res=8).collect()
     want = knn_bruteforce(queries, corpus, 3).collect()
     assert _key(got) == _key(want)

@@ -45,7 +45,7 @@ def main() -> int:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
-    spark = get_spark("check-oracle", cores=8)
+    spark = get_spark("check-oracle")
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()

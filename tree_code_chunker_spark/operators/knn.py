@@ -18,16 +18,18 @@ round and was ~20x slower):
     disk can beat the provisional k-th neighbor.  One histogram shuffle +
     one small collect, independent of corpus size.
 
-    The planner runs in one of two places:
-      * **driver** (small probe sets, the interactive contract): one tiny
-        toPandas + in-process numpy → a literal DataFrame; the candidate
-        join's DAG is pure JVM with zero Python workers.
-      * **distributed** (large probe sets / self-join): the SAT — an
-        (n+1)^2 int64 array, ~130 KB at res_hist 7 — is broadcast and the
-        same numpy kernel runs as an Arrow-batched mapInPandas over the
-        probe DataFrame.  The probe side is NEVER collected in this mode;
-        the only driver-sized data is one 2-value stats row.
-    `probe_mode='auto'` sniffs at most driver_probe_cap+1 rows to pick.
+    The probe's size picks where the planner runs:
+      * **driver** (a probe of at most DRIVER_PROBE_CAP rows, the
+        interactive contract): one tiny toPandas + in-process numpy → a
+        literal DataFrame; the candidate join's DAG is pure JVM with zero
+        Python workers.
+      * **distributed** (larger probes, and always for the self-join): the
+        SAT — an (n+1)^2 int64 array, ~130 KB at res_hist 7 — is broadcast
+        and the same numpy kernel runs as an Arrow-batched mapInPandas over
+        the probe DataFrame.  The probe side is NEVER collected in this
+        mode; the only driver-sized data is one 4-value stats row.
+    knn_ring sniffs at most DRIVER_PROBE_CAP+1 rows to pick; for a probe
+    that fits, the sniff IS the driver collect.
 
  2. **Candidate join** (one shuffle): each query explodes its own
     (2*rho_g+1)^2 cell offsets via F.sequence (per-row bounds — no driver
@@ -57,6 +59,15 @@ from ..config import DEFAULT_CELL_RES, GRID_BITS
 
 SQRT2_NUM = 1449  # 1449/1024 > sqrt(2): conservative integer inflation
 SQRT2_DEN = 1024
+
+# Plan thresholds, read at call time (never bound as defaults) so a test
+# can monkeypatch them.  Each only picks a physical path from an observed
+# size; every path is exact.
+DRIVER_PROBE_CAP = 100_000  # probe rows planned on the driver; above: executors
+MAX_RHO = 64  # dense-branch guarantee radius cap (res cells); above: sparse
+BROADCAST_CAP_ROWS = 4_000_000  # exploded probe rows broadcast; above: merge
+SPARSE_BROADCAST_CAP = 200_000  # sparse probes broadcast; above: repartition
+HOT_CELL_CAP = 4_096  # histogram-cell points above which the fine tier builds
 
 
 def _topk(cand: DataFrame, k: int, tie_cols: list[str]) -> DataFrame:
@@ -192,13 +203,6 @@ def plan_radii_dcap_np(sat: np.ndarray, qlat: np.ndarray, qlon: np.ndarray,
     return rho, dcap
 
 
-def plan_radii_np(sat: np.ndarray, qlat: np.ndarray, qlon: np.ndarray,
-                  res_hist: int, res: int, k: int) -> np.ndarray:
-    """Guarantee radius only (the historical kernel surface; the golden
-    scalar-loop equivalence test pins this form)."""
-    return plan_radii_dcap_np(sat, qlat, qlon, res_hist, res, k)[0]
-
-
 def plan_radii_fine_np(fine_sats: dict, qlat: np.ndarray, qlon: np.ndarray,
                        res_hist: int, k: int,
                        fine_max_rho: int) -> np.ndarray:
@@ -280,18 +284,18 @@ class KnnIndex:
     corpus analogue of pip.PolygonIndex.  Independent of k and of the
     query set.
 
-    **Density-adaptive fine tier** (hot_cell_cap): histogram cells holding
-    more than hot_cell_cap points (a whole hot spot can fall inside ONE
+    **Density-adaptive fine tier** (HOT_CELL_CAP): histogram cells holding
+    more than HOT_CELL_CAP points (a whole hot spot can fall inside ONE
     cell) additionally get a LOCAL unit-granularity SAT of their own
     s_hist x s_hist area, collected in one small aggregate (distinct
     coordinates within hot cells only).  Probes inside those cells then
     plan unit-scale guarantee radii (plan_radii_fine_np) and join against
     a margin-expanded slice of the corpus keyed by RAW coordinates —
-    turning a ~hot_cell_cap-candidate coarse probe into a ~(2*rho+1)^2
+    turning a ~HOT_CELL_CAP-candidate coarse probe into a ~(2*rho+1)^2
     unit-cell probe (measured 600k -> ~3.6k candidates on the bench's
-    hot boxes).  hot_cell_cap=None disables the tier.
+    hot boxes).
 
-    The default cap is LOW (4096 = 64^2, one point per unit coordinate
+    The cap is LOW (4096 = 64^2, one point per unit coordinate
     at res_hist 10) on purpose: a hot spot that straddles histogram-cell
     edges splits its mass UNEVENLY across up to four cells (measured r7:
     a 600k-point box quartered into three ~200k cells and one 9.6k cell
@@ -305,8 +309,7 @@ class KnnIndex:
     def __init__(self, corpus: DataFrame,
                  res: int = DEFAULT_CELL_RES,
                  tie_cols: list[str] = ["doc_id", "span_pos"],
-                 res_hist: int | None = None,
-                 hot_cell_cap: int | None = 4_096):
+                 res_hist: int | None = None):
         if res_hist is None:
             # coarse is better: rh=7 -> 16k histogram groups (cheap
             # shuffle + collect) at the price of a somewhat larger
@@ -343,115 +346,105 @@ class KnnIndex:
         self.fine_sats: dict = {}
         self.corp_fine = None
         s = 1 << sh
-        if hot_cell_cap is not None:
-            hot = hist[hist["n"].to_numpy() > hot_cell_cap]
-            if len(hot):
-                hot_cells = list(zip(hot["hy"].astype(int),
-                                     hot["hx"].astype(int)))
-                in_hot = None
-                for cy, cx in hot_cells:
-                    c = ((F.shiftright("qlat", sh) == cy)
-                         & (F.shiftright("qlon", sh) == cx))
-                    in_hot = c if in_hot is None else (in_hot | c)
-                # one aggregate over hot-cell points only: rows bounded by
-                # distinct coordinates (<= s^2 per hot cell), not points
-                fine_pd = (corpus.filter(in_hot)
-                           .groupBy("qlat", "qlon")
-                           .agg(F.count("*").alias("n")).toPandas())
-                fy = fine_pd["qlat"].to_numpy(np.int64)
-                fx = fine_pd["qlon"].to_numpy(np.int64)
-                fn = fine_pd["n"].to_numpy(np.int64)
-                for cy, cx in hot_cells:
-                    m = ((fy >> sh) == cy) & ((fx >> sh) == cx)
-                    g = np.zeros((s, s), dtype=np.int64)
-                    g[fy[m] - cy * s, fx[m] - cx * s] = fn[m]
-                    fsat = np.zeros((s + 1, s + 1), dtype=np.int64)
-                    np.cumsum(g, axis=0, out=fsat[1:, 1:])
-                    np.cumsum(fsat[1:, 1:], axis=1, out=fsat[1:, 1:])
-                    self.fine_sats[(cy, cx)] = fsat
-                # fine candidates join against the FULL corpus restricted
-                # to the hot areas + the largest possible fine radius —
-                # edge probes legitimately reach neighbors outside the
-                # hot cell, so the margin is load-bearing for exactness
-                marg = FINE_MAX_RHO + 1
-                in_marg = None
-                for cy, cx in hot_cells:
-                    c = (F.col("qlat").between(cy * s - marg,
-                                               (cy + 1) * s - 1 + marg)
-                         & F.col("qlon").between(cx * s - marg,
-                                                 (cx + 1) * s - 1 + marg))
-                    in_marg = c if in_marg is None else (in_marg | c)
-                self.corp_fine = corpus.filter(in_marg).select(
-                    *tie_cols, "qlat", "qlon",
-                    F.col("qlat").alias("fcy"), F.col("qlon").alias("fcx"))
+        hot = hist[hist["n"].to_numpy() > HOT_CELL_CAP]
+        if len(hot):
+            hot_cells = list(zip(hot["hy"].astype(int),
+                                 hot["hx"].astype(int)))
+            in_hot = None
+            for cy, cx in hot_cells:
+                c = ((F.shiftright("qlat", sh) == cy)
+                     & (F.shiftright("qlon", sh) == cx))
+                in_hot = c if in_hot is None else (in_hot | c)
+            # one aggregate over hot-cell points only: rows bounded by
+            # distinct coordinates (<= s^2 per hot cell), not points
+            fine_pd = (corpus.filter(in_hot)
+                       .groupBy("qlat", "qlon")
+                       .agg(F.count("*").alias("n")).toPandas())
+            fy = fine_pd["qlat"].to_numpy(np.int64)
+            fx = fine_pd["qlon"].to_numpy(np.int64)
+            fn = fine_pd["n"].to_numpy(np.int64)
+            for cy, cx in hot_cells:
+                m = ((fy >> sh) == cy) & ((fx >> sh) == cx)
+                g = np.zeros((s, s), dtype=np.int64)
+                g[fy[m] - cy * s, fx[m] - cx * s] = fn[m]
+                fsat = np.zeros((s + 1, s + 1), dtype=np.int64)
+                np.cumsum(g, axis=0, out=fsat[1:, 1:])
+                np.cumsum(fsat[1:, 1:], axis=1, out=fsat[1:, 1:])
+                self.fine_sats[(cy, cx)] = fsat
+            # fine candidates join against the FULL corpus restricted
+            # to the hot areas + the largest possible fine radius —
+            # edge probes legitimately reach neighbors outside the
+            # hot cell, so the margin is load-bearing for exactness
+            marg = FINE_MAX_RHO + 1
+            in_marg = None
+            for cy, cx in hot_cells:
+                c = (F.col("qlat").between(cy * s - marg,
+                                           (cy + 1) * s - 1 + marg)
+                     & F.col("qlon").between(cx * s - marg,
+                                             (cx + 1) * s - 1 + marg))
+                in_marg = c if in_marg is None else (in_marg | c)
+            self.corp_fine = corpus.filter(in_marg).select(
+                *tie_cols, "qlat", "qlon",
+                F.col("qlat").alias("fcy"), F.col("qlon").alias("fcx"))
 
 
 def knn_ring(
     queries: DataFrame, corpus: DataFrame = None, k: int = 5,
     res: int = DEFAULT_CELL_RES,
     tie_cols: list[str] = ["doc_id", "span_pos"],
-    res_hist: int | None = None,
-    max_rho: int = 64,
-    broadcast_cap_rows: int = 4_000_000,
     index: KnnIndex | None = None,
-    probe_mode: str = "auto",
-    driver_probe_cap: int = 100_000,
     exclude_self: bool = False,
-    sparse_broadcast_cap: int = 200_000,
 ) -> DataFrame:
     """Cell ring kNN.  queries(query_id, qlat, qlon); corpus(tie_cols...,
     qlat, qlon).  Returns (query_id, tie_cols..., d2, rank <= k), exact.
 
     Pass a prebuilt KnnIndex to amortize the histogram/SAT across probe
-    batches (res/res_hist/tie_cols then come from the index).
+    batches (res/tie_cols then come from the index).
+
+    The probe's size picks the radius planner: a sniff of at most
+    DRIVER_PROBE_CAP+1 rows either IS the whole probe (planned on the
+    driver, no Python worker in the join DAG) or proves it too big, and
+    then the SATs are broadcast and a vectorized mapInPandas plans it on
+    the executors — the probe side is never collected.  One extra tiny
+    action there (a 4-value stats agg over the checkpointed planned probe)
+    picks broadcast-vs-shuffle per branch and which branches exist at all.
 
     Probes split THREE ways after planning, each to the join shape that
     fits its local density (all exact):
       * fine  — inside a hot histogram cell with a unit-scale radius
         (KnnIndex fine tier): explode (2*rho_f+1)^2 UNIT offsets, join
         the margin-expanded hot slice on raw coordinates.
-      * dense — ordinary guarantee radius <= max_rho: explode res-cell
-        offsets, join the cell-keyed corpus.
-      * sparse — guarantee radius > max_rho (k-th neighbor far away):
+      * dense — ordinary guarantee radius <= MAX_RHO: explode res-cell
+        offsets, join the cell-keyed corpus; broadcast while the exploded
+        probe fits BROADCAST_CAP_ROWS, else a (salted) sort-merge join.
+      * sparse — guarantee radius > MAX_RHO (k-th neighbor far away):
         brute-force against the corpus (a handful of probes by
-        construction; cheaper than exploding a giant disk).
-
-    probe_mode:
-      * 'driver' — collect the probe set and plan radii in-process (the
-        r1-r3 path; measured fastest for interactive-sized query sets: no
-        python worker in the join DAG).
-      * 'distributed' — broadcast the SATs and plan radii in a vectorized
-        mapInPandas over the probe DataFrame: the probe side is never
-        collected, so Q is bounded by the cluster, not the driver.  One
-        extra tiny action (a 4-value stats agg over the persisted planned
-        probe) picks broadcast-vs-shuffle per branch and which branches
-        exist at all.
-      * 'auto' — sniff limit(driver_probe_cap+1): if the probe fits it IS
-        the driver collect (zero extra cost), else go distributed.
+        construction; cheaper than exploding a giant disk), broadcast
+        while at most SPARSE_BROADCAST_CAP probes take it.
 
     exclude_self: identity-exclusion for self-join probes — requires
     query_id == _self_key(tie_cols) of the probe's own corpus row (the
     escaped ':'-joined tie tuple; knn_self_join builds exactly that).
     Plans for k+1 (each query's disk count includes itself) and filters
     the identity row — NOT distance 0: co-located twins must survive —
-    before top-k.
-
-    sparse_broadcast_cap: max sparse-branch probe rows that may be
-    broadcast; a larger sparse set falls back to a non-broadcast scored
-    cross join (see the branch comment)."""
-    spark = queries.sparkSession
+    before top-k."""
     if index is None:
         if corpus is None:
             raise ValueError("knn_ring needs a corpus= or an index=")
-        index = KnnIndex(corpus, res=res, tie_cols=tie_cols,
-                         res_hist=res_hist)
+        index = KnnIndex(corpus, res=res, tie_cols=tie_cols)
     elif corpus is not None and corpus is not index.corpus:
         raise ValueError(
             "knn_ring got BOTH corpus= and index= (built from a different "
             "DataFrame): the index's snapshot would silently win — pass "
             "one or the other")
-    if probe_mode not in ("auto", "driver", "distributed"):
-        raise ValueError(f"unknown probe_mode {probe_mode!r}")
+    return _knn_planned(queries, index, k, exclude_self, may_collect=True)
+
+
+def _knn_planned(queries: DataFrame, index: KnnIndex, k: int,
+                 exclude_self: bool, may_collect: bool) -> DataFrame:
+    """knn_ring's plan.  may_collect=False skips the size sniff and plans
+    on the executors (the self-join, whose probe side is the corpus)."""
+    spark = queries.sparkSession
     res, res_hist, tie_cols = index.res, index.res_hist, index.tie_cols
     corp, sat = index.corp, index.sat
     corp_fine = index.corp_fine
@@ -490,14 +483,12 @@ def knn_ring(
         return rho, dcap, rho_f
 
     q_pd = None
-    if probe_mode == "driver":
-        q_pd = qsel.toPandas()
-    elif probe_mode == "auto":
+    if may_collect:
         # sniff: for a small probe set this IS the driver collect (no
         # wasted work); for a large one it is bounded at cap+1 rows
-        q_pd = qsel.limit(driver_probe_cap + 1).toPandas()
-        if len(q_pd) > driver_probe_cap:
-            q_pd = None  # too big for the driver: fall through
+        q_pd = qsel.limit(DRIVER_PROBE_CAP + 1).toPandas()
+        if len(q_pd) > DRIVER_PROBE_CAP:
+            q_pd = None  # too big for the driver: plan on the executors
 
     if q_pd is not None:
         # --- driver planning: literal probe DataFrame, pure-JVM join DAG ---
@@ -507,9 +498,9 @@ def knn_ring(
         q_all = spark.createDataFrame(q_pd, plan_schema)
         rho_col = q_pd["rho"].to_numpy()
         fine_col = q_pd["rho_fine"].to_numpy()
-        coarse_m = (rho_col <= max_rho) & (fine_col < 0)
+        coarse_m = (rho_col <= MAX_RHO) & (fine_col < 0)
         est_exploded = int(((2 * rho_col[coarse_m] + 1) ** 2).sum())
-        n_sparse = int(((rho_col > max_rho) & (fine_col < 0)).sum())
+        n_sparse = int(((rho_col > MAX_RHO) & (fine_col < 0)).sum())
         has_sparse = n_sparse > 0
         est_fine = int(((2 * fine_col[fine_col >= 0] + 1) ** 2).sum())
         has_fine = bool((fine_col >= 0).any())
@@ -559,10 +550,10 @@ def knn_ring(
         not_fine = F.col("rho_fine") < 0
         stats = q_all.agg(
             F.sum(F.when(
-                (F.col("rho") <= max_rho) & not_fine,
+                (F.col("rho") <= MAX_RHO) & not_fine,
                 (2 * F.col("rho") + 1) * (2 * F.col("rho") + 1),
             ).otherwise(F.lit(0))).alias("est"),
-            F.count(F.when((F.col("rho") > max_rho) & not_fine, 1))
+            F.count(F.when((F.col("rho") > MAX_RHO) & not_fine, 1))
             .alias("n_sparse"),
             F.sum(F.when(
                 ~not_fine,
@@ -577,8 +568,8 @@ def knn_ring(
         has_fine = int(stats["n_fine"]) > 0
 
     not_fine = F.col("rho_fine") < 0
-    q = q_all.filter((F.col("rho") <= max_rho) & not_fine)
-    q_sparse = q_all.filter((F.col("rho") > max_rho) & not_fine)
+    q = q_all.filter((F.col("rho") <= MAX_RHO) & not_fine)
+    q_sparse = q_all.filter((F.col("rho") > MAX_RHO) & not_fine)
     q_fine = q_all.filter(~not_fine)
 
     _nparts_cache: list[int] = []
@@ -612,7 +603,7 @@ def knn_ring(
         # invisible to input-size-based coalescing, so the explicit
         # numPartitions repartition (which AQE must respect) keeps the
         # output spread across the cluster.
-        if est <= broadcast_cap_rows:
+        if est <= BROADCAST_CAP_ROWS:
             return F.broadcast(probe_df).join(build, keys, "inner")
         np_ = nparts_lazy()
         return (probe_df.repartition(np_, *keys).hint("merge")
@@ -660,7 +651,7 @@ def knn_ring(
     # SQUARE around a DISK of radius dcap, and dropping the corners
     # before the top-k window cuts its sorted input ~5x (r7 measured)
     dcap_pred = F.col("d2") <= F.col("dcap") * F.col("dcap")
-    if est_exploded <= broadcast_cap_rows or not fine_sats:
+    if est_exploded <= BROADCAST_CAP_ROWS or not fine_sats:
         cand = joined(probe, est_exploded, corp, ["ccy", "ccx"]) \
             .withColumn("d2", d2_expr).filter(dcap_pred)
     else:
@@ -733,13 +724,13 @@ def knn_ring(
     if has_sparse:
         # broadcast only while the sparse probe count is bounded: in
         # distributed mode the probe side is unbounded by design, and a
-        # workload where MANY probes plan rho > max_rho (large k on a
+        # workload where MANY probes plan rho > MAX_RHO (large k on a
         # thin/clustered corpus) would otherwise broadcast an unbounded
         # probe subset.  Past the cap, run the same scored cross join
         # non-broadcast over a repartitioned probe side — still brute
         # force (that is the branch's contract) but spill-safe.
         q_sp = q_sparse.drop("rho", "dcap", "rho_fine")
-        if n_sparse <= sparse_broadcast_cap:
+        if n_sparse <= SPARSE_BROADCAST_CAP:
             q_sp = F.broadcast(q_sp)
         else:
             q_sp = q_sp.repartition(nparts_lazy())
@@ -757,9 +748,6 @@ def knn_self_join(
     corpus: DataFrame, k: int = 5,
     res: int = DEFAULT_CELL_RES,
     tie_cols: list[str] = ["doc_id", "span_pos"],
-    res_hist: int | None = None,
-    max_rho: int = 64,
-    broadcast_cap_rows: int = 4_000_000,
     index: KnnIndex | None = None,
 ) -> DataFrame:
     """Corpus-vs-corpus kNN: every corpus point probes for its k nearest
@@ -777,7 +765,7 @@ def knn_self_join(
     twins (d2=0) of the probe row are real neighbors and kept — only the
     row's own identity is excluded.
 
-    res_hist defaults FINER here than in interactive knn_ring
+    The index's res_hist is FINER here than in interactive knn_ring
     (min(res, 10) instead of min(res, 7)): the guarantee-radius
     overshoot of a coarse histogram is multiplied by EVERY corpus row
     when the probe side is the corpus — measured 625 candidate cells per
@@ -785,16 +773,12 @@ def knn_self_join(
     candidate-volume swing for a one-off 3s histogram (SAT at rh10 is
     8 MB, still a trivial broadcast)."""
     if index is None:
-        if res_hist is None:
-            res_hist = min(res, 10)
         index = KnnIndex(corpus, res=res, tie_cols=tie_cols,
-                         res_hist=res_hist)
+                         res_hist=min(res, 10))
     probes = index.corpus.select(
         _self_key(index.tie_cols).alias("query_id"), "qlat", "qlon")
-    return knn_ring(
-        probes, k=k, max_rho=max_rho,
-        broadcast_cap_rows=broadcast_cap_rows, index=index,
-        probe_mode="distributed", exclude_self=True)
+    return _knn_planned(probes, index, k, exclude_self=True,
+                        may_collect=False)
 
 
 def knn_within(

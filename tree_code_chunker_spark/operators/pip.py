@@ -10,9 +10,11 @@ Physical plan, designed for 10^12 points x 10^3..10^5 polygons:
  2. **Prune**: candidates = points ⋈ cover on the res-r cell key.  The cover
     side is small (polygons x covering cells) => `F.broadcast` — no shuffle
     of the 10^12-row point side at all.
- 3. **Exact**: integer ray-cast (even-odd rule, half-open edges) as a JVM
-    higher-order expression over an edge array carried on the broadcast
-    cover rows — no Python, no Arrow transfer, no extra shuffle.
+ 3. **Exact**: the cover is classified per cell.  Points in a FULL cell
+    (all corners inside, no edge crossing it) are accepted outright;
+    candidates in a BOUNDARY cell go through an integer ray-cast (even-odd
+    rule, half-open edges) in a numpy pandas UDF over padded edge tensors
+    broadcast once per PolygonIndex — no extra shuffle.
 
 Determinism: polygons and points live on the integer grid (config.GRID_BITS);
 the crossing test is integer cross-multiplication — no float division, so
@@ -32,7 +34,6 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BooleanType
 
 from ..config import GRID_BITS
-from .geo import cell_at_res_col
 
 DEFAULT_COVER_RES = 7
 
@@ -159,71 +160,14 @@ def ray_cast_rings_np(rings: list, py: np.ndarray, px: np.ndarray) -> np.ndarray
 
 def _closed_ring_col(ring):
     """Normalize ring closure (append first vertex when the ring is open) so
-    the JVM exact path never silently drops the closing edge — keeps it
-    consistent with the numpy path, which closes defensively."""
+    a SQL-side edge walk never silently drops the closing edge — keeps it
+    consistent with the numpy pack, which closes defensively."""
     first = F.element_at(ring, 1)
     last = F.element_at(ring, -1)
     return F.when(
         (first["qlat"] == last["qlat"]) & (first["qlon"] == last["qlon"]),
         ring,
     ).otherwise(F.concat(ring, F.array(first)))
-
-
-def _edges_col(ring):
-    """ring array<struct<qlat,qlon>> -> array<struct<y1,x1,y2,x2>> (closure
-    normalized first)."""
-    ring = _closed_ring_col(ring)
-    return F.transform(
-        F.sequence(F.lit(0), F.size(ring) - 2),
-        lambda i: F.struct(
-            F.element_at(ring, i + 1)["qlat"].alias("y1"),
-            F.element_at(ring, i + 1)["qlon"].alias("x1"),
-            F.element_at(ring, i + 2)["qlat"].alias("y2"),
-            F.element_at(ring, i + 2)["qlon"].alias("x2"),
-        ),
-    )
-
-
-def _crossing_pred(y1, x1, y2, x2, py, px):
-    straddles = (y1 > py) != (y2 > py)
-    dy = y2 - y1
-    lhs = (px - x1) * dy
-    rhs = (py - y1) * (x2 - x1)
-    return straddles & (F.when(dy > 0, lhs < rhs).otherwise(lhs > rhs))
-
-
-def _inside_col(edges, py, px):
-    """Even-odd ray cast as a JVM higher-order expression — integer cross-
-    multiplication, bit-identical to ray_cast_np, zero Python in the plan.
-
-    NOTE: interpreted lambda evaluation (NamedLambdaVariable) contends
-    across threads in one JVM — measured 3x SLOWER at local[32] than
-    local[8].  Used only as the fallback for polygons with more edges than
-    the unrolled fast path covers."""
-
-    def crossing(e):
-        return _crossing_pred(e["y1"], e["x1"], e["y2"], e["x2"], py, px)
-
-    return F.size(F.filter(edges, crossing)) % 2 == 1
-
-
-MAX_UNROLLED_EDGES = 32
-
-
-def _inside_col_unrolled(edges, py, px, max_edges: int = MAX_UNROLLED_EDGES):
-    """Ray cast as a FLAT codegen-friendly expression: the crossing test is
-    unrolled over element_at(i) terms (no lambda variables, so whole-stage
-    codegen applies and threads share nothing).  Exact for polygons with at
-    most max_edges edges; pip_join routes bigger rings to the HOF fallback.
-    """
-    total = F.lit(0)
-    for i in range(max_edges):
-        # F.get is null-safe out-of-bounds (element_at THROWS in ANSI mode
-        # even under a when() guard — evaluation is not short-circuited)
-        e = F.get(edges, i)
-        c = _crossing_pred(e["y1"], e["x1"], e["y2"], e["x2"], py, px)
-        total = total + F.when(c, 1).otherwise(0)  # null crossing -> 0
-    return total % 2 == 1
 
 
 def _classify_cells_np(ys: np.ndarray, xs: np.ndarray, res: int):
@@ -263,51 +207,6 @@ def _classify_cells_rings_np(rings: list, res: int):
     full = corners_in & ~overlap
     keep = full | overlap  # corners-out + no-overlap == fully outside
     return gy[keep], gx[keep], full[keep]
-
-
-def polygon_cover_classified(polygons: DataFrame, res: int = DEFAULT_COVER_RES) -> DataFrame:
-    """(polygon_id, ring) -> (polygon_id, cov_cy, cov_cx, is_full) cover rows,
-    THREE-way classified per cell (distributed, vectorized per polygon):
-
-      * full    — all 4 cell corners inside AND no edge bbox overlaps the
-                  cell: every point in the cell is inside => downstream can
-                  accept its points WITHOUT the exact test,
-      * boundary— some edge bbox overlaps the cell: exact test required,
-      * outside — corners outside, no edge overlap: DROPPED (bbox cover of
-                  concave/star shapes is full of these).
-
-    Conservative by construction (edge-bbox overlap over-approximates edge
-    crossing), so correctness never depends on the classification — only
-    candidate volume does.  This is the standard interior/boundary cover
-    split of spatial indexes (e.g. S2 region coverers).
-    """
-    from typing import Iterator
-
-    def classify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_pid, out_cy, out_cx, out_full = [], [], [], []
-            for pid, rings in zip(pdf["polygon_id"], pdf["rings"]):
-                rr = [
-                    _close_np(
-                        np.array([v["qlat"] for v in ring], dtype=np.int64),
-                        np.array([v["qlon"] for v in ring], dtype=np.int64))
-                    for ring in rings
-                ]
-                cy, cx, full = _classify_cells_rings_np(rr, res)
-                out_pid.extend([pid] * len(cy))
-                out_cy.extend(cy.tolist())
-                out_cx.extend(cx.tolist())
-                out_full.extend(full.tolist())
-            yield pd.DataFrame({
-                "polygon_id": out_pid, "cov_cy": out_cy,
-                "cov_cx": out_cx, "is_full": out_full,
-            })
-
-    return polygons.select(
-        "polygon_id", _rings_norm_col(polygons).alias("rings")
-    ).mapInPandas(
-        classify, "polygon_id string, cov_cy bigint, cov_cx bigint, is_full boolean"
-    )
 
 
 def _classify_cells_all_np(pack: dict, ids: list, Y1, X1, Y2, X2, res: int):
@@ -451,7 +350,6 @@ def pip_join(
     polygons: DataFrame = None,
     res: int = DEFAULT_COVER_RES,
     keep_cols: tuple[str, ...] = ("doc_id", "span_pos"),
-    exact: str = "numpy",
     index: PolygonIndex | None = None,
 ) -> DataFrame:
     """points(qlat, qlon, ...) x polygons(polygon_id, ring) -> matches.
@@ -459,129 +357,76 @@ def pip_join(
     Returns one row per (point, containing polygon) with `keep_cols` +
     polygon_id + qlat/qlon.
 
-    Physical plan: the broadcast cover rows CARRY the polygon's packed edge
-    array, and the exact even-odd test runs as a JVM higher-order expression
-    on the joined rows — the probe (point) side is never shuffled and never
-    crosses into Python, so throughput scales linearly with cores.  (An
-    earlier pandas-UDF ray-cast was Arrow-transfer-bound and did not scale;
-    ray_cast_np remains as the numpy oracle used by tests.)
+    Physical plan: the points join the broadcast classified cover on the
+    res-cell key, so the probe (point) side is never shuffled.  Points in a
+    FULL cell are accepted outright; only BOUNDARY-cell candidates need the
+    exact even-odd test, a vectorized numpy pandas UDF over the index's
+    broadcast padded edge tensors (one gather + one crossing evaluation per
+    Arrow batch — no per-polygon grouping).  The build side lives in
+    PolygonIndex — pass one in to amortize the collect/classify/broadcast
+    across probe batches (it is polygon-only, independent of the points).
     """
     if polygons is None and index is None:
         raise ValueError("pip_join needs a build side: pass polygons= "
                          "and/or index=")
-    if exact != "numpy" and index is not None:
-        raise ValueError(
-            f"exact={exact!r} builds its cover from the polygons DataFrame "
-            "and cannot use a PolygonIndex — pass polygons= with the JVM "
-            "paths, or use exact='numpy' to probe the index")
-    if exact == "numpy":
-        # classified cover: FULL cells accept their points with no exact
-        # test; only BOUNDARY-cell candidates cross into the vectorized
-        # numpy exact test (one gather into broadcast padded edge tensors +
-        # one crossing evaluation per Arrow batch — no per-polygon grouping,
-        # no giant codegen expression: a 32-term unrolled JVM expression
-        # exceeded HotSpot's JIT method limit and ran interpreted, ~8x
-        # slower than this path).  The build side lives in PolygonIndex —
-        # pass one in to amortize the collect/classify/broadcast across
-        # probe batches (it is polygon-only, independent of the points).
-        spark = points.sparkSession
-        idx = index if index is not None else PolygonIndex(spark, polygons, res)
-        res = idx.res
-        shift = GRID_BITS - res
-        b = idx.edges_bc
-        cover_ix = idx.cover_ix
+    spark = points.sparkSession
+    idx = index if index is not None else PolygonIndex(spark, polygons, res)
+    shift = GRID_BITS - idx.res
+    b = idx.edges_bc
+    cover_ix = idx.cover_ix
 
-        CHUNK = 1 << 16  # rows per cache tile
+    CHUNK = 1 << 16  # rows per cache tile
 
-        @F.pandas_udf(BooleanType())
-        def inside(poly_ix: pd.Series, qlat: pd.Series, qlon: pd.Series) -> pd.Series:
-            # cache-tiled kernel: the exact test is DRAM-bandwidth-bound at
-            # full batch width (measured: per-core throughput drops ~35%
-            # from 4 to 16 concurrent workers), so work in 64k-row tiles
-            # with int32 intermediates — every temporary stays cache-
-            # resident; only the two cross-products need int64.
-            y1, x1, y2, x2 = b.value  # int32 [P, E] edge tables
-            ix_all = poly_ix.to_numpy()
-            py_all = qlat.to_numpy(dtype=np.int32)
-            px_all = qlon.to_numpy(dtype=np.int32)
-            out = np.zeros(len(ix_all), dtype=bool)
-            for s in range(0, len(ix_all), CHUNK):
-                ix = ix_all[s:s + CHUNK]
-                py = py_all[s:s + CHUNK]
-                px = px_all[s:s + CHUNK]
-                crossings = np.zeros(len(ix), dtype=np.int32)
-                for e in range(y1.shape[1]):
-                    ey1 = y1[ix, e]
-                    ey2 = y2[ix, e]
-                    straddle = (ey1 > py) != (ey2 > py)
-                    if not straddle.any():
-                        continue
-                    ex1 = x1[ix, e]
-                    ex2 = x2[ix, e]
-                    dy = (ey2 - ey1).astype(np.int64)
-                    lhs = (px - ex1) * dy
-                    rhs = (py - ey1).astype(np.int64) * (ex2 - ex1)
-                    crossings += straddle & np.where(dy > 0, lhs < rhs, lhs > rhs)
-                out[s:s + CHUNK] = (crossings & 1).astype(bool)
-            return pd.Series(out)
+    @F.pandas_udf(BooleanType())
+    def inside(poly_ix: pd.Series, qlat: pd.Series, qlon: pd.Series) -> pd.Series:
+        # cache-tiled kernel: the exact test is DRAM-bandwidth-bound at
+        # full batch width (measured: per-core throughput drops ~35%
+        # from 4 to 16 concurrent workers), so work in 64k-row tiles
+        # with int32 intermediates — every temporary stays cache-
+        # resident; only the two cross-products need int64.
+        y1, x1, y2, x2 = b.value  # int32 [P, E] edge tables
+        ix_all = poly_ix.to_numpy()
+        py_all = qlat.to_numpy(dtype=np.int32)
+        px_all = qlon.to_numpy(dtype=np.int32)
+        out = np.zeros(len(ix_all), dtype=bool)
+        for s in range(0, len(ix_all), CHUNK):
+            ix = ix_all[s:s + CHUNK]
+            py = py_all[s:s + CHUNK]
+            px = px_all[s:s + CHUNK]
+            crossings = np.zeros(len(ix), dtype=np.int32)
+            for e in range(y1.shape[1]):
+                ey1 = y1[ix, e]
+                ey2 = y2[ix, e]
+                straddle = (ey1 > py) != (ey2 > py)
+                if not straddle.any():
+                    continue
+                ex1 = x1[ix, e]
+                ex2 = x2[ix, e]
+                dy = (ey2 - ey1).astype(np.int64)
+                lhs = (px - ex1) * dy
+                rhs = (py - ey1).astype(np.int64) * (ex2 - ex1)
+                crossings += straddle & np.where(dy > 0, lhs < rhs, lhs > rhs)
+            out[s:s + CHUNK] = (crossings & 1).astype(bool)
+        return pd.Series(out)
 
-        cand = points.join(
-            F.broadcast(cover_ix),
-            (F.shiftright(points["qlat"], shift) == cover_ix["cov_cy"])
-            & (F.shiftright(points["qlon"], shift) == cover_ix["cov_cx"]),
-            "inner",
-        )
-        # single pass: full cells accept unconditionally; boundary cells by
-        # the exact test.  (The UDF is still evaluated on full-cell rows —
-        # Spark pulls Python UDFs out of when/or — but that is ~4% extra
-        # kernel work vs a SECOND broadcast-join pass for a separate
-        # accepted branch, which measured strictly worse.)
-        # grid coords are < 2^16, so the UDF inputs are cast int32 — halves
-        # the Arrow transfer of the candidate stream, which is DRAM-bound
-        return cand.filter(
-            F.col("is_full")
-            | inside("poly_ix", F.col("qlat").cast("int"),
-                     F.col("qlon").cast("int"))
-        ).select(*keep_cols, "polygon_id", "qlat", "qlon")
-
-    # JVM variants (kept for environments without Python workers): unrolled
-    # codegen expression for small rings, interpreted HOF for big ones.
-    # Multi-ring geometries flatten to one edge array per polygon (each
-    # ring closed separately), so the even-odd crossing count handles
-    # holes/multipolygons here too.
-    shift = GRID_BITS - res
-    cover = polygon_cover(polygons, res)
-    edges = polygons.select(
-        "polygon_id",
-        F.flatten(F.transform(_rings_norm_col(polygons),
-                              lambda r: _edges_col(r))).alias("edges"),
+    cand = points.join(
+        F.broadcast(cover_ix),
+        (F.shiftright(points["qlat"], shift) == cover_ix["cov_cy"])
+        & (F.shiftright(points["qlon"], shift) == cover_ix["cov_cx"]),
+        "inner",
     )
-    cover_e = cover.join(edges, "polygon_id")
-
-    def cand_for(cov):
-        return points.join(
-            F.broadcast(cov),
-            (F.shiftright(points["qlat"], shift) == cov["cov_cy"])
-            & (F.shiftright(points["qlon"], shift) == cov["cov_cx"]),
-            "inner",
-        )
-
-    small = cover_e.filter(F.size("edges") <= MAX_UNROLLED_EDGES)
-    out = cand_for(small).filter(
-        _inside_col_unrolled(F.col("edges"), F.col("qlat"), F.col("qlon"))
+    # single pass: full cells accept unconditionally; boundary cells by
+    # the exact test.  (The UDF is still evaluated on full-cell rows —
+    # Spark pulls Python UDFs out of when/or — but that is ~4% extra
+    # kernel work vs a SECOND broadcast-join pass for a separate
+    # accepted branch, which measured strictly worse.)
+    # grid coords are < 2^16, so the UDF inputs are cast int32 — halves
+    # the Arrow transfer of the candidate stream, which is DRAM-bound
+    return cand.filter(
+        F.col("is_full")
+        | inside("poly_ix", F.col("qlat").cast("int"),
+                 F.col("qlon").cast("int"))
     ).select(*keep_cols, "polygon_id", "qlat", "qlon")
-
-    max_edges = polygons.select(
-        F.max(F.size(F.flatten(_rings_norm_col(polygons))))
-        .alias("m")).first()["m"] or 0
-    if max_edges - 1 > MAX_UNROLLED_EDGES:
-        big = cover_e.filter(F.size("edges") > MAX_UNROLLED_EDGES)
-        out = out.unionByName(
-            cand_for(big).filter(
-                _inside_col(F.col("edges"), F.col("qlat"), F.col("qlon"))
-            ).select(*keep_cols, "polygon_id", "qlat", "qlon")
-        )
-    return out
 
 
 def pip_anti_join(

@@ -24,7 +24,9 @@ def get_spark(
     extra_confs: dict | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        # the CPUs this process may run on, unless SPARK_GRAFT_CPUS says
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS")
+                    or len(os.sched_getaffinity(0)))
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     b = (
