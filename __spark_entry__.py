@@ -1136,7 +1136,7 @@ def q_raster_pixels(spark, sf_dir):
     )
 
     pts = _points(spark, sf_dir)
-    r = raster_to_vector(raster_tiles(pts, zooms=(8,), sub_bits=8))
+    r = raster_to_vector(raster_tiles(pts, zooms=(8,)))
     return r.select(
         F.col("z").cast("long").alias("z"),
         F.col("x").cast("long").alias("x"),

@@ -4,7 +4,7 @@ spark-submit job (north_rule: ships as `spark-submit --py-files`).
 Usage (cluster):
     python tools/make_pyfiles.py           # -> dist/tree_code_chunker_spark.zip
     spark-submit --py-files dist/tree_code_chunker_spark.zip \
-        jobs/pip_tile_job.py --input <docs_parquet_or_iceberg> \
+        jobs/pip_tile_job.py --input <docs_parquet> \
         --polygons <polygons_parquet> --output <out_root> [--resume]
 
 Local smoke:
@@ -13,8 +13,8 @@ Local smoke:
 
 Every stage commits a snapshot with per-partition lineage metrics
 (operators/checkpoint.py); --resume skips committed stages, satisfying the
-north_rule resumability requirement.  On clusters with Iceberg jars the
-checkpoint writer swaps to `writeTo(...).append()` (see checkpoint.py).
+north_rule resumability requirement.  Stages commit as parquet plus a JSON
+manifest, and nothing else (see operators/checkpoint.py).
 """
 
 from __future__ import annotations

@@ -1,9 +1,13 @@
 """Tile materialization: assignment determinism, vector cap accounting,
-raster pixel-count conservation."""
+raster pixel-count conservation, plan shape."""
+
+import re
+from collections import defaultdict
 
 import numpy as np
 from pyspark.sql import functions as F
 
+from tree_code_chunker_spark.operators import tiles
 from tree_code_chunker_spark.operators.geo import tile_np
 from tree_code_chunker_spark.operators.tiles import (
     assign_tiles,
@@ -30,12 +34,13 @@ def test_assignment_matches_numpy(spark):
         assert 0 <= r["in_y"] < (1 << (16 - r["z"]))
 
 
-def test_vector_tiles_cap_and_accounting(spark):
+def test_vector_tiles_cap_and_accounting(spark, monkeypatch):
     # all points in ONE tile at z=4 -> cap must kick in with exact accounting
+    monkeypatch.setattr(tiles, "MAX_FEATURES_PER_TILE", 100)
     rows = [(f"d{i:04d}", 0, 100 + i % 50, 200 + i % 50) for i in range(300)]
     pts = spark.createDataFrame(
         rows, "doc_id string, span_pos int, qlat bigint, qlon bigint")
-    out = vector_tiles(pts, zooms=(4,), max_features_per_tile=100).collect()
+    out = vector_tiles(pts, zooms=(4,)).collect()
     assert len(out) == 1
     r = out[0]
     assert r["n_features"] == 100 and r["n_dropped"] == 200
@@ -66,30 +71,58 @@ def test_tiles_deterministic_across_parallelism(spark):
     assert norm(a) == norm(b)
 
 
-def test_vector_tiles_salted_cap_matches_unsalted(spark):
-    """The two-phase hot-tile cap must be output-identical to the plain
-    single-window cap (the global deterministic top-N is a subset of the
-    union of per-salt top-Ns)."""
-    from pyspark.sql import functions as F
-
-    from tree_code_chunker_spark.operators.tiles import vector_tiles
-
-    # one hot tile (all rows in tile 0/0 at z=4) + scattered cold rows
+def test_vector_tiles_cap_matches_oracle(spark, monkeypatch):
+    """Every tile's features, n_features and n_dropped equal a plain-Python
+    oracle: group by tile, sort by (doc_id, span_pos), keep the first
+    MAX_FEATURES_PER_TILE, count the rest as dropped."""
+    cap = 50
+    monkeypatch.setattr(tiles, "MAX_FEATURES_PER_TILE", cap)
+    # one hot tile (all rows in tile x=0, y=15 at z=4) + scattered cold rows
     rows = [(f"d{i:05d}", i, i % 97, i % 89) for i in range(3000)]
     rows += [(f"s{i:05d}", i, (i * 733) % 65536, (i * 577) % 65536)
              for i in range(500)]
     pts = spark.createDataFrame(
         rows, "doc_id string, span_pos long, qlat long, qlon long")
-    plain = vector_tiles(pts, zooms=(4,), max_features_per_tile=50,
-                         salt_threshold_rows=None)
-    salted = vector_tiles(pts, zooms=(4,), max_features_per_tile=50,
-                          salt_threshold_rows=1000, n_salts=8)
-    cols = ["z", "x", "y", "features", "n_features", "n_dropped"]
-    a = sorted(tuple(r[c] for c in cols) for r in plain.collect())
-    b = sorted(tuple(r[c] for c in cols) for r in salted.collect())
-    assert a == b
-    hot = [r for r in salted.collect() if r["n_dropped"] > 0]
-    assert hot  # the hot tile actually overflowed the cap
+    got = {
+        (r["z"], r["x"], r["y"]):
+            ([tuple(f) for f in r["features"]], r["n_features"], r["n_dropped"])
+        for r in vector_tiles(pts, zooms=(4,)).collect()
+    }
+
+    shift = 16 - 4
+    by_tile = defaultdict(list)
+    for doc_id, span_pos, qlat, qlon in rows:
+        flat = 65535 - qlat
+        by_tile[(4, qlon >> shift, flat >> shift)].append(
+            (doc_id, span_pos, qlon & ((1 << shift) - 1),
+             flat & ((1 << shift) - 1)))
+    want = {}
+    for key, feats in by_tile.items():
+        feats.sort(key=lambda f: (f[0], f[1]))
+        kept = sorted(feats[:cap])
+        want[key] = (kept, len(kept), len(feats) - len(kept))
+    assert got == want
+    assert want[(4, 0, 15)][2] > 0  # the hot tile really overflows the cap
+
+
+def _plan_nodes(df):
+    """Operator names of df's executed physical plan, one per plan line."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [re.sub(r"^[\s:+\-]*(\*\(\d+\)\s*)?", "", line).split(" ", 1)[0]
+            for line in plan.splitlines() if line.strip()]
+
+
+def test_vector_tiles_plan_is_one_shuffle_one_window(spark):
+    key = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        nodes = _plan_nodes(vector_tiles(_pts(spark), zooms=(4, 8, 12)))
+    finally:
+        spark.conf.set(key, old)
+    assert nodes.count("Exchange") == 1, nodes
+    assert "BroadcastExchange" not in nodes, nodes
+    assert nodes.count("Window") == 1, nodes
 
 
 def test_raster_to_vector_roundtrip_conserves_counts(spark):
@@ -104,7 +137,7 @@ def test_raster_to_vector_roundtrip_conserves_counts(spark):
             for i in range(2000)]
     pts = spark.createDataFrame(
         rows, "doc_id string, span_pos long, qlat long, qlon long")
-    r = raster_tiles(pts, zooms=(4, 8), sub_bits=8)
+    r = raster_tiles(pts, zooms=(4, 8))
     v = raster_to_vector(r)
     per_zoom = {row["z"]: row["s"] for row in
                 v.groupBy("z").agg(F.sum("n").alias("s")).collect()}

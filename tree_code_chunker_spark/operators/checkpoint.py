@@ -2,11 +2,9 @@
 
 north_rule: "all stages checkpoint to Iceberg with per-partition lineage +
 row-count/byte metrics so any failed run resumes from the last committed
-snapshot."  Iceberg jars are not available in this sandbox, so the same
-contract is implemented over parquet + a JSON manifest (the write protocol —
-write-to-temp, fsync manifest, atomic rename — is the snapshot-commit
-pattern; swapping the writer for `df.writeTo(tbl).append()` on a real
-cluster is a one-line change, gated below).
+snapshot."  Stages commit as parquet plus a JSON manifest, and nothing else
+(the write protocol — write-to-temp, fsync manifest, atomic rename — is the
+snapshot-commit pattern).
 
 Manifest per stage: {stage, snapshot_id, committed, n_rows, n_bytes,
 partitions: [{partition_id, n_rows}], wall_sec}.  `run_stage` skips stages

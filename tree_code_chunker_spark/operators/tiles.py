@@ -2,152 +2,106 @@
 
 north_star: "raster<->vector tile materialization at fixed zoom levels with
 deterministic tile assignment".  Assignment is pure integer column math
-(geo.tile_cols — whole-stage codegen, bit-exact); materialization is one
-groupBy per zoom:
+(geo.tile_cols — whole-stage codegen, bit-exact).  Every zoom is a
+projection of the same point scan; the zooms are unioned and materialized
+together on the (z, x, y) key:
 
  * **vector tiles**: per (z,x,y), the list of features (doc_id, span_pos,
-   in-tile quantized coords), capped at max_features_per_tile by a
-   deterministic total order (row_number over (d2-free) key sort) — the cap
-   bounds tile payload size so a hot tile cannot OOM a task; dropped counts
-   are reported, never silent.
- * **raster tiles**: per (z,x,y), a sub_bits x sub_bits count grid (the
-   rasterization), stored sparse as (pixel_index, count) pairs — dense
-   256x256 arrays would be mostly zeros at high zooms.
+   in-tile quantized coords), capped at MAX_FEATURES_PER_TILE by the
+   deterministic order (doc_id, span_pos) — the cap bounds tile payload
+   size; dropped counts are reported, never silent.  One row_number window
+   and one aggregate: a single shuffle for all zooms.
+ * **raster tiles**: per (z,x,y), a count grid of 2^min(RASTER_SUB_BITS,
+   GRID_BITS - z) pixels per side (the rasterization), stored sparse as
+   (px, py, count) triples — dense arrays would be mostly zeros at high
+   zooms.  Two aggregates: per pixel, then per tile.
 
-Scale: one shuffle per zoom on the (z,x,y) key; hot tiles are exactly hot
-cells, so `salted_repartition` (operators/skew.py) applies when a census
-flags them; AQE handles moderate skew.
+Scale: a tile is ranked by the one task that owns its window partition, so
+a tile's row count bounds that task; AQE handles moderate skew across tiles.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..config import GRID_BITS, TILE_ZOOMS
 from .geo import tile_cols
 
+MAX_FEATURES_PER_TILE = 10_000  # features kept per vector tile; rest counted
+RASTER_SUB_BITS = 8  # raster side cap: 2^RASTER_SUB_BITS pixels per tile
 
-def assign_tiles(points: DataFrame, zooms: tuple[int, ...] = TILE_ZOOMS) -> DataFrame:
-    """points(qlat, qlon, ...) -> one row per (point, zoom) with z/x/y and
-    in-tile pixel offsets."""
-    parts = []
-    for z in zooms:
-        tx, ty = tile_cols(F.col("qlat"), F.col("qlon"), z)
-        shift = GRID_BITS - z
-        parts.append(
-            points.withColumns({
-                "z": F.lit(z),
-                "x": tx,
-                "y": ty,
-                # offset of the point inside its tile, north-up pixel space
-                "in_x": F.col("qlon").bitwiseAND(F.lit((1 << shift) - 1)),
-                "in_y": (F.lit((1 << GRID_BITS) - 1) - F.col("qlat"))
-                .bitwiseAND(F.lit((1 << shift) - 1)),
-            })
-        )
+
+def _tile_exprs(z: int) -> dict[str, Column]:
+    """z/x/y and the point's in-tile offsets (north-up pixel space) at z."""
+    tx, ty = tile_cols(F.col("qlat"), F.col("qlon"), z)
+    mask = F.lit((1 << (GRID_BITS - z)) - 1)
+    return {
+        "z": F.lit(z),
+        "x": tx,
+        "y": ty,
+        "in_x": F.col("qlon").bitwiseAND(mask),
+        "in_y": (F.lit((1 << GRID_BITS) - 1) - F.col("qlat")).bitwiseAND(mask),
+    }
+
+
+def _union(parts: list[DataFrame]) -> DataFrame:
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
 
 
-def vector_tiles(
-    points: DataFrame,
-    zooms: tuple[int, ...] = TILE_ZOOMS,
-    max_features_per_tile: int = 10_000,
-    feature_cols: tuple[str, ...] = ("doc_id", "span_pos"),
-    salt_threshold_rows: int | None = 200_000,
-    n_salts: int = 16,
-) -> DataFrame:
+def assign_tiles(points: DataFrame, zooms: tuple[int, ...] = TILE_ZOOMS) -> DataFrame:
+    """points(qlat, qlon, ...) -> one row per (point, zoom) with z/x/y and
+    in-tile pixel offsets."""
+    return _union([points.withColumns(_tile_exprs(z)) for z in zooms])
+
+
+def vector_tiles(points: DataFrame, zooms: tuple[int, ...] = TILE_ZOOMS) -> DataFrame:
     """(z, x, y, features array<struct>, n_features, n_dropped).
 
-    Skew handling (north_rule "hot cells handled explicitly"): the per-tile
-    cap is a row_number window — on a hot tile that is ONE task scanning
-    every row.  When a census (skew.hot_keys over the tile key) flags tiles
-    above salt_threshold_rows, hot tiles take a TWO-PHASE cap: rank within
-    (tile, salt) and keep max_features per salt — the global deterministic
-    top-N is a subset of the union of per-salt top-Ns, so phase 2's final
-    rank over <= n_salts * max_features survivors is exact and small.  Cold
-    tiles keep the single-pass rank.  Output is identical with or without
-    salting (tests pin this); salt_threshold_rows=None disables the census.
+    features holds a tile's first MAX_FEATURES_PER_TILE points by
+    (doc_id, span_pos), sorted; n_dropped counts the rest.  One window ranks
+    each tile's rows and the aggregate on the same key collects the ranked
+    rows under the cap and counts them all, so it needs no second shuffle.
     """
-    t = assign_tiles(points, zooms)
-    w = Window.partitionBy("z", "x", "y").orderBy(
-        *[F.col(c).asc() for c in feature_cols]
-    )
-    totals = t.groupBy("z", "x", "y").agg(F.count("*").alias("n_total"))
-    if salt_threshold_rows is not None:
-        # census straight off `totals` (needed for accounting anyway — a
-        # partial-agg groupBy, no extra full sort); only HOT-tile rows pay
-        # the two-phase path, cold rows keep the single window untouched
-        hot_set = F.broadcast(
-            totals.filter(F.col("n_total") > salt_threshold_rows)
-            .select("z", "x", "y").withColumn("_hot", F.lit(True))
-        )
-        t2 = t.join(hot_set, ["z", "x", "y"], "left")
-        cold = t2.filter(F.col("_hot").isNull()).drop("_hot")
-        hot_rows = t2.filter(F.col("_hot").isNotNull()).drop("_hot")
-        w_salt = Window.partitionBy("z", "x", "y", "_salt").orderBy(
-            *[F.col(c).asc() for c in feature_cols]
-        )
-        hot_pre = (
-            hot_rows.withColumn(
-                "_salt", F.pmod(F.hash(*feature_cols), F.lit(n_salts)))
-            .withColumn("_prn", F.row_number().over(w_salt))
-            .filter(F.col("_prn") <= max_features_per_tile)
-            .drop("_salt", "_prn")
-        )  # <= n_salts * max survivors per hot tile: phase 2 is small+exact
-        kept = (
-            cold.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= max_features_per_tile)
-            .unionByName(
-                hot_pre.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= max_features_per_tile)
-            )
-        )
-    else:
-        kept = t.withColumn("_rn", F.row_number().over(w)) \
-            .filter(F.col("_rn") <= max_features_per_tile)
-    agg = kept.groupBy("z", "x", "y").agg(
-        F.sort_array(
-            F.collect_list(F.struct(*feature_cols, "in_x", "in_y"))
-        ).alias("features"),
-    )
+    cap = MAX_FEATURES_PER_TILE
+    w = Window.partitionBy("z", "x", "y").orderBy("doc_id", "span_pos")
+    feature = F.struct("doc_id", "span_pos", "in_x", "in_y")
     return (
-        agg.join(totals, ["z", "x", "y"])
+        assign_tiles(points, zooms)
+        .withColumn("_rn", F.row_number().over(w))
+        .groupBy("z", "x", "y")
+        .agg(
+            # collect_list skips the nulls `when` leaves past the cap
+            F.sort_array(
+                F.collect_list(F.when(F.col("_rn") <= cap, feature))
+            ).alias("features"),
+            F.count("*").alias("_n_total"),
+        )
         .withColumn("n_features", F.size("features"))
-        .withColumn("n_dropped", F.col("n_total") - F.col("n_features"))
-        .drop("n_total")
+        .withColumn("n_dropped", F.col("_n_total") - F.col("n_features"))
+        .drop("_n_total")
     )
 
 
-def raster_tiles(
-    points: DataFrame,
-    zooms: tuple[int, ...] = TILE_ZOOMS,
-    sub_bits: int = 8,
-) -> DataFrame:
+def raster_tiles(points: DataFrame, zooms: tuple[int, ...] = TILE_ZOOMS) -> DataFrame:
     """(z, x, y, pixels array<struct<px:int,py:int,n:bigint>>, n_points) —
-    sparse 2^sub_bits x 2^sub_bits count raster per tile."""
-    t = assign_tiles(points, zooms)
-    # in-tile coords down-sampled to the raster grid; tiles at z with
-    # shift <= sub_bits already are at (or below) pixel resolution
-    def px(col, z):
-        shift = GRID_BITS - z
-        down = max(shift - sub_bits, 0)
-        return F.shiftright(col, down)
-
+    sparse count raster per tile, 2^min(RASTER_SUB_BITS, GRID_BITS - z)
+    = 2^min(8, 16 - z) pixels per side: in-tile offsets are down-sampled to
+    the raster grid, and tiles at zooms whose offsets already fit it keep
+    full resolution."""
     parts = []
     for z in zooms:
-        parts.append(
-            t.filter(F.col("z") == z).withColumns({
-                "px": px(F.col("in_x"), z).cast("int"),
-                "py": px(F.col("in_y"), z).cast("int"),
-            })
-        )
-    tt = parts[0]
-    for p in parts[1:]:
-        tt = tt.unionByName(p)
-    pix = tt.groupBy("z", "x", "y", "px", "py").agg(F.count("*").alias("n"))
+        e = _tile_exprs(z)
+        down = max(GRID_BITS - z - RASTER_SUB_BITS, 0)
+        parts.append(points.select(
+            e["z"].alias("z"), e["x"].alias("x"), e["y"].alias("y"),
+            F.shiftright(e["in_x"], down).cast("int").alias("px"),
+            F.shiftright(e["in_y"], down).cast("int").alias("py"),
+        ))
+    pix = _union(parts).groupBy("z", "x", "y", "px", "py") \
+        .agg(F.count("*").alias("n"))
     return (
         pix.groupBy("z", "x", "y")
         .agg(
