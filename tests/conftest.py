@@ -1,4 +1,5 @@
 import os
+import re
 import sys
 
 import pytest
@@ -15,6 +16,23 @@ def spark():
     s = get_spark("tcc-tests", cores=8, shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def plan_nodes(spark):
+    """df -> operator names of df's executed physical plan, one per plan
+    line, planned with AQE off so the plan is whole before any action."""
+    def nodes(df):
+        key = "spark.sql.adaptive.enabled"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        try:
+            plan = df._jdf.queryExecution().executedPlan().toString()
+        finally:
+            spark.conf.set(key, old)
+        return [re.sub(r"^[\s:+\-]*(\*\(\d+\)\s*)?", "", line).split(" ", 1)[0]
+                for line in plan.splitlines() if line.strip()]
+    return nodes
 
 
 @pytest.fixture(scope="session")

@@ -182,6 +182,62 @@ def test_pip_join_argument_validation(spark):
         pip_join(pts)
 
 
+def test_pip_join_off_grid_and_null_points_match_nothing(spark):
+    """Null and off-grid coordinates produce no row and no error.  The
+    rectangle covers cells (1..5, 1..5) at the default res 7, so a key
+    packed without the range guard aliases qlon = 2^16 + 2000 (cell
+    column 131) into a covered cell, and an int32 narrowing of
+    qlat = 2^40 + 2000 wraps to 2000 (a Spark-side int cast of it fails
+    the job under ANSI mode)."""
+    from tree_code_chunker_spark.operators.pip import (
+        build_polygon_index, pip_join)
+
+    ring = [(1000, 1000), (1000, 3000), (3000, 3000), (3000, 1000),
+            (1000, 1000)]
+    idx = build_polygon_index(spark.createDataFrame(
+        [("rect", ring)],
+        "polygon_id string, ring array<struct<qlat:bigint,qlon:bigint>>"))
+    g = 1 << 16
+    rows = [("hit", 2000, 2000), ("null_lat", None, 2000),
+            ("null_lon", 2000, None), ("neg_lat", -1, 2000),
+            ("neg_lon", 2000, -2000), ("lon_wrap", 2000, g + 2000),
+            ("lat_wrap", g + 2000, 2000), ("lat_2^40", 1 << 40, 2000),
+            ("lat_2^40_wrap", (1 << 40) + 2000, 2000)]
+    pts = spark.createDataFrame(
+        [(d, 0, la, lo) for d, la, lo in rows],
+        "doc_id string, span_pos long, qlat long, qlon long")
+    got = [tuple(r) for r in pip_join(pts, index=idx).collect()]
+    assert got == [("hit", 0, "rect", 2000, 2000)]
+
+
+def test_pip_lookup_is_one_narrow_job(spark, plan_nodes):
+    """A lookup is one projection over the points: no shuffle, no
+    broadcast exchange, no join, and exactly one Spark job."""
+    import uuid
+
+    from tree_code_chunker_spark.operators.pip import (
+        build_polygon_index, pip_join)
+    from tree_code_chunker_spark.sources.datagen import gen_polygons
+
+    idx = build_polygon_index(gen_polygons(spark, 30, seed=43))
+    rows = [(f"d{i}", i, (i * 733) % 65536, (i * 577) % 65536)
+            for i in range(64)]
+    schema = "doc_id string, span_pos long, qlat long, qlon long"
+    nodes = plan_nodes(pip_join(spark.createDataFrame(rows, schema),
+                                index=idx))
+    assert not [n for n in nodes if "Exchange" in n or "Join" in n], nodes
+
+    sc = spark.sparkContext
+    group = f"pip-lookup-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "pip lookup")
+    try:
+        pip_join(spark.createDataFrame(rows, schema), index=idx).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
 # ------------------------------------------------------ cover compaction ----
 
 

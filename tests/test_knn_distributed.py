@@ -284,6 +284,28 @@ def test_knn_fine_tier_interactive_queries(spark, monkeypatch):
         assert _key(got) == _key(want), cap
 
 
+def test_knn_one_window_for_fine_and_dense_queries(spark, monkeypatch,
+                                                 plan_nodes):
+    """A batch with fine-tier and dense queries ranks every branch's
+    candidates in ONE top-k window (each query is in exactly one branch)
+    and equals brute force."""
+    monkeypatch.setattr(knn, "HOT_CELL_CAP", 2_000)
+    corpus = _cluster_corpus(spark).cache()
+    idx = KnnIndex(corpus, res=10, res_hist=10)
+    queries = spark.createDataFrame(
+        [("inhot", 1030, 1030), ("far", 50000, 50000), ("mid", 20000, 9000)],
+        "query_id string, qlat long, qlon long")
+    q = queries.toPandas()
+    rho_f = knn.plan_radii_fine_np(
+        idx.fine_sats, q["qlat"].to_numpy(), q["qlon"].to_numpy(),
+        idx.res_hist, 5, knn.FINE_MAX_RHO)
+    assert (rho_f >= 0).any() and (rho_f < 0).any(), rho_f
+    got = knn_ring(queries, k=5, index=idx)
+    assert plan_nodes(got).count("Window") == 1
+    want = knn_bruteforce(queries, corpus, 5).collect()
+    assert _key(got.collect()) == _key(want)
+
+
 def test_knn_fine_tier_disabled_still_exact(spark, monkeypatch):
     corpus = _cluster_corpus(spark, n_hot=5_000, n_uniform=500).cache()
     # a cap of the corpus size is above any cell count: no hot cells

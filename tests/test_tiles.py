@@ -1,7 +1,6 @@
 """Tile materialization: assignment determinism, vector cap accounting,
 raster pixel-count conservation, plan shape."""
 
-import re
 from collections import defaultdict
 
 import numpy as np
@@ -105,21 +104,8 @@ def test_vector_tiles_cap_matches_oracle(spark, monkeypatch):
     assert want[(4, 0, 15)][2] > 0  # the hot tile really overflows the cap
 
 
-def _plan_nodes(df):
-    """Operator names of df's executed physical plan, one per plan line."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return [re.sub(r"^[\s:+\-]*(\*\(\d+\)\s*)?", "", line).split(" ", 1)[0]
-            for line in plan.splitlines() if line.strip()]
-
-
-def test_vector_tiles_plan_is_one_shuffle_one_window(spark):
-    key = "spark.sql.adaptive.enabled"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        nodes = _plan_nodes(vector_tiles(_pts(spark), zooms=(4, 8, 12)))
-    finally:
-        spark.conf.set(key, old)
+def test_vector_tiles_plan_is_one_shuffle_one_window(spark, plan_nodes):
+    nodes = plan_nodes(vector_tiles(_pts(spark), zooms=(4, 8, 12)))
     assert nodes.count("Exchange") == 1, nodes
     assert "BroadcastExchange" not in nodes, nodes
     assert nodes.count("Window") == 1, nodes

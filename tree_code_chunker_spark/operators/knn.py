@@ -613,7 +613,6 @@ def _knn_planned(queries: DataFrame, index: KnnIndex, k: int,
         (F.col("qlat") - F.col("q_qlat")) * (F.col("qlat") - F.col("q_qlat"))
         + (F.col("qlon") - F.col("q_qlon")) * (F.col("qlon") - F.col("q_qlon"))
     )
-    out_cols = ["query_id", *tie_cols, "d2", "rank"]
 
     # --- dense branch: res-cell candidate join with per-query radius ---
     probe = (
@@ -692,7 +691,10 @@ def _knn_planned(queries: DataFrame, index: KnnIndex, k: int,
                 .drop("_salt").withColumn("d2", d2_expr).filter(dcap_pred))
     if self_pred is not None:
         cand = cand.filter(self_pred)
-    out = _topk(cand, k, tie_cols).select(*out_cols)
+    # every query is in exactly one branch, so the top-k of the branches'
+    # union is the union of their top-ks: ONE window for all branches
+    cand_cols = ["query_id", *tie_cols, "d2"]
+    cand = cand.select(*cand_cols)
 
     # --- fine branch: unit-cell candidate join in hot regions ---
     if has_fine and corp_fine is not None:
@@ -717,7 +719,7 @@ def _knn_planned(queries: DataFrame, index: KnnIndex, k: int,
                         ["fcy", "fcx"]).withColumn("d2", d2_expr)
         if self_pred is not None:
             cand_f = cand_f.filter(self_pred)
-        out = out.unionByName(_topk(cand_f, k, tie_cols).select(*out_cols))
+        cand = cand.unionByName(cand_f.select(*cand_cols))
 
     # --- sparse branch: only pay the brute-force corpus scan if some
     # query actually needs it ---
@@ -739,9 +741,8 @@ def _knn_planned(queries: DataFrame, index: KnnIndex, k: int,
                               *(["_skey"] if exclude_self else [])))
         if self_pred is not None:
             sparse_scored = sparse_scored.filter(self_pred)
-        out = out.unionByName(
-            _topk(sparse_scored, k, tie_cols).select(*out_cols))
-    return out
+        cand = cand.unionByName(sparse_scored.select(*cand_cols))
+    return _topk(cand, k, tie_cols).select(*cand_cols, "rank")
 
 
 def knn_self_join(

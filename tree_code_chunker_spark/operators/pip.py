@@ -5,16 +5,19 @@ the 2-D generalization of the reference's point-in-interval scope join
 (scope.go:96-130: prune + deepest-wins exact test).
 
 Physical plan, designed for 10^12 points x 10^3..10^5 polygons:
- 1. **Cover**: polygon bbox -> all covering cells at coarse resolution
-    `res` (distributed explode — no driver loop over polygons).
- 2. **Prune**: candidates = points ⋈ cover on the res-r cell key.  The cover
-    side is small (polygons x covering cells) => `F.broadcast` — no shuffle
-    of the 10^12-row point side at all.
- 3. **Exact**: the cover is classified per cell.  Points in a FULL cell
-    (all corners inside, no edge crossing it) are accepted outright;
-    candidates in a BOUNDARY cell go through an integer ray-cast (even-odd
-    rule, half-open edges) in a numpy pandas UDF over padded edge tensors
-    broadcast once per PolygonIndex — no extra shuffle.
+ 1. **Cover** (build side, once per PolygonIndex): every polygon's bbox
+    cells at coarse resolution `res`, classified in one vectorized numpy
+    pass as FULL (all corners inside, no edge crossing it) or BOUNDARY
+    (fully-outside cells dropped), sorted by the packed cell key and
+    broadcast once together with the padded edge tensors.
+ 2. **Prune**: one narrow projection over the points — no join, no
+    exchange.  A scalar pandas UDF packs each point's res-cell key and
+    `searchsorted`s it into the broadcast cover, so the 10^12-row point
+    side never moves.
+ 3. **Exact**: inside the same UDF, FULL-cell candidates are accepted
+    outright; BOUNDARY-cell candidates go through an integer ray-cast
+    (even-odd rule, half-open edges) over the edge tensors.  `explode`
+    turns each point's matching polygon ids into rows.
 
 Determinism: polygons and points live on the integer grid (config.GRID_BITS);
 the crossing test is integer cross-multiplication — no float division, so
@@ -28,10 +31,12 @@ boundary are inside, upper/right are outside (consistent tie-break).
 
 from __future__ import annotations
 
+from functools import cached_property
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import BooleanType
+from pyspark.sql.types import ArrayType, StringType
 
 from ..config import GRID_BITS
 
@@ -300,9 +305,47 @@ def _edge_tensor(pack: dict):
     return ids, Y1, X1, Y2, X2
 
 
+_RAY_TILE = 1 << 16  # (polygon, point) pairs per cache tile of the ray cast
+
+
+def _ray_cast_pairs(edges, ix: np.ndarray, py: np.ndarray,
+                    px: np.ndarray) -> np.ndarray:
+    """Even-odd ray cast of point i (py[i], px[i]) against polygon ix[i]
+    over the padded int32 [P, E] edge tables: one gather + one crossing
+    evaluation per edge column, no per-polygon grouping.
+
+    Cache-tiled: the test is DRAM-bandwidth-bound at full batch width
+    (measured: per-core throughput drops ~35% from 4 to 16 concurrent
+    workers), so it works in 64k-pair tiles with int32 intermediates —
+    every temporary stays cache-resident; only the two cross-products
+    need int64."""
+    y1, x1, y2, x2 = edges
+    out = np.zeros(len(ix), dtype=bool)
+    for s in range(0, len(ix), _RAY_TILE):
+        tix = ix[s:s + _RAY_TILE]
+        ty = py[s:s + _RAY_TILE]
+        tx = px[s:s + _RAY_TILE]
+        crossings = np.zeros(len(tix), dtype=np.int32)
+        for e in range(y1.shape[1]):
+            ey1 = y1[tix, e]
+            ey2 = y2[tix, e]
+            straddle = (ey1 > ty) != (ey2 > ty)
+            if not straddle.any():
+                continue
+            ex1 = x1[tix, e]
+            ex2 = x2[tix, e]
+            dy = (ey2 - ey1).astype(np.int64)
+            lhs = (tx - ex1) * dy
+            rhs = (ty - ey1).astype(np.int64) * (ex2 - ex1)
+            crossings += straddle & np.where(dy > 0, lhs < rhs, lhs > rhs)
+        out[s:s + _RAY_TILE] = (crossings & 1).astype(bool)
+    return out
+
+
 class PolygonIndex:
-    """Prepared build side of the PIP join: packed edge tensors broadcast
-    to executors + the classified cover as a small DataFrame.
+    """Prepared build side of the PIP join: packed edge tensors and the
+    classified cover (sorted by res-cell key), both broadcast to executors
+    once.
 
     Build ONCE per polygon set, probe many times — on a real cluster the
     polygon index outlives thousands of point batches, so the collect/
@@ -312,28 +355,45 @@ class PolygonIndex:
 
     def __init__(self, spark, polygons: DataFrame, res: int = DEFAULT_COVER_RES):
         self.res = res
+        self._spark = spark
         self.pack = _collect_polygon_pack(polygons)
         ids, Y1, X1, Y2, X2 = _edge_tensor(self.pack)
         self.ids = ids
-        self.edges_bc = spark.sparkContext.broadcast((Y1, X1, Y2, X2))
+        sc = spark.sparkContext
+        self.edges_bc = sc.broadcast((Y1, X1, Y2, X2))
         # per-polygon VALID edge counts: the padded tensor rows are inert
         # for the crossing test (y1==y2 never straddles) but a DISTANCE
         # kernel must mask them — a padding "segment" at (0,0) would
         # otherwise become a false nearest edge
-        self.n_edges_bc = spark.sparkContext.broadcast(np.array(
+        self.n_edges_bc = sc.broadcast(np.array(
             [sum(len(ys) - 1 for ys, _ in self.pack[p]) for p in ids],
             dtype=np.int64))
         pix, cy, cx, full = _classify_cells_all_np(
             self.pack, ids, Y1, X1, Y2, X2, res)
-        id_arr = np.array(ids, dtype=object)
+        # the cover as (key, poly_ix, is_full) sorted by the packed cell
+        # key cy << res | cx: a point's candidates are one searchsorted
+        # range.  Stable sort keeps each cell's polygons in poly_ix order.
+        key = (cy << res) | cx
+        order = np.argsort(key, kind="stable")
+        self.cover = (key[order], pix[order].astype(np.int32), full[order])
+        # ids as the string the output schema declares (a long id 7 -> "7")
+        self.id_str = np.array([str(p) for p in ids], dtype=object)
+        self.cover_bc = sc.broadcast((*self.cover, self.id_str))
+
+    @cached_property
+    def cover_ix(self) -> DataFrame:
+        """The classified cover as a DataFrame (polygon_id, poly_ix,
+        cov_cy, cov_cx, is_full) for plans that join on cells
+        (polygon_distance_join); pip_join probes `cover_bc` instead."""
+        key, pix, full = self.cover
         cover_pdf = pd.DataFrame({
-            "polygon_id": id_arr[pix],
-            "poly_ix": pix.astype(np.int32),
-            "cov_cy": cy.astype(np.int64),
-            "cov_cx": cx.astype(np.int64),
+            "polygon_id": self.id_str[pix],
+            "poly_ix": pix,
+            "cov_cy": key >> self.res,
+            "cov_cx": key & ((1 << self.res) - 1),
             "is_full": full,
         })
-        self.cover_ix = spark.createDataFrame(
+        return self._spark.createDataFrame(
             cover_pdf,
             "polygon_id string, poly_ix int, cov_cy bigint, cov_cx bigint, "
             "is_full boolean",
@@ -355,78 +415,58 @@ def pip_join(
     """points(qlat, qlon, ...) x polygons(polygon_id, ring) -> matches.
 
     Returns one row per (point, containing polygon) with `keep_cols` +
-    polygon_id + qlat/qlon.
+    polygon_id + qlat/qlon.  Points with a null or off-grid coordinate
+    (outside [0, 2^GRID_BITS) on either axis) match nothing.
 
-    Physical plan: the points join the broadcast classified cover on the
-    res-cell key, so the probe (point) side is never shuffled.  Points in a
-    FULL cell are accepted outright; only BOUNDARY-cell candidates need the
-    exact even-odd test, a vectorized numpy pandas UDF over the index's
-    broadcast padded edge tensors (one gather + one crossing evaluation per
-    Arrow batch — no per-polygon grouping).  The build side lives in
+    Physical plan: one narrow projection over the points, no join and no
+    exchange — `explode` of a scalar pandas UDF that probes the index's
+    broadcast cover (searchsorted on the res-cell key), accepts FULL-cell
+    candidates outright and ray-casts only BOUNDARY-cell candidates
+    against the broadcast padded edge tensors.  The build side lives in
     PolygonIndex — pass one in to amortize the collect/classify/broadcast
     across probe batches (it is polygon-only, independent of the points).
     """
     if polygons is None and index is None:
         raise ValueError("pip_join needs a build side: pass polygons= "
                          "and/or index=")
-    spark = points.sparkSession
-    idx = index if index is not None else PolygonIndex(spark, polygons, res)
-    shift = GRID_BITS - idx.res
-    b = idx.edges_bc
-    cover_ix = idx.cover_ix
+    idx = (index if index is not None
+           else PolygonIndex(points.sparkSession, polygons, res))
+    cover_b, edges_b = idx.cover_bc, idx.edges_bc
+    res, shift = idx.res, GRID_BITS - idx.res
+    grid = 1 << GRID_BITS
 
-    CHUNK = 1 << 16  # rows per cache tile
+    @F.pandas_udf(ArrayType(StringType()))
+    def hits(qlat: pd.Series, qlon: pd.Series) -> pd.Series:
+        ckey, cpix, cfull, ids = cover_b.value
+        la, lo = qlat.to_numpy(), qlon.to_numpy()
+        if not len(la):
+            return pd.Series([], dtype=object)
+        # range guard BEFORE any narrowing or key packing: an off-grid
+        # coordinate would overflow the cast, or its cell would alias
+        # into the next row of cells
+        row = np.flatnonzero((la >= 0) & (la < grid) & (lo >= 0) & (lo < grid))
+        py = la[row].astype(np.int32)
+        px = lo[row].astype(np.int32)
+        key = ((py >> shift).astype(np.int64) << res) | (px >> shift)
+        first = np.searchsorted(ckey, key, "left")
+        n = np.searchsorted(ckey, key, "right") - first
+        # CSR expansion: pair j is (point rep[j], cover entry pos[j])
+        rep = np.repeat(np.arange(len(row)), n)
+        pos = np.arange(len(rep)) + np.repeat(first - (np.cumsum(n) - n), n)
+        pix = cpix[pos]
+        # full cells accept outright; only boundary pairs are ray-cast
+        acc = cfull[pos]
+        bnd = np.flatnonzero(~acc)
+        acc[bnd] = _ray_cast_pairs(edges_b.value, pix[bnd],
+                                   py[rep[bnd]], px[rep[bnd]])
+        per_row = np.bincount(row[rep[acc]], minlength=len(la))
+        return pd.Series(np.split(ids[pix[acc]], np.cumsum(per_row)[:-1]))
 
-    @F.pandas_udf(BooleanType())
-    def inside(poly_ix: pd.Series, qlat: pd.Series, qlon: pd.Series) -> pd.Series:
-        # cache-tiled kernel: the exact test is DRAM-bandwidth-bound at
-        # full batch width (measured: per-core throughput drops ~35%
-        # from 4 to 16 concurrent workers), so work in 64k-row tiles
-        # with int32 intermediates — every temporary stays cache-
-        # resident; only the two cross-products need int64.
-        y1, x1, y2, x2 = b.value  # int32 [P, E] edge tables
-        ix_all = poly_ix.to_numpy()
-        py_all = qlat.to_numpy(dtype=np.int32)
-        px_all = qlon.to_numpy(dtype=np.int32)
-        out = np.zeros(len(ix_all), dtype=bool)
-        for s in range(0, len(ix_all), CHUNK):
-            ix = ix_all[s:s + CHUNK]
-            py = py_all[s:s + CHUNK]
-            px = px_all[s:s + CHUNK]
-            crossings = np.zeros(len(ix), dtype=np.int32)
-            for e in range(y1.shape[1]):
-                ey1 = y1[ix, e]
-                ey2 = y2[ix, e]
-                straddle = (ey1 > py) != (ey2 > py)
-                if not straddle.any():
-                    continue
-                ex1 = x1[ix, e]
-                ex2 = x2[ix, e]
-                dy = (ey2 - ey1).astype(np.int64)
-                lhs = (px - ex1) * dy
-                rhs = (py - ey1).astype(np.int64) * (ex2 - ex1)
-                crossings += straddle & np.where(dy > 0, lhs < rhs, lhs > rhs)
-            out[s:s + CHUNK] = (crossings & 1).astype(bool)
-        return pd.Series(out)
-
-    cand = points.join(
-        F.broadcast(cover_ix),
-        (F.shiftright(points["qlat"], shift) == cover_ix["cov_cy"])
-        & (F.shiftright(points["qlon"], shift) == cover_ix["cov_cx"]),
-        "inner",
+    return (
+        points.filter(F.col("qlat").isNotNull() & F.col("qlon").isNotNull())
+        .select(*keep_cols, F.explode(hits("qlat", "qlon")).alias("polygon_id"),
+                "qlat", "qlon")
     )
-    # single pass: full cells accept unconditionally; boundary cells by
-    # the exact test.  (The UDF is still evaluated on full-cell rows —
-    # Spark pulls Python UDFs out of when/or — but that is ~4% extra
-    # kernel work vs a SECOND broadcast-join pass for a separate
-    # accepted branch, which measured strictly worse.)
-    # grid coords are < 2^16, so the UDF inputs are cast int32 — halves
-    # the Arrow transfer of the candidate stream, which is DRAM-bound
-    return cand.filter(
-        F.col("is_full")
-        | inside("poly_ix", F.col("qlat").cast("int"),
-                 F.col("qlon").cast("int"))
-    ).select(*keep_cols, "polygon_id", "qlat", "qlon")
 
 
 def pip_anti_join(

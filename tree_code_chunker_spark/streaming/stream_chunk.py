@@ -73,12 +73,13 @@ def stream_pip(points_stream: DataFrame, index) -> DataFrame:
     """Streaming point-in-polygon enrichment: the north-star PIP join
     applied to an unbounded point stream.
 
-    Stateless stream-static join: the PolygonIndex (classified cover +
-    packed edge tensors) is built ONCE from the static polygon set and
-    broadcast; each micro-batch probes it exactly like the batch path
-    (operators/pip.pip_join), so stream output == batch output on the same
-    rows — pinned by tests/test_checkpoint_skew_stream.py.  No watermark is
-    needed (no state accrues: the join is per-row against a static side).
+    Stateless per-row projection, no join: the PolygonIndex (sorted
+    classified cover + packed edge tensors) is built ONCE from the static
+    polygon set and broadcast; each micro-batch probes it exactly like the
+    batch path (operators/pip.pip_join), so stream output == batch output
+    on the same rows — pinned by tests/test_checkpoint_skew_stream.py.  No
+    watermark is needed (no state accrues: each row is probed on its own
+    against a static index).
     """
     from ..operators.pip import pip_join
 
