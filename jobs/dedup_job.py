@@ -11,8 +11,9 @@ Local smoke:
     python jobs/dedup_job.py --input /root/testdata/sf0.001/documents.parquet \
         --output /tmp/dedup_out
 
-Stages (each a committed snapshot with per-partition lineage metrics, so a
-failed run resumes from the last committed stage):
+Stages (each a committed snapshot with per-file lineage — rows and bytes
+of every file written — so a failed run resumes from the last committed
+stage):
   1. exact      — md5 exact-duplicate groups
   2. signatures — MinHash signatures (batch-vectorized uint64 numpy)
   3. pairs      — LSH banded candidate pairs (equi-join, never all-pairs)

@@ -11,10 +11,10 @@ Local smoke:
     python jobs/pip_tile_job.py --input /root/testdata/sf0.001/documents.parquet \
         --output /tmp/pip_tile_out
 
-Every stage commits a snapshot with per-partition lineage metrics
-(operators/checkpoint.py); --resume skips committed stages, satisfying the
-north_rule resumability requirement.  Stages commit as parquet plus a JSON
-manifest, and nothing else (see operators/checkpoint.py).
+Every stage commits as parquet plus a JSON manifest naming the files it
+wrote, with each file's rows and bytes (operators/checkpoint.py); --resume
+skips stages whose named files are intact and reads exactly those files,
+satisfying the north_rule resumability requirement.
 """
 
 from __future__ import annotations

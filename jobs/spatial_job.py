@@ -11,8 +11,9 @@ Local smoke:
     python jobs/spatial_job.py --input /root/testdata/sf0.001/documents.parquet \
         --output /tmp/spatial_out
 
-Stages (each a committed snapshot with per-partition lineage metrics —
-operators/checkpoint.py; --resume skips committed stages):
+Stages (each a committed snapshot: parquet plus a manifest of its files with
+their rows and bytes — operators/checkpoint.py; --resume skips committed
+stages and reads exactly their files):
   points        span-derived integer-grid points
   dwithin       radius join points x query set (3x3 cell-bucket prune)
   traj_stats    per-doc integer path metrics

@@ -13,8 +13,9 @@ Local smoke:
         --input /root/testdata/sf0.001/documents.parquet \
         --output /tmp/training_out
 
-Stages (each a committed snapshot with per-partition lineage metrics, so a
-failed run resumes from the last committed stage):
+Stages (each a committed snapshot with per-file lineage — rows and bytes
+of every file written — so a failed run resumes from the last committed
+stage):
   1. filtered — quality-score floor + exact-dup removal (keep min doc_id)
   2. sampled  — deterministic stratified sample per language
   3. tokens   — whitespace + BPE-ish token counts

@@ -4,6 +4,8 @@ Spark-side tests."""
 import json
 import os
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from tree_code_chunker_spark.operators.checkpoint import (
@@ -36,7 +38,7 @@ def test_checkpoint_commit_and_resume(spark, tmp_path):
     assert len(lineage) == 1
     m = lineage[0]
     assert m["n_rows"] == 100 and m["n_bytes"] > 0 and m["committed"]
-    assert sum(p["n_rows"] for p in m["partitions"]) == 100
+    assert sum(f["n_rows"] for f in m["files"]) == 100
 
 
 def test_checkpoint_uncommitted_recomputes(spark, tmp_path):
@@ -53,6 +55,119 @@ def test_checkpoint_uncommitted_recomputes(spark, tmp_path):
 
     run_stage(spark, root, "s", build)
     assert calls["n"] == 1
+
+
+def _stage_df(spark, n=100):
+    """n rows in 4 input partitions, with a partition column `z`."""
+    return spark.range(0, n, 1, 4).select(
+        "id", (F.col("id") % 3).cast("int").alias("z"),
+        F.struct(F.col("id").alias("a"), F.lit("x").alias("b")).alias("s"))
+
+
+def _no_rebuild():
+    raise AssertionError("committed stage rebuilt")
+
+
+def _parquet_on_disk(stage_dir):
+    import pyarrow.parquet as pq
+
+    out = {}
+    for dirpath, _dirs, names in os.walk(stage_dir):
+        for fn in names:
+            if fn.endswith(".parquet"):
+                path = os.path.join(dirpath, fn)
+                out[os.path.relpath(path, stage_dir)] = (
+                    pq.read_metadata(path).num_rows, os.path.getsize(path))
+    return out
+
+
+@pytest.mark.parametrize("partition_by", [None, ["z"]])
+def test_checkpoint_manifest_lists_written_files(spark, tmp_path, partition_by):
+    """Lineage is the written files: each with its footer rows and size."""
+    root = str(tmp_path / "ckpt")
+    df = _stage_df(spark)
+    m = commit_stage(df, root, "s", partition_by)
+    on_disk = _parquet_on_disk(os.path.join(root, "s"))
+    assert {f["path"]: (f["n_rows"], f["n_bytes"]) for f in m["files"]} \
+        == on_disk
+    assert sum(f["n_rows"] for f in m["files"]) == m["n_rows"] == df.count()
+    assert sum(f["n_bytes"] for f in m["files"]) == m["n_bytes"]
+    if partition_by:
+        assert all(f["path"].startswith("z=") for f in m["files"])
+
+
+def test_checkpoint_commit_is_one_job(spark, tmp_path):
+    """A commit is the write job alone: no Spark read of its own output."""
+    import uuid
+
+    df = _stage_df(spark)
+    assert df.rdd.getNumPartitions() == 4
+    sc = spark.sparkContext
+    group = f"commit-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "commit")
+    try:
+        commit_stage(df, str(tmp_path / "ckpt"), "s")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_checkpoint_resume_ignores_stray_file(spark, tmp_path):
+    """Resume reads the files the manifest names, not the directory."""
+    import shutil
+
+    root = str(tmp_path / "ckpt")
+    run_stage(spark, root, "s", lambda: _stage_df(spark), ["z"])
+    stage_dir = os.path.join(root, "s")
+    src = next(iter(_parquet_on_disk(stage_dir)))
+    shutil.copy(os.path.join(stage_dir, src),
+                os.path.join(stage_dir, "z=0", "part-stray.parquet"))
+
+    out = run_stage(spark, root, "s", _no_rebuild, ["z"])
+    assert out.columns == ["id", "s", "z"]
+    assert sorted(out.select("id", "z", "s").collect()) \
+        == sorted(_stage_df(spark).collect())
+
+
+@pytest.mark.parametrize("damage", ["delete", "truncate"])
+def test_checkpoint_damaged_file_rebuilds(spark, tmp_path, damage):
+    """A committed file that is gone or changed size un-commits the stage."""
+    root = str(tmp_path / "ckpt")
+    m = commit_stage(_stage_df(spark), root, "s")
+    path = os.path.join(root, "s", m["files"][0]["path"])
+    if damage == "delete":
+        os.remove(path)
+    else:
+        with open(path, "r+b") as f:
+            f.truncate(os.path.getsize(path) // 2)
+    assert not is_committed(root, "s")
+    calls = {"n": 0}
+
+    def build():
+        calls["n"] += 1
+        return _stage_df(spark)
+
+    out = run_stage(spark, root, "s", build)
+    assert calls["n"] == 1 and is_committed(root, "s")
+    assert sorted(out.collect()) == sorted(_stage_df(spark).collect())
+
+
+@pytest.mark.parametrize("partition_by", [None, ["z"]])
+def test_checkpoint_empty_stage_commits_and_reads_back(spark, tmp_path,
+                                                       partition_by):
+    """A 0-row stage commits (under partitionBy its write leaves no file)
+    and reads back as 0 rows with the columns of a non-empty stage."""
+    root = str(tmp_path / "ckpt")
+    full = run_stage(spark, root, "full", lambda: _stage_df(spark),
+                     partition_by)
+    empty = run_stage(spark, root, "empty", lambda: _stage_df(spark, 0),
+                      partition_by)
+    assert empty.count() == 0 and empty.schema == full.schema
+    assert pipeline_lineage(root)[0]["n_rows"] == 0
+
+    again = run_stage(spark, root, "empty", _no_rebuild, partition_by)
+    assert again.count() == 0 and again.schema == full.schema
 
 
 def test_salted_join_matches_plain_join(spark):

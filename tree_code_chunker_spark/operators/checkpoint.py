@@ -1,16 +1,28 @@
-"""Stage checkpointing with per-partition lineage + metrics and resume.
+"""Stage checkpointing: each stage commits the files it wrote, and resume
+reads exactly those files.
 
 north_rule: "all stages checkpoint to Iceberg with per-partition lineage +
 row-count/byte metrics so any failed run resumes from the last committed
-snapshot."  Stages commit as parquet plus a JSON manifest, and nothing else
-(the write protocol — write-to-temp, fsync manifest, atomic rename — is the
-snapshot-commit pattern).
+snapshot."  Here stages commit as parquet plus a JSON manifest, not Iceberg,
+and the lineage is per written file (the write protocol — write, fsync the
+manifest to a temp file, atomic rename — is the snapshot-commit pattern).
+A commit is the stage's write job followed by a listing of what that write
+produced; it runs no other Spark job.
 
 Manifest per stage: {stage, snapshot_id, committed, n_rows, n_bytes,
-partitions: [{partition_id, n_rows}], wall_sec}.  `run_stage` skips stages
-whose manifest says committed (idempotent rerun — reference analogue:
-ChunkBatch's per-file error isolation + deterministic restart,
-codechunk.go:295-391).
+files: [{path, n_rows, n_bytes}], schema, wall_sec}.  One `files` entry per
+written parquet file: `path` is relative to the stage directory
+(`z=4/part-....parquet` under `partition_by`), `n_rows` comes from the
+file's parquet footer and `n_bytes` is its size; the stage's `n_rows` and
+`n_bytes` are their sums.  `schema` is the read schema (data columns, then
+partition columns), so a stage whose write left no file (0 rows under
+`partition_by`) still reads back as 0 rows with its columns.
+
+A stage stays committed while its manifest says so and every file it names
+exists at its recorded size.  `run_stage` then reads exactly those files —
+a stray file in the directory is not read — and otherwise rebuilds the
+stage (idempotent rerun — reference analogue: ChunkBatch's per-file error
+isolation + deterministic restart, codechunk.go:295-391).
 """
 
 from __future__ import annotations
@@ -20,57 +32,64 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql import Window
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _manifest_path(root: str, stage: str) -> str:
     return os.path.join(root, stage, "_manifest.json")
 
 
-def is_committed(root: str, stage: str) -> bool:
-    p = _manifest_path(root, stage)
-    if not os.path.exists(p):
-        return False
+def _committed_manifest(root: str, stage: str) -> dict | None:
+    """The stage's manifest while it is committed and every file it names
+    is on disk at its recorded size, else None."""
+    out_dir = os.path.join(root, stage)
     try:
-        with open(p) as f:
-            return bool(json.load(f).get("committed"))
-    except (OSError, json.JSONDecodeError):
-        return False
+        with open(_manifest_path(root, stage)) as f:
+            m = json.load(f)
+        intact = m["committed"] and all(
+            os.path.getsize(os.path.join(out_dir, e["path"])) == e["n_bytes"]
+            for e in m["files"])
+    except (OSError, KeyError, TypeError, json.JSONDecodeError):
+        return None
+    return m if intact else None
+
+
+def is_committed(root: str, stage: str) -> bool:
+    return _committed_manifest(root, stage) is not None
 
 
 def commit_stage(df: DataFrame, root: str, stage: str,
                  partition_by: list[str] | None = None) -> dict:
-    """Write stage output + manifest with per-partition row counts."""
+    """Write stage output, then commit a manifest of the files written."""
     out_dir = os.path.join(root, stage)
     t0 = time.perf_counter()
+    parts = partition_by or []
     w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
+    if parts:
+        w = w.partitionBy(*parts)
     w.parquet(out_dir)
 
-    spark = df.sparkSession
-    written = spark.read.parquet(out_dir)
-    per_part = (
-        written.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid").agg(F.count("*").alias("n_rows"))
-        .collect()
-    )
-    n_rows = sum(r["n_rows"] for r in per_part)
-    n_bytes = 0
-    for dirpath, _dirs, files in os.walk(out_dir):
-        n_bytes += sum(os.path.getsize(os.path.join(dirpath, fn))
-                       for fn in files if fn.endswith(".parquet"))
+    files = []
+    for dirpath, dirs, names in os.walk(out_dir):
+        dirs.sort()
+        for fn in sorted(names):
+            if fn.endswith(".parquet"):
+                path = os.path.join(dirpath, fn)
+                files.append({"path": os.path.relpath(path, out_dir),
+                              "n_rows": pq.read_metadata(path).num_rows,
+                              "n_bytes": os.path.getsize(path)})
+    schema = StructType([f for f in df.schema if f.name not in parts]
+                        + [df.schema[c] for c in parts])
     manifest = {
         "stage": stage,
         "snapshot_id": uuid.uuid4().hex,
         "committed": True,
-        "n_rows": int(n_rows),
-        "n_bytes": int(n_bytes),
-        "partitions": [
-            {"partition_id": int(r["_pid"]), "n_rows": int(r["n_rows"])}
-            for r in sorted(per_part, key=lambda r: r["_pid"])
-        ],
+        "n_rows": sum(f["n_rows"] for f in files),
+        "n_bytes": sum(f["n_bytes"] for f in files),
+        "files": files,
+        "schema": schema.jsonValue(),
         "wall_sec": round(time.perf_counter() - t0, 3),
     }
     tmp = _manifest_path(root, stage) + ".tmp"
@@ -86,14 +105,17 @@ def run_stage(spark: SparkSession, root: str, stage: str, build,
               partition_by: list[str] | None = None) -> DataFrame:
     """Return the stage's committed output, computing it only if needed.
 
-    `build()` -> DataFrame is invoked ONLY when the stage has no committed
-    snapshot; otherwise the parquet snapshot is read back (resume path).
+    `build()` -> DataFrame is invoked ONLY when the stage has no intact
+    committed snapshot; either way the result reads exactly the files the
+    manifest names (`basePath` keeps partition columns such as `z`).
     """
-    if is_committed(root, stage):
-        return spark.read.parquet(os.path.join(root, stage))
-    df = build()
-    commit_stage(df, root, stage, partition_by)
-    return spark.read.parquet(os.path.join(root, stage))
+    m = _committed_manifest(root, stage)
+    if m is None:
+        m = commit_stage(build(), root, stage, partition_by)
+    out_dir = os.path.join(root, stage)
+    return (spark.read.schema(StructType.fromJson(m["schema"]))
+            .option("basePath", out_dir)
+            .parquet(*(os.path.join(out_dir, f["path"]) for f in m["files"])))
 
 
 def pipeline_lineage(root: str) -> list[dict]:
