@@ -439,10 +439,10 @@ KNN_SELF_K = 3
 
 def q_knn_self(spark, sf_dir):
     """Corpus-vs-corpus kNN: every point probes for its 3 nearest OTHER
-    points through the distributed planner (broadcast SAT + vectorized
-    mapInPandas radius planning — the probe side is never collected).
-    The 2-D generalization of reference getSiblings (codechunk.go:653-689)
-    and the ANN-dedup shape where probe == data."""
+    points in one mapInPandas over the corpus, ranked against the index's
+    once-broadcast cell-sorted arrays and SAT (the probe side is never
+    collected).  The 2-D generalization of reference getSiblings
+    (codechunk.go:653-689) and the ANN-dedup shape where probe == data."""
     from tree_code_chunker_spark.operators.knn import knn_self_join
 
     out = knn_self_join(_points(spark, sf_dir), k=KNN_SELF_K, res=10)

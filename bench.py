@@ -128,15 +128,12 @@ def run(cores: int | None = None, sf_dir: str | None = None) -> dict:
 
     timings["knn"] = round(min(knn_once() for _ in range(2)), 3)
 
-    # corpus-vs-corpus kNN through the DISTRIBUTED planner (broadcast SAT
-    # + mapInPandas radius planning — the probe side is never collected;
-    # the ~200k-row probe is above DRIVER_PROBE_CAP, so knn_ring picks it):
+    # corpus-vs-corpus kNN (one mapInPandas over the probe, ranked against
+    # the index's broadcast arrays — the probe side is never collected):
     # a ~200k-point slice of the corpus, INCLUDING the hot boxes, probes
     # the full 9.2M-point index for its nearest other points.  This is
-    # the ANN-dedup / getSiblings shape the r3 driver-side planner could
-    # not reach; hot probes ride the index's density-adaptive fine tier
-    # (unit-granularity local SATs) and near-hot probes the known-hot
-    # salted merge join — without them this stage does not finish.
+    # the ANN-dedup / getSiblings shape; hot probes ride the index's
+    # density-adaptive fine tier (unit-granularity local SATs).
     from tree_code_chunker_spark.operators.knn import _self_key
 
     probe_self = pts.filter(F.col("span_pos") % 46 == 0).select(

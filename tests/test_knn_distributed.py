@@ -1,6 +1,6 @@
-"""Distributed-probe kNN: vectorized radius planning, the mapInPandas
-planner on a >=1e5-query probe set, and self-join kNN (the 2-D
-generalization of reference getSiblings, codechunk.go:653-689).
+"""kNN: vectorized radius planning, the one-job mapInPandas ranking on
+small and >=1e5-query probe sets, the fine tier, and self-join kNN (the
+2-D generalization of reference getSiblings, codechunk.go:653-689).
 """
 
 import numpy as np
@@ -115,10 +115,8 @@ def _key(rows):
 
 
 def test_knn_distributed_matches_bruteforce_large_probe(spark):
-    """>=1e5 probe rows through the mapInPandas planner (the probe side is
-    never collected) == brute force.  This is the corpus-vs-corpus scale
-    shape the driver planner cannot reach: the probe exceeds
-    DRIVER_PROBE_CAP, so the size rule plans it on the executors."""
+    """>=1e5 probe rows (several Arrow batches per task; the probe side is
+    never collected) == brute force."""
     n_q = 120_000
     corpus = _corpus(spark, 250).cache()
     qlat, qlon = derive_point_cols(F.col("id") * 7 + 3, F.lit(5))
@@ -126,53 +124,84 @@ def test_knn_distributed_matches_bruteforce_large_probe(spark):
         F.col("id").cast("string").alias("query_id"),
         qlat.alias("qlat"), qlon.alias("qlon")).cache()
     k = 3
-    assert n_q > knn.DRIVER_PROBE_CAP
     got = knn_ring(queries, corpus, k, res=8).collect()
     want = knn_bruteforce(queries, corpus, k).collect()
     assert _key(got) == _key(want)
     assert len(want) == n_q * k
 
 
-def test_knn_distributed_matches_driver_small(spark, monkeypatch):
+def test_knn_ring_string_and_null_tie_columns(spark):
+    """Co-located corpus points rank by their tie columns under Spark's
+    ordering (nulls first, strings by UTF-8 bytes: 'Z' < 'a' < 'é'), as
+    knn_bruteforce's window does; string and long query ids both work."""
+    rows = [(a, b, 100 + (i % 3), 100) for i, (a, b) in enumerate([
+        ("a", "x"), (None, "x"), ("é", None), ("Z", "y"), ("a", None),
+        (None, None), ("ab", "x"), ("a:b", "\\"), ("", "x")])]
+    rows += [(f"f{i}", "x", 3000 + 97 * i, 4000 - 31 * i) for i in range(40)]
+    corpus = spark.createDataFrame(
+        rows, "k1 string, k2 string, qlat long, qlon long")
+    idx = KnnIndex(corpus, res=9, tie_cols=["k1", "k2"])
+    for qtype, ids in (("string", ["q0", "q1", "q2"]), ("long", [7, 8, 9])):
+        queries = spark.createDataFrame(
+            list(zip(ids, [100, 101, 3500], [100, 100, 3900])),
+            f"query_id {qtype}, qlat long, qlon long")
+        got = knn_ring(queries, k=6, index=idx).collect()
+        want = knn_bruteforce(queries, corpus, 6, ["k1", "k2"]).collect()
+
+        def key(rs):
+            return sorted((r["query_id"], r["rank"], str(r["k1"]),
+                           str(r["k2"]), r["d2"]) for r in rs)
+        assert key(got) == key(want), qtype
+        assert len(got) == 18
+
+
+def test_knn_request_is_one_narrow_job(spark, plan_nodes):
+    """A request is one mapInPandas over the probe: no shuffle, no
+    broadcast exchange, no join, no window, and exactly one Spark job."""
+    import uuid
+
+    corpus = _corpus(spark, 2_000).cache()
+    idx = KnnIndex(corpus, res=10)
+    rows = [(f"q{i}", (i * 733) % 65536, (i * 577) % 65536)
+            for i in range(20)]
+    schema = "query_id string, qlat long, qlon long"
+    nodes = plan_nodes(knn_ring(spark.createDataFrame(rows, schema),
+                                k=5, index=idx))
+    assert not [n for n in nodes
+                if "Exchange" in n or "Join" in n or "Window" in n], nodes
+
+    sc = spark.sparkContext
+    group = f"knn-request-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "knn request")
+    try:
+        got = knn_ring(spark.createDataFrame(rows, schema),
+                       k=5, index=idx).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    want = knn_bruteforce(spark.createDataFrame(rows, schema), corpus,
+                          5).collect()
+    assert _key(got) == _key(want)
+
+
+def test_knn_null_and_off_grid_queries_return_no_rows(spark):
+    """A query with a null coordinate or one outside [0, 2^GRID_BITS)
+    returns no rows and does not fail the request; the rest of the batch
+    is answered exactly."""
     corpus = _corpus(spark, 500).cache()
-    qlat, qlon = derive_point_cols(F.col("id") * 11 + 1, F.lit(2))
-    queries = spark.range(200).select(
-        F.col("id").cast("string").alias("query_id"),
-        qlat.alias("qlat"), qlon.alias("qlon")).cache()
-    idx = KnnIndex(corpus, res=9)
-    a = knn_ring(queries, k=4, index=idx).collect()  # fits: driver planner
-    monkeypatch.setattr(knn, "DRIVER_PROBE_CAP", 0)
-    b = knn_ring(queries, k=4, index=idx).collect()  # distributed planner
-    assert _key(a) == _key(b)
-
-
-def test_knn_probe_size_picks_planner(spark, monkeypatch):
-    """The size rule at its boundary: with DRIVER_PROBE_CAP = n, a probe
-    of n rows is planned on the driver and one of n+1 rows on the
-    executors — both exact."""
-    n = 40
-    corpus = _corpus(spark, 300).cache()
-    idx = KnnIndex(corpus, res=9)
-    monkeypatch.setattr(knn, "DRIVER_PROBE_CAP", n)
-    driver_calls = []
-    plan = knn.plan_radii_dcap_np
-
-    def spy(sat, qlat, *a):
-        driver_calls.append(len(qlat))  # executor-side calls land elsewhere
-        return plan(sat, qlat, *a)
-
-    monkeypatch.setattr(knn, "plan_radii_dcap_np", spy)
-    for rows, want_calls in ((n, [n]), (n + 1, [])):
-        qlat, qlon = derive_point_cols(F.col("id") * 11 + 1, F.lit(2))
-        queries = spark.range(rows).select(
-            F.col("id").cast("string").alias("query_id"),
-            qlat.alias("qlat"), qlon.alias("qlon"))
-        driver_calls.clear()
-        got = knn_ring(queries, k=4, index=idx).collect()
-        assert driver_calls == want_calls, rows
-        want = knn_bruteforce(queries, corpus, 4).collect()
-        assert _key(got) == _key(want)
-        assert len(got) == rows * 4
+    idx = KnnIndex(corpus, res=10)
+    top = 1 << GRID_BITS
+    good = [("g0", 100, 200), ("g1", 40000, 12345), ("g2", 0, top - 1)]
+    bad = [("n_lat", None, 5), ("n_lon", 5, None), ("neg", -(1 << 20), 5),
+           ("lat_hi", top, 5), ("lon_hi", 5, top + 7), ("far", 1 << 40, 5)]
+    schema = "query_id string, qlat long, qlon long"
+    got = knn_ring(spark.createDataFrame(good + bad, schema),
+                   k=4, index=idx).collect()
+    want = knn_bruteforce(spark.createDataFrame(good, schema), corpus,
+                          4).collect()
+    assert _key(got) == _key(want)
+    assert len(got) == 3 * 4
 
 
 def test_knn_self_join_matches_bruteforce(spark):
@@ -238,14 +267,11 @@ def test_knn_fine_tier_self_join_matches_bruteforce(spark, monkeypatch):
     """Self-join kNN over a corpus with a dense cluster: the fine tier
     must activate (hot cells get local SATs) and the result must equal
     brute force — including co-located duplicates inside the cluster and
-    cell-edge probes that fall back to the coarse plan.  Planned on the
-    executors, as the self-join is."""
+    cell-edge probes that fall back to the coarse plan."""
     monkeypatch.setattr(knn, "HOT_CELL_CAP", 2_000)
-    monkeypatch.setattr(knn, "DRIVER_PROBE_CAP", 0)
     corpus = _cluster_corpus(spark).cache()
     idx = KnnIndex(corpus, res=10, res_hist=10)
     assert idx.fine_sats, "dense cluster must trigger the fine tier"
-    assert idx.corp_fine is not None
     from tree_code_chunker_spark.operators.knn import knn_self_join
 
     k = 3
@@ -267,9 +293,8 @@ def test_knn_fine_tier_self_join_matches_bruteforce(spark, monkeypatch):
 
 
 def test_knn_fine_tier_interactive_queries(spark, monkeypatch):
-    """Driver-planned (small probe set) queries inside and around the
-    dense cluster route through the fine tier and stay exact — and so do
-    the same queries planned on the executors."""
+    """A small probe set inside and around the dense cluster routes
+    through the fine tier and stays exact."""
     monkeypatch.setattr(knn, "HOT_CELL_CAP", 2_000)
     corpus = _cluster_corpus(spark).cache()
     idx = KnnIndex(corpus, res=10, res_hist=10)
@@ -278,32 +303,53 @@ def test_knn_fine_tier_interactive_queries(spark, monkeypatch):
     queries = spark.createDataFrame(
         rows, "query_id string, qlat long, qlon long")
     want = knn_bruteforce(queries, corpus, 5).collect()
-    for cap in (knn.DRIVER_PROBE_CAP, 0):  # driver, then distributed
-        monkeypatch.setattr(knn, "DRIVER_PROBE_CAP", cap)
-        got = knn_ring(queries, k=5, index=idx).collect()
-        assert _key(got) == _key(want), cap
+    got = knn_ring(queries, k=5, index=idx).collect()
+    assert _key(got) == _key(want)
 
 
-def test_knn_one_window_for_fine_and_dense_queries(spark, monkeypatch,
-                                                 plan_nodes):
-    """A batch with fine-tier and dense queries ranks every branch's
-    candidates in ONE top-k window (each query is in exactly one branch)
-    and equals brute force."""
+def test_knn_mixed_fine_coarse_far_batch(spark, monkeypatch):
+    """One batch holding fine-tier, coarse and far queries (the far ones
+    in empty swathes, planning radii of thousands of units) is ranked by
+    one kernel and equals brute force."""
     monkeypatch.setattr(knn, "HOT_CELL_CAP", 2_000)
-    corpus = _cluster_corpus(spark).cache()
+    corpus = _cluster_corpus(spark, n_uniform=300).cache()
     idx = KnnIndex(corpus, res=10, res_hist=10)
+    rows = [("inhot", 1030, 1030), ("inhot2", 1060, 1001),
+            ("edge", 1000, 1063), ("nearhot", 1100, 1100),
+            ("mid", 20000, 9000), ("far", 50000, 50000),
+            ("corner", 65535, 0), ("origin", 0, 0)]
     queries = spark.createDataFrame(
-        [("inhot", 1030, 1030), ("far", 50000, 50000), ("mid", 20000, 9000)],
-        "query_id string, qlat long, qlon long")
-    q = queries.toPandas()
-    rho_f = knn.plan_radii_fine_np(
-        idx.fine_sats, q["qlat"].to_numpy(), q["qlon"].to_numpy(),
-        idx.res_hist, 5, knn.FINE_MAX_RHO)
+        rows, "query_id string, qlat long, qlon long")
+    la = np.array([r[1] for r in rows], dtype=np.int64)
+    lo = np.array([r[2] for r in rows], dtype=np.int64)
+    rho_f = knn.plan_radii_fine_np(idx.fine_sats, la, lo, idx.res_hist, 5,
+                                   knn.FINE_MAX_RHO)
+    _, dcap = plan_radii_dcap_np(idx.sat, la, lo, idx.res_hist, 10, 5)
     assert (rho_f >= 0).any() and (rho_f < 0).any(), rho_f
-    got = knn_ring(queries, k=5, index=idx)
-    assert plan_nodes(got).count("Window") == 1
+    assert (dcap[rho_f < 0] > 2_000).any(), dcap
+    got = knn_ring(queries, k=5, index=idx).collect()
     want = knn_bruteforce(queries, corpus, 5).collect()
-    assert _key(got.collect()) == _key(want)
+    assert _key(got) == _key(want)
+
+
+def test_knn_rank_slices_match_one_slice(spark, monkeypatch):
+    """The kernel's query slicing never changes an answer: a cap far
+    below one query's candidates ranks every query alone and equals the
+    default cap, fine-tier, coarse and exclude_self queries alike."""
+    monkeypatch.setattr(knn, "HOT_CELL_CAP", 2_000)
+    corpus = _cluster_corpus(spark, n_hot=6_000, n_uniform=600).cache()
+    idx = KnnIndex(corpus, res=10, res_hist=10)
+    (cells, ties), keys = idx.corpus_bc.value, idx.self_keys_bc.value
+    rng = np.random.RandomState(3)
+    pick = rng.choice(len(cells[0]), 300, replace=False)
+    la, lo = cells[1][pick].astype(np.int64), cells[2][pick].astype(np.int64)
+    for qid in (None, keys[pick]):
+        one = knn._rank_np(cells, la, lo, 4, qid, keys)
+        monkeypatch.setattr(knn, "MAX_SLICE_CANDIDATES", 7)
+        sliced = knn._rank_np(cells, la, lo, 4, qid, keys)
+        monkeypatch.undo()
+        assert all(np.array_equal(a, b) for a, b in zip(one, sliced))
+        assert len(one[0]) == 300 * 4
 
 
 def test_knn_fine_tier_disabled_still_exact(spark, monkeypatch):
@@ -311,7 +357,7 @@ def test_knn_fine_tier_disabled_still_exact(spark, monkeypatch):
     # a cap of the corpus size is above any cell count: no hot cells
     monkeypatch.setattr(knn, "HOT_CELL_CAP", 5_500)
     idx = KnnIndex(corpus, res=10, res_hist=10)
-    assert not idx.fine_sats and idx.corp_fine is None
+    assert not idx.fine_sats
     queries = spark.createDataFrame(
         [("a", 1030, 1030), ("b", 40000, 40000)],
         "query_id string, qlat long, qlon long")
@@ -320,13 +366,11 @@ def test_knn_fine_tier_disabled_still_exact(spark, monkeypatch):
     assert _key(got) == _key(want)
 
 
-def test_knn_salted_merge_path_equals_broadcast_path(spark, monkeypatch):
-    """BROADCAST_CAP_ROWS=0 forces the co-repartitioned sort-merge path
-    WITH known-hot salting (the cluster corpus has hot cells) — results
-    must be bit-equal to the broadcast-hash path on the same probes, both
-    planned on the executors."""
+def test_knn_exclude_self_on_cluster_corpus(spark, monkeypatch):
+    """exclude_self over the cluster corpus, whose probes sit inside,
+    beside and far from hot cells (many co-located twins at d2=0), equals
+    brute force with identity exclusion."""
     monkeypatch.setattr(knn, "HOT_CELL_CAP", 2_000)
-    monkeypatch.setattr(knn, "DRIVER_PROBE_CAP", 0)
     corpus = _cluster_corpus(spark, n_hot=8_000, n_uniform=2_000).cache()
     idx = KnnIndex(corpus, res=10, res_hist=10)
     assert idx.fine_sats
@@ -336,11 +380,10 @@ def test_knn_salted_merge_path_equals_broadcast_path(spark, monkeypatch):
         F.concat_ws(":", F.col("doc_id"),
                     F.col("span_pos").cast("string")).alias("query_id"),
         "qlat", "qlon").cache()
-    a = knn_ring(probes, k=3, index=idx, exclude_self=True).collect()
-    monkeypatch.setattr(knn, "BROADCAST_CAP_ROWS", 0)
-    b = knn_ring(probes, k=3, index=idx, exclude_self=True).collect()
-    assert _key(a) == _key(b)
-    assert len(a) == probes.count() * 3
+    got = knn_ring(probes, k=3, index=idx, exclude_self=True).collect()
+    want = knn_bruteforce(probes, corpus, 3, exclude_self=True).collect()
+    assert _key(got) == _key(want)
+    assert len(got) == probes.count() * 3
 
 
 def test_knn_within_matches_filtered_bruteforce(spark):
@@ -400,17 +443,19 @@ def test_knn_self_key_collision_safe(spark):
         assert (r["k1"], r["k2"]) == twin[r["query_id"]], r.asDict()
 
 
-def test_knn_sparse_cap_falls_back_to_nonbroadcast(spark, monkeypatch):
-    """A sparse probe set larger than SPARSE_BROADCAST_CAP must route
-    through the non-broadcast scored join and still be exact."""
-    monkeypatch.setattr(knn, "MAX_RHO", 1)
-    monkeypatch.setattr(knn, "SPARSE_BROADCAST_CAP", 10)
-    corpus = _corpus(spark, 50)  # tiny corpus: most probes plan rho > MAX_RHO
+def test_knn_far_radii_on_tiny_corpus(spark):
+    """A 50-point corpus makes every query plan a far radius (thousands of
+    units); with k above the corpus size every query gets the whole
+    corpus.  Both equal brute force."""
+    corpus = _corpus(spark, 50).cache()
     queries = spark.range(200).select(
         F.col("id").cast("string").alias("query_id"),
         (F.abs(F.xxhash64("id")) % 65536).alias("qlat"),
         (F.abs(F.xxhash64("id", F.lit(7))) % 65536).alias("qlon"),
-    )
-    got = knn_ring(queries, corpus, k=3, res=8).collect()
-    want = knn_bruteforce(queries, corpus, 3).collect()
-    assert _key(got) == _key(want)
+    ).cache()
+    idx = KnnIndex(corpus, res=8)
+    for k in (3, 60):
+        got = knn_ring(queries, k=k, index=idx).collect()
+        want = knn_bruteforce(queries, corpus, k).collect()
+        assert _key(got) == _key(want), k
+        assert len(got) == 200 * min(k, 50)

@@ -132,11 +132,6 @@ def raster_to_vector(rasters: DataFrame, min_count: int = 1) -> DataFrame:
     )
 
 
-def write_tiles(tiles: DataFrame, path: str) -> None:
-    """Partition layout a tile server would read: /z=<z>/x=<x>/ parquet."""
-    tiles.write.mode("overwrite").partitionBy("z", "x").parquet(path)
-
-
 # 3x3 integer smoothing kernel (binomial outer product [1,2,1]^T [1,2,1]):
 # center 4, edges 2, corners 1 — sums to 16, so smoothed/16 is the box-blur
 # mean; kept UNnormalized so the operator stays integer-exact end to end.

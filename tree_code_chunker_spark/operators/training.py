@@ -373,27 +373,6 @@ def mix_to_proportions(
     )
 
 
-def mix_to_proportions_sql(table: str, group_col: str, k_per_group: dict,
-                           id_col: str, seed: int = 42) -> str:
-    """DuckDB mirror: same poly31+affine key, the k_g budgets embedded as
-    a VALUES table (compute them with mix_proportion_counts on the same
-    group counts)."""
-    key = _sample_key_sql(id_col, seed)
-    vals = ", ".join(f"('{g}', {int(n)})"
-                     for g, n in sorted(k_per_group.items()))
-    return f"""
-SELECT * EXCLUDE (_rn, _k) FROM (
-  SELECT t.*, lim._k, {key} AS sample_key,
-         row_number() OVER (
-           PARTITION BY t.{group_col}
-           ORDER BY {key} ASC, t.{id_col} ASC) AS _rn
-  FROM {table} t
-  JOIN (VALUES {vals}) AS lim({group_col}, _k)
-    ON t.{group_col} = lim.{group_col}
-) WHERE _rn <= _k
-"""
-
-
 def sample_weighted_k(
     df: DataFrame,
     k: int,

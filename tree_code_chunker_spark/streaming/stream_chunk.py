@@ -122,12 +122,12 @@ def run_stream_knn(
 ):
     """Streaming kNN: an unbounded query stream probes a static corpus.
 
-    The ring-kNN planner needs a driver-side step per batch (SAT radius
-    planning), so this runs via foreachBatch rather than a pure
-    declarative stream — the corpus side (cell projection + histogram
-    SAT) is a prebuilt operators.knn.KnnIndex, built ONCE and amortized
-    across every micro-batch.  foreachBatch is only AT-LEAST-once, so the
-    write is made idempotent: each batch overwrites its own
+    Each micro-batch is one knn_ring request — one mapInPandas over the
+    batch's queries, no driver-side step — against a prebuilt
+    operators.knn.KnnIndex (the corpus arrays and SATs, broadcast ONCE
+    and amortized across every micro-batch).  It runs via foreachBatch
+    for the write: foreachBatch is only AT-LEAST-once, so the write is
+    made idempotent: each batch overwrites its own
     `_batch_id=<n>` partition (dynamic partition overwrite) — a replayed
     batch rewrites identical rows instead of duplicating them.
     batch==stream equality is pinned by
