@@ -29,7 +29,8 @@ from __future__ import annotations
 import re
 from typing import Iterable, Iterator
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 
 from ..config import IMPORT_HEADER_CAP, MAX_SIBLINGS
 from ..functions.doccomment import clean_doc_comment, clean_python_docstring, is_doc_comment
@@ -543,8 +544,10 @@ def chunk_documents_with_context(
     options_col: str | None = None,
 ):
     """Fused pipeline: chunk (W1-W4) + entities + scope + context + format,
-    ONE mapInPandas pass per document (SURVEY.md §4.2: fuse the pandas UDFs
-    to cross the JVM<->Python boundary once).
+    ONE mapInArrow pass (SURVEY.md §4.2: fuse the UDFs to cross the
+    JVM<->Python boundary once).  Each Arrow batch is chunked whole by
+    chunker.chunk_arrow_batch; the entity, scope and context work then runs
+    per document over that document's chunks.
 
     Input: documents (doc_id, spans[, filepath][, lang][, options]).
     Output: one row per chunk with full nested context (schema ≙ reference
@@ -556,124 +559,124 @@ def chunk_documents_with_context(
     (codechunk.go:341-358, see chunker.merge_row_options); sibling_detail
     'none' returns empty siblings (codechunk.go:653-657).
     """
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
     from ..config import ChunkOptions
-    from .chunker import chunk_spans_py, merge_row_options, serialize_document
+    from .chunker import chunk_arrow_batch, merge_row_options
 
     base = ChunkOptions(
         max_chunk_size=max_size, overlap_lines=overlap_lines,
         context_mode=context_mode, filter_imports=filter_imports,
         sibling_detail=sibling_detail, language=language,
     )
+    schema = DataType.fromDDL(ENRICHED_SCHEMA)
+    arrow_schema = to_arrow_schema(schema)
 
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "doc_id", "chunk_index", "total_chunks", "text",
-            "contextualized_text", "byte_start", "byte_end", "line_start",
-            "line_end", "nws_size", "is_partial", "lang", "scope",
-            "entities", "siblings", "imports", "spans", "parse_error",
-            "error",
-        ]
+    def error_row(doc_id, e):
+        # per-row isolation, same contract as chunk_documents: a bad
+        # document yields ONE error row, the job never fails
+        # (ChunkBatch semantics, codechunk.go:363-375)
+        return {
+            "doc_id": doc_id, "chunk_index": -1, "total_chunks": 0,
+            "text": "", "contextualized_text": "", "byte_start": 0,
+            "byte_end": 0, "line_start": 0, "line_end": 0,
+            "nws_size": 0, "is_partial": False, "lang": "",
+            "scope": [], "entities": [], "siblings": [], "imports": [],
+            "spans": [], "parse_error": None, "error": str(e)[:500],
+        }
 
-        def error_row(doc_id, e):
-            # per-row isolation, same contract as chunk_documents: a bad
-            # document yields ONE error row, the job never fails
-            # (ChunkBatch semantics, codechunk.go:363-375)
-            return {
-                "doc_id": doc_id, "chunk_index": -1, "total_chunks": 0,
-                "text": "", "contextualized_text": "", "byte_start": 0,
-                "byte_end": 0, "line_start": 0, "line_end": 0,
-                "nws_size": 0, "is_partial": False, "lang": "",
-                "scope": [], "entities": [], "siblings": [], "imports": [],
-                "spans": [], "parse_error": None, "error": str(e)[:500],
-            }
+    def column(batch, name):
+        return (batch.column(name).to_pylist() if name
+                else [None] * batch.num_rows)
 
-        for pdf in batches:
+    def fn(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            n = batch.num_rows
+            doc_ids = batch.column("doc_id").to_pylist()
+            paths, langs = column(batch, filepath_col), column(batch, lang_col)
+            opts = [merge_row_options(base, ro)
+                    for ro in column(batch, options_col)]
+            ck = chunk_arrow_batch(
+                batch, np.array([o.max_chunk_size for o in opts], np.int64))
+            chunks = ck.rows.to_pylist()
+            bounds = np.searchsorted(ck.row_doc, np.arange(n + 1))
             rows = []
-            doc_ids = pdf["doc_id"].tolist()
-            span_lists = pdf["spans"].tolist()
-            paths = pdf[filepath_col].tolist() if filepath_col else [""] * len(doc_ids)
-            langs = pdf[lang_col].tolist() if lang_col else [None] * len(doc_ids)
-            row_opts = pdf[options_col].tolist() if options_col else [None] * len(doc_ids)
-            for doc_id, spans, filepath, lang0, ro in zip(
-                    doc_ids, span_lists, paths, langs, row_opts):
-                try:
-                    rows.extend(one_doc(doc_id, spans, filepath, lang0, ro))
-                except Exception as e:  # row-level isolation
-                    rows.append(error_row(doc_id, e))
-            yield pd.DataFrame(rows, columns=cols)
+            for d in range(n):
+                doc_chunks = chunks[bounds[d]:bounds[d + 1]]
+                if ck.err[d]:
+                    rows.append(error_row(doc_ids[d], doc_chunks[0]["error"]))
+                    continue
+                code = ck.buf[ck.doc_lo[d]:ck.doc_hi[d]].tobytes().decode(
+                    "utf-8", errors="replace")
+                try:  # row-level isolation
+                    rows.extend(one_doc(doc_ids[d], code, doc_chunks,
+                                        paths[d], langs[d], opts[d]))
+                except Exception as e:
+                    rows.append(error_row(doc_ids[d], e))
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
-    def one_doc(doc_id, spans, filepath, lang0, ro):
-                doc_rows = []
-                o = merge_row_options(base, ro)
-                spans = list(spans)
-                kinds = [s["kind"] for s in spans]
-                texts = [s["text"] for s in spans]
-                refs = [s["media_ref"] for s in spans]
-                orders = [s["offset"] for s in spans]
-                chunks = chunk_spans_py(kinds, texts, refs, orders,
-                                        o.max_chunk_size)
-                code_b, _, _ = serialize_document(kinds, texts, refs)
-                code = code_b.decode("utf-8", errors="replace")
-                filepath = filepath or ""
-                lang = (o.language or lang0
-                        or detect_language(code, filepath or None))
-                ents = parse_entities(code, lang, doc_id)
-                perr = parse_error_for(code, lang)
-                parents = assign_scope_parents(ents)
-                prev_text = None
-                for c in chunks:
-                    bs, be = c["byte_start"], c["byte_end"]
-                    if o.context_mode == "none":
-                        scope, ce, sibs, imps = [], [], [], []
-                    else:
-                        scope = [
-                            {"name": e["name"], "type": e["type"],
-                             "signature": e["signature"]}
-                            for e in scope_chain_at(ents, parents, bs)
-                        ]
-                        ce = entities_in_range(ents, bs, be)
-                        sibs = ([] if o.sibling_detail == "none"
-                                else siblings_for(ents, bs, be))
-                        imps = relevant_imports(ce, ents, o.filter_imports)
-                    ov = overlap_from_prev(prev_text, o.overlap_lines) \
-                        if c["chunk_index"] > 0 else ""
-                    # ContextModeNone zeroes the whole context INCLUDING the
-                    # filepath header; formatting is still applied so the
-                    # overlap block survives (codechunk.go:161-185)
-                    ctext = format_chunk_with_context(
-                        c["text"],
-                        "" if o.context_mode == "none" else filepath,
-                        scope,
-                        [{"name": e["name"], "type": e["type"],
-                          "signature": e["signature"]} for e in ce],
-                        imps, sibs, ov,
-                    )
-                    prev_text = c["text"]
-                    doc_rows.append({
-                        "doc_id": doc_id,
-                        "chunk_index": c["chunk_index"],
-                        "total_chunks": c["total_chunks"],
-                        "text": c["text"],
-                        "contextualized_text": ctext,
-                        "byte_start": bs, "byte_end": be,
-                        "line_start": c["line_start"],
-                        "line_end": c["line_end"],
-                        "nws_size": c["nws_size"],
-                        "is_partial": c["is_partial"],
-                        "lang": lang,
-                        "scope": scope,
-                        "entities": [
-                            {"name": e["name"], "type": e["type"],
-                             "signature": e["signature"],
-                             "docstring": e.get("docstring"),
-                             "is_partial": e["is_partial"]} for e in ce
-                        ],
-                        "siblings": sibs,
-                        "imports": imps,
-                        "spans": c["spans"],
-                        "parse_error": perr,
-                        "error": None,
-                    })
-                return doc_rows
+    def one_doc(doc_id, code, chunks, filepath, lang0, o):
+        doc_rows = []
+        filepath = filepath or ""
+        lang = o.language or lang0 or detect_language(code, filepath or None)
+        ents = parse_entities(code, lang, doc_id)
+        perr = parse_error_for(code, lang)
+        parents = assign_scope_parents(ents)
+        prev_text = None
+        for c in chunks:
+            bs, be = c["byte_start"], c["byte_end"]
+            if o.context_mode == "none":
+                scope, ce, sibs, imps = [], [], [], []
+            else:
+                scope = [
+                    {"name": e["name"], "type": e["type"],
+                     "signature": e["signature"]}
+                    for e in scope_chain_at(ents, parents, bs)
+                ]
+                ce = entities_in_range(ents, bs, be)
+                sibs = ([] if o.sibling_detail == "none"
+                        else siblings_for(ents, bs, be))
+                imps = relevant_imports(ce, ents, o.filter_imports)
+            ov = overlap_from_prev(prev_text, o.overlap_lines) \
+                if c["chunk_index"] > 0 else ""
+            # ContextModeNone zeroes the whole context INCLUDING the
+            # filepath header; formatting is still applied so the
+            # overlap block survives (codechunk.go:161-185)
+            ctext = format_chunk_with_context(
+                c["text"],
+                "" if o.context_mode == "none" else filepath,
+                scope,
+                [{"name": e["name"], "type": e["type"],
+                  "signature": e["signature"]} for e in ce],
+                imps, sibs, ov,
+            )
+            prev_text = c["text"]
+            doc_rows.append({
+                "doc_id": doc_id,
+                "chunk_index": c["chunk_index"],
+                "total_chunks": c["total_chunks"],
+                "text": c["text"],
+                "contextualized_text": ctext,
+                "byte_start": bs, "byte_end": be,
+                "line_start": c["line_start"],
+                "line_end": c["line_end"],
+                "nws_size": c["nws_size"],
+                "is_partial": c["is_partial"],
+                "lang": lang,
+                "scope": scope,
+                "entities": [
+                    {"name": e["name"], "type": e["type"],
+                     "signature": e["signature"],
+                     "docstring": e.get("docstring"),
+                     "is_partial": e["is_partial"]} for e in ce
+                ],
+                "siblings": sibs,
+                "imports": imps,
+                "spans": c["spans"],
+                "parse_error": perr,
+                "error": None,
+            })
+        return doc_rows
 
-    return df.mapInPandas(fn, schema=ENRICHED_SCHEMA)
+    return df.mapInArrow(fn, schema=schema)

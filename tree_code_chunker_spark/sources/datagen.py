@@ -3,7 +3,8 @@
 FIXTURES.md shapes: interleaved text+media `documents` (BASELINE input_hint
 schema), integer-grid `polygons` (convex + concave, one over a hot cell), and
 `knn_queries`.  Everything derives from numpy RandomState(seed) — same rows
-every run, every machine.
+every run, every machine.  Every frame is built from an Arrow table
+(``_arrow_frame``), so it plans as a ``LocalTableScan``.
 
 Text spans are code-like blocks in 6 pseudo-language styles mirroring the
 reference language set (reference/types.go:13-20) with doc-comment prefixes
@@ -14,7 +15,10 @@ boundary / oversized-line-split paths of the window algebra.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 from ..operators.geo import HOT_CENTERS
 
@@ -31,6 +35,19 @@ BODY_WORDS = [
     "result", "value", "index", "total", "count", "buffer", "offset",
     "window", "merge", "chunk", "span", "cell", "tile", "query",
 ]
+
+
+def _arrow_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """A DataFrame of `rows` (tuples in `schema`'s column order) built from
+    an Arrow table.  It plans as a LocalTableScan; built from the Python
+    list itself, every action on it would pickle each row through a Python
+    map first."""
+    struct = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, struct)
 
 
 def _text_span(rng: np.random.RandomState, target_nws: int) -> str:
@@ -72,7 +89,7 @@ def gen_documents(spark: SparkSession, n_docs: int, seed: int = 42,
         rows.append((f"doc{d:08d}", spans))
     schema = ("doc_id string, spans array<struct<kind:string,text:string,"
               "media_ref:string,offset:int>>")
-    return spark.createDataFrame(rows, schema)
+    return _arrow_frame(spark, rows, schema)
 
 
 def polygon_rings(n_polygons: int, seed: int = 43) -> list[tuple[str, list]]:
@@ -111,7 +128,7 @@ def gen_polygons(spark: SparkSession, n_polygons: int, seed: int = 43) -> DataFr
             for i, (pid, ring) in enumerate(polygon_rings(n_polygons, seed))]
     schema = ("polygon_id string, ring array<struct<qlat:bigint,qlon:bigint>>, "
               "category string")
-    return spark.createDataFrame(rows, schema)
+    return _arrow_frame(spark, rows, schema)
 
 
 def gen_knn_queries(spark: SparkSession, n_queries: int, seed: int = 44) -> DataFrame:
@@ -126,7 +143,7 @@ def gen_knn_queries(spark: SparkSession, n_queries: int, seed: int = 44) -> Data
             qlat = int(rng.randint(0, 65536))
             qlon = int(rng.randint(0, 65536))
         rows.append((f"q{q:05d}", qlat, qlon))
-    return spark.createDataFrame(rows, "query_id string, qlat bigint, qlon bigint")
+    return _arrow_frame(spark, rows, "query_id string, qlat bigint, qlon bigint")
 
 
 def polygon_rings_holes(n_polygons: int, seed: int = 47) -> list:
@@ -169,4 +186,4 @@ def gen_polygons_holes(spark: SparkSession, n_polygons: int,
     rows = list(polygon_rings_holes(n_polygons, seed))
     schema = ("polygon_id string, "
               "rings array<array<struct<qlat:bigint,qlon:bigint>>>")
-    return spark.createDataFrame(rows, schema)
+    return _arrow_frame(spark, rows, schema)
