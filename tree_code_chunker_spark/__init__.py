@@ -18,3 +18,8 @@ pandas/Arrow UDFs; no per-row Python in hot paths; no custom Catalyst rules.
 """
 
 __version__ = "0.1.0"
+
+from tree_code_chunker_spark.plans.worker import setup_python_worker
+
+# once per process; acts only inside a Python worker (see plans/worker.py)
+setup_python_worker()
