@@ -280,10 +280,10 @@ FROM points JOIN rects
 
 
 def q_pip_anti(spark, sf_dir):
-    """Points contained in NO polygon (the spatial filter-out): pip_join
-    finds the matches off the broadcast classified cover, then one LEFT
-    ANTI equi-join on the point identity drops them — probe side still
-    never shuffled by the PIP stage itself."""
+    """Points contained in NO polygon (the spatial filter-out): one
+    narrow filter keeps the points whose pip_join probe of the broadcast
+    classified cover finds no polygon — no join, no exchange; the probe
+    side is never shuffled."""
     from tree_code_chunker_spark.operators.pip import pip_anti_join
 
     pts = _points(spark, sf_dir)

@@ -514,7 +514,6 @@ def test_stream_pip_matches_batch(spark, tmp_path):
 
     from tree_code_chunker_spark.operators.pip import (
         build_polygon_index, pip_join)
-    from tree_code_chunker_spark.streaming.stream_chunk import stream_pip
 
     rng = np.random.RandomState(31)
     pts_rows = [(int(i), 0, int(rng.randint(0, 60000)),
@@ -537,7 +536,8 @@ def test_stream_pip_matches_batch(spark, tmp_path):
     src = str(tmp_path / "pip_pts")
     pts.write.parquet(src)
     stream = spark.readStream.schema(pts.schema).parquet(src)
-    out = stream_pip(stream, idx).select("doc_id", "span_pos", "polygon_id")
+    out = pip_join(stream, index=idx).select("doc_id", "span_pos",
+                                             "polygon_id")
     q = (out.writeStream.format("memory").queryName("spip")
          .outputMode("append")
          .option("checkpointLocation", str(tmp_path / "ck_pip"))
@@ -735,7 +735,6 @@ def test_stream_dwithin_matches_batch(spark, tmp_path):
     import numpy as np
 
     from tree_code_chunker_spark.operators.spatial import dwithin_join
-    from tree_code_chunker_spark.streaming.stream_chunk import stream_dwithin
 
     rng = np.random.RandomState(37)
     pts_rows = [(int(i), 0, int(rng.randint(0, 65536)),
@@ -754,7 +753,7 @@ def test_stream_dwithin_matches_batch(spark, tmp_path):
     src = str(tmp_path / "dw_pts")
     pts.write.parquet(src)
     stream = spark.readStream.schema(pts.schema).parquet(src)
-    out = stream_dwithin(stream, queries, radius)
+    out = dwithin_join(stream, queries, radius, broadcast_b=True)
     q = (out.writeStream.format("memory").queryName("sdw")
          .outputMode("append")
          .option("checkpointLocation", str(tmp_path / "ck_dw"))
@@ -843,9 +842,6 @@ def test_stream_dwithin_geo_matches_batch(spark, tmp_path):
     import numpy as np
 
     from tree_code_chunker_spark.operators.spatial import dwithin_geo
-    from tree_code_chunker_spark.streaming.stream_chunk import (
-        stream_dwithin_geo,
-    )
 
     rng = np.random.RandomState(41)
     pts_rows = [(int(i), 0, float(rng.uniform(-85, 85)),
@@ -865,7 +861,7 @@ def test_stream_dwithin_geo_matches_batch(spark, tmp_path):
     src = str(tmp_path / "dwg_pts")
     pts.write.parquet(src)
     stream = spark.readStream.schema(pts.schema).parquet(src)
-    out = stream_dwithin_geo(stream, queries, radius_m)
+    out = dwithin_geo(stream, queries, radius_m, broadcast_b=True)
     q = (out.writeStream.format("memory").queryName("sdwg")
          .outputMode("append")
          .option("checkpointLocation", str(tmp_path / "ck_dwg"))

@@ -182,19 +182,21 @@ def test_pip_join_argument_validation(spark):
         pip_join(pts)
 
 
-def test_pip_join_off_grid_and_null_points_match_nothing(spark):
-    """Null and off-grid coordinates produce no row and no error.  The
-    rectangle covers cells (1..5, 1..5) at the default res 7, so a key
-    packed without the range guard aliases qlon = 2^16 + 2000 (cell
-    column 131) into a covered cell, and an int32 narrowing of
-    qlat = 2^40 + 2000 wraps to 2000 (a Spark-side int cast of it fails
-    the job under ANSI mode)."""
-    from tree_code_chunker_spark.operators.pip import (
-        build_polygon_index, pip_join)
+@pytest.mark.parametrize(
+    "op", ["pip_join", "pip_anti_join", "polygon_distance_join"])
+def test_pip_join_off_grid_and_null_points_match_nothing(spark, op):
+    """Null and off-grid coordinates produce no row and no error: no
+    pip_join or polygon_distance_join row, and pip_anti_join passes them
+    through unchanged.  The rectangle covers cells (1..5, 1..5) at the
+    default res 7, so a key packed without the range guard aliases
+    qlon = 2^16 + 2000 (cell column 131) into a covered cell, and an
+    int32 narrowing of qlat = 2^40 + 2000 wraps to 2000 (a Spark-side
+    int cast of it fails the job under ANSI mode)."""
+    from tree_code_chunker_spark.operators import pip
 
     ring = [(1000, 1000), (1000, 3000), (3000, 3000), (3000, 1000),
             (1000, 1000)]
-    idx = build_polygon_index(spark.createDataFrame(
+    idx = pip.build_polygon_index(spark.createDataFrame(
         [("rect", ring)],
         "polygon_id string, ring array<struct<qlat:bigint,qlon:bigint>>"))
     g = 1 << 16
@@ -206,8 +208,60 @@ def test_pip_join_off_grid_and_null_points_match_nothing(spark):
     pts = spark.createDataFrame(
         [(d, 0, la, lo) for d, la, lo in rows],
         "doc_id string, span_pos long, qlat long, qlon long")
-    got = [tuple(r) for r in pip_join(pts, index=idx).collect()]
-    assert got == [("hit", 0, "rect", 2000, 2000)]
+    got = sorted(map(tuple, getattr(pip, op)(pts, index=idx).collect()),
+                 key=repr)
+    want = {
+        "pip_join": [("hit", 0, "rect", 2000, 2000)],
+        "pip_anti_join": sorted(((d, 0, la, lo) for d, la, lo in rows[1:]),
+                                key=repr),
+        "polygon_distance_join": [("hit", 0, "rect", 0.0)],
+    }[op]
+    assert got == want
+
+
+def test_pip_anti_join_keeps_duplicate_key_and_null_points(spark):
+    """Each point is judged by its own coordinates: an uncovered point
+    that shares its (doc_id, span_pos) with a covered one is kept, and so
+    is a point with a null coordinate."""
+    from tree_code_chunker_spark.operators.pip import (
+        build_polygon_index, pip_anti_join)
+
+    ring = [(1000, 1000), (1000, 3000), (3000, 3000), (3000, 1000),
+            (1000, 1000)]
+    idx = build_polygon_index(spark.createDataFrame(
+        [("rect", ring)],
+        "polygon_id string, ring array<struct<qlat:bigint,qlon:bigint>>"))
+    pts = spark.createDataFrame(
+        [("d", 0, 2000, 2000), ("d", 0, 50000, 50000), ("n", 0, None, 2000)],
+        "doc_id string, span_pos long, qlat long, qlon long")
+    got = sorted(map(tuple, pip_anti_join(pts, index=idx).collect()),
+                 key=repr)
+    assert got == sorted([("d", 0, 50000, 50000), ("n", 0, None, 2000)],
+                         key=repr)
+
+
+def test_polygon_operator_plans_have_no_join(spark, plan_nodes):
+    """pip_anti_join and polygon_distance_join are narrow passes over the
+    points: no exchange and no join.  nearest_polygon adds only its top-1
+    window: exactly one Exchange and one Window."""
+    from tree_code_chunker_spark.operators.pip import (
+        build_polygon_index, nearest_polygon, pip_anti_join,
+        polygon_distance_join)
+    from tree_code_chunker_spark.sources.datagen import gen_polygons
+
+    idx = build_polygon_index(gen_polygons(spark, 30, seed=43))
+    pts = spark.createDataFrame(
+        [(f"d{i}", i, (i * 733) % 65536, (i * 577) % 65536)
+         for i in range(64)],
+        "doc_id string, span_pos long, qlat long, qlon long")
+    for df in (pip_anti_join(pts, index=idx),
+               polygon_distance_join(pts, radius=400, index=idx)):
+        nodes = plan_nodes(df)
+        assert not [n for n in nodes if "Exchange" in n or "Join" in n], nodes
+    nodes = plan_nodes(nearest_polygon(pts, radius=1200, index=idx))
+    assert nodes.count("Exchange") == 1, nodes
+    assert nodes.count("Window") == 1, nodes
+    assert not [n for n in nodes if "Join" in n], nodes
 
 
 def test_pip_lookup_is_one_narrow_job(spark, plan_nodes):

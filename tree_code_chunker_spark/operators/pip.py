@@ -1,4 +1,5 @@
-"""Batched point-in-polygon (PIP) join.
+"""Batched point-in-polygon (PIP) operators: pip_join, pip_anti_join,
+polygon_distance_join and nearest_polygon.
 
 Shape (SURVEY.md §2.4): candidate-prune by cell bucket + exact predicate —
 the 2-D generalization of the reference's point-in-interval scope join
@@ -10,14 +11,14 @@ Physical plan, designed for 10^12 points x 10^3..10^5 polygons:
     pass as FULL (all corners inside, no edge crossing it) or BOUNDARY
     (fully-outside cells dropped), sorted by the packed cell key and
     broadcast once together with the padded edge tensors.
- 2. **Prune**: one narrow projection over the points — no join, no
-    exchange.  A scalar pandas UDF packs each point's res-cell key and
-    `searchsorted`s it into the broadcast cover, so the 10^12-row point
-    side never moves.
- 3. **Exact**: inside the same UDF, FULL-cell candidates are accepted
-    outright; BOUNDARY-cell candidates go through an integer ray-cast
-    (even-odd rule, half-open edges) over the edge tensors.  `explode`
-    turns each point's matching polygon ids into rows.
+ 2. **Prune**: one narrow pass over the points — no join, no exchange.
+    `_cover_pairs` packs each point's res-cell key (plus, for the
+    distance join, its Chebyshev-k neighbour cells) and `searchsorted`s
+    it into the broadcast cover, so the 10^12-row point side never moves.
+ 3. **Exact**: in the same Python pass.  pip_join / pip_anti_join accept
+    FULL-cell candidates outright and ray-cast only BOUNDARY-cell
+    candidates over the edge tensors; polygon_distance_join computes
+    containment and edge distance for every candidate.
 
 Determinism: polygons and points live on the integer grid (config.GRID_BITS);
 the crossing test is integer cross-multiplication — no float division, so
@@ -35,12 +36,16 @@ from functools import cached_property
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType, StringType
+from pyspark.sql.types import (
+    ArrayType, DoubleType, StringType, StructField, StructType)
 
 from ..config import GRID_BITS
+from .geo import kring_offsets
 
 DEFAULT_COVER_RES = 7
+DIST_DECIMALS = 6  # per-edge d2 and final dist rounding (== DuckDB mirror)
 
 
 def _rings_norm_col(polygons: DataFrame):
@@ -342,10 +347,93 @@ def _ray_cast_pairs(edges, ix: np.ndarray, py: np.ndarray,
     return out
 
 
+def _on_grid(la: np.ndarray, lo: np.ndarray) -> np.ndarray:
+    """Positions of the points whose coordinates both lie in
+    [0, 2^GRID_BITS); a null (NaN) coordinate fails the test too.  Run it
+    BEFORE any narrowing or key packing: an off-grid coordinate would
+    overflow the cast, or its cell would alias into the next row of
+    cells."""
+    grid = 1 << GRID_BITS
+    return np.flatnonzero((la >= 0) & (la < grid) & (lo >= 0) & (lo < grid))
+
+
+def _cover_pairs(ckey: np.ndarray, res: int, py: np.ndarray, px: np.ndarray,
+                 offsets) -> tuple[np.ndarray, np.ndarray]:
+    """CSR candidate pairs of on-grid points against the sorted cover
+    keys `ckey`: pair j is (point rep[j], cover position pos[j]).  Each
+    point probes the cell (cy + dy, cx + dx) of every offset with one
+    searchsorted range; a cell off the grid is skipped (its packed key
+    would alias into the next row of cells).  Pairs come out offset-major
+    and point-ascending within one offset."""
+    shift = GRID_BITS - res
+    cy = (py >> shift).astype(np.int64)
+    cx = (px >> shift).astype(np.int64)
+    top = 1 << res
+    reps, poss = [], []
+    for dy, dx in offsets:
+        y, x = cy + dy, cx + dx
+        pt = np.flatnonzero((y >= 0) & (y < top) & (x >= 0) & (x < top))
+        key = (y[pt] << res) | x[pt]
+        first = np.searchsorted(ckey, key, "left")
+        n = np.searchsorted(ckey, key, "right") - first
+        reps.append(np.repeat(pt, n))
+        poss.append(np.arange(n.sum()) + np.repeat(first - (np.cumsum(n) - n), n))
+    return np.concatenate(reps), np.concatenate(poss)
+
+
+def _dist_pairs(edges, n_edges: np.ndarray, ix: np.ndarray, py: np.ndarray,
+                px: np.ndarray) -> np.ndarray:
+    """Grid distance of point i (int64 py[i], px[i]) to polygon ix[i]:
+    0.0 when the even-odd crossings over its edges say inside, else the
+    minimum point-to-segment distance to any of its edges (shell AND hole
+    edges, so a point inside a hole gets its hole-boundary distance).
+    One vectorized pass per edge column of the padded int32 [P, E] edge
+    tables; padding rows are masked with the per-polygon edge count
+    `n_edges` — a padding "segment" at (0, 0) would otherwise become a
+    false nearest edge.
+
+    Per-edge squared distances are float64 with the projection formula
+    of the DuckDB mirror (integer inputs < 2^17, products exact; the one
+    division rounds once) and rounded to DIST_DECIMALS BEFORE the min, so
+    engine and oracle agree at ties and at the radius boundary."""
+    y1, x1, y2, x2 = edges
+    crossings = np.zeros(len(ix), dtype=np.int32)
+    min_d2 = np.full(len(ix), np.inf)
+    for e in range(y1.shape[1]):
+        valid = e < n_edges[ix]
+        if not valid.any():
+            continue
+        ay = y1[ix, e].astype(np.int64)
+        ax = x1[ix, e].astype(np.int64)
+        by = y2[ix, e].astype(np.int64)
+        bx = x2[ix, e].astype(np.int64)
+        # even-odd crossing (same half-open rule as pip_join)
+        straddle = (ay > py) != (by > py)
+        dy = by - ay
+        lhs = (px - ax) * dy
+        rhs = (py - ay) * (bx - ax)
+        crossings += (valid & straddle
+                      & np.where(dy > 0, lhs < rhs, lhs > rhs))
+        # point-to-segment squared distance (projection clamp)
+        l2 = (bx - ax) ** 2 + (by - ay) ** 2
+        tn = (px - ax) * (bx - ax) + (py - ay) * (by - ay)
+        d2a = (px - ax) ** 2 + (py - ay) ** 2
+        d2b = (px - bx) ** 2 + (py - by) ** 2
+        with np.errstate(divide="ignore", invalid="ignore"):
+            d2m = d2a - tn.astype(np.float64) ** 2 / l2
+        d2 = np.where((l2 == 0) | (tn <= 0), d2a,
+                      np.where(tn >= l2, d2b, d2m))
+        d2 = np.round(d2, DIST_DECIMALS)
+        min_d2 = np.where(valid, np.minimum(min_d2, d2), min_d2)
+    inside = (crossings & 1).astype(bool)
+    return np.where(inside, 0.0,
+                    np.round(np.sqrt(np.maximum(min_d2, 0.0)), DIST_DECIMALS))
+
+
 class PolygonIndex:
-    """Prepared build side of the PIP join: packed edge tensors and the
-    classified cover (sorted by res-cell key), both broadcast to executors
-    once.
+    """Prepared build side of the PIP operators: packed edge tensors and
+    the classified cover (sorted by res-cell key), both broadcast to
+    executors once.
 
     Build ONCE per polygon set, probe many times — on a real cluster the
     polygon index outlives thousands of point batches, so the collect/
@@ -361,10 +449,8 @@ class PolygonIndex:
         self.ids = ids
         sc = spark.sparkContext
         self.edges_bc = sc.broadcast((Y1, X1, Y2, X2))
-        # per-polygon VALID edge counts: the padded tensor rows are inert
-        # for the crossing test (y1==y2 never straddles) but a DISTANCE
-        # kernel must mask them — a padding "segment" at (0,0) would
-        # otherwise become a false nearest edge
+        # per-polygon VALID edge counts, which the distance kernel needs
+        # to mask the padded edge rows (see _dist_pairs)
         self.n_edges_bc = sc.broadcast(np.array(
             [sum(len(ys) - 1 for ys, _ in self.pack[p]) for p in ids],
             dtype=np.int64))
@@ -383,8 +469,9 @@ class PolygonIndex:
     @cached_property
     def cover_ix(self) -> DataFrame:
         """The classified cover as a DataFrame (polygon_id, poly_ix,
-        cov_cy, cov_cx, is_full) for plans that join on cells
-        (polygon_distance_join); pip_join probes `cover_bc` instead."""
+        cov_cy, cov_cx, is_full).  No operator reads it — every PIP
+        operator probes `cover_bc`; it is kept for the benchmark's cover
+        diagnostics (`pip.cover_rows`, `pip.candidates`)."""
         key, pix, full = self.cover
         cover_pdf = pd.DataFrame({
             "polygon_id": self.id_str[pix],
@@ -405,6 +492,46 @@ def build_polygon_index(polygons: DataFrame,
     return PolygonIndex(polygons.sparkSession, polygons, res)
 
 
+def _index(op: str, points: DataFrame, polygons: DataFrame | None, res: int,
+           index: PolygonIndex | None) -> PolygonIndex:
+    if index is not None:
+        return index
+    if polygons is None:
+        raise ValueError(f"{op} needs a build side: pass polygons= "
+                         "and/or index=")
+    return PolygonIndex(points.sparkSession, polygons, res)
+
+
+def _hits(idx: PolygonIndex):
+    """Scalar pandas UDF (qlat, qlon) -> array<string>: the ids of the
+    polygons of `idx` containing each point, [] for a null or off-grid
+    point.  Probes the broadcast cover at the point's own cell, accepts
+    FULL-cell candidates outright and ray-casts only BOUNDARY-cell
+    candidates against the broadcast padded edge tensors."""
+    cover_b, edges_b, res = idx.cover_bc, idx.edges_bc, idx.res
+
+    @F.pandas_udf(ArrayType(StringType()))
+    def hits(qlat: pd.Series, qlon: pd.Series) -> pd.Series:
+        ckey, cpix, cfull, ids = cover_b.value
+        la, lo = qlat.to_numpy(), qlon.to_numpy()
+        if not len(la):
+            return pd.Series([], dtype=object)
+        row = _on_grid(la, lo)
+        py = la[row].astype(np.int32)
+        px = lo[row].astype(np.int32)
+        rep, pos = _cover_pairs(ckey, res, py, px, [(0, 0)])
+        pix = cpix[pos]
+        # full cells accept outright; only boundary pairs are ray-cast
+        acc = cfull[pos]
+        bnd = np.flatnonzero(~acc)
+        acc[bnd] = _ray_cast_pairs(edges_b.value, pix[bnd],
+                                   py[rep[bnd]], px[rep[bnd]])
+        per_row = np.bincount(row[rep[acc]], minlength=len(la))
+        return pd.Series(np.split(ids[pix[acc]], np.cumsum(per_row)[:-1]))
+
+    return hits
+
+
 def pip_join(
     points: DataFrame,
     polygons: DataFrame = None,
@@ -419,49 +546,12 @@ def pip_join(
     (outside [0, 2^GRID_BITS) on either axis) match nothing.
 
     Physical plan: one narrow projection over the points, no join and no
-    exchange — `explode` of a scalar pandas UDF that probes the index's
-    broadcast cover (searchsorted on the res-cell key), accepts FULL-cell
-    candidates outright and ray-casts only BOUNDARY-cell candidates
-    against the broadcast padded edge tensors.  The build side lives in
-    PolygonIndex — pass one in to amortize the collect/classify/broadcast
-    across probe batches (it is polygon-only, independent of the points).
+    exchange — `explode` of the `_hits` pandas UDF.  The build side lives
+    in PolygonIndex — pass one in to amortize the collect/classify/
+    broadcast across probe batches (it is polygon-only, independent of
+    the points).
     """
-    if polygons is None and index is None:
-        raise ValueError("pip_join needs a build side: pass polygons= "
-                         "and/or index=")
-    idx = (index if index is not None
-           else PolygonIndex(points.sparkSession, polygons, res))
-    cover_b, edges_b = idx.cover_bc, idx.edges_bc
-    res, shift = idx.res, GRID_BITS - idx.res
-    grid = 1 << GRID_BITS
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def hits(qlat: pd.Series, qlon: pd.Series) -> pd.Series:
-        ckey, cpix, cfull, ids = cover_b.value
-        la, lo = qlat.to_numpy(), qlon.to_numpy()
-        if not len(la):
-            return pd.Series([], dtype=object)
-        # range guard BEFORE any narrowing or key packing: an off-grid
-        # coordinate would overflow the cast, or its cell would alias
-        # into the next row of cells
-        row = np.flatnonzero((la >= 0) & (la < grid) & (lo >= 0) & (lo < grid))
-        py = la[row].astype(np.int32)
-        px = lo[row].astype(np.int32)
-        key = ((py >> shift).astype(np.int64) << res) | (px >> shift)
-        first = np.searchsorted(ckey, key, "left")
-        n = np.searchsorted(ckey, key, "right") - first
-        # CSR expansion: pair j is (point rep[j], cover entry pos[j])
-        rep = np.repeat(np.arange(len(row)), n)
-        pos = np.arange(len(rep)) + np.repeat(first - (np.cumsum(n) - n), n)
-        pix = cpix[pos]
-        # full cells accept outright; only boundary pairs are ray-cast
-        acc = cfull[pos]
-        bnd = np.flatnonzero(~acc)
-        acc[bnd] = _ray_cast_pairs(edges_b.value, pix[bnd],
-                                   py[rep[bnd]], px[rep[bnd]])
-        per_row = np.bincount(row[rep[acc]], minlength=len(la))
-        return pd.Series(np.split(ids[pix[acc]], np.cumsum(per_row)[:-1]))
-
+    hits = _hits(_index("pip_join", points, polygons, res, index))
     return (
         points.filter(F.col("qlat").isNotNull() & F.col("qlon").isNotNull())
         .select(*keep_cols, F.explode(hits("qlat", "qlon")).alias("polygon_id"),
@@ -473,29 +563,20 @@ def pip_anti_join(
     points: DataFrame,
     polygons: DataFrame = None,
     res: int = DEFAULT_COVER_RES,
-    keys: tuple[str, ...] = ("doc_id", "span_pos"),
     index: PolygonIndex | None = None,
 ) -> DataFrame:
     """Points contained in NO polygon — the spatial filter-out (mask out
     covered regions, keep open water/unzoned points, etc.).
 
-    Scale shape: the ordinary pip_join finds the matches (broadcast
-    classified cover, probe never shuffled), their `keys` are distinct'd
-    (matches <= points, usually far fewer), and one LEFT ANTI equi-join on
-    `keys` drops them from the original point set — the anti join shuffles
-    on the compact key columns only, and every input column of `points`
-    passes through untouched (the anti join adds none).
-
-    `keys` must uniquely identify a point row (the engine contract's
-    doc_id/span_pos); a duplicate key would drop its innocent twin.
+    Physical plan: one narrow filter over the points,
+    `size(hits(qlat, qlon)) == 0` with pip_join's `_hits` UDF — no join,
+    no exchange, no distinct.  Each row is judged by its own coordinates,
+    so rows sharing a key never affect each other, and every row passes
+    through with all of `points`' columns, in their order.  A point with a
+    null or off-grid coordinate is in no polygon, so it is kept.
     """
-    hits = (
-        pip_join(points, polygons=polygons, res=res,
-                 keep_cols=tuple(keys), index=index)
-        .select(*keys)
-        .distinct()
-    )
-    return points.join(hits, list(keys), "left_anti")
+    hits = _hits(_index("pip_anti_join", points, polygons, res, index))
+    return points.filter(F.size(hits("qlat", "qlon")) == 0)
 
 
 def polygon_distance_join(
@@ -504,126 +585,67 @@ def polygon_distance_join(
     radius: int = 512,
     keep_cols: tuple[str, ...] = ("doc_id", "span_pos"),
     index: PolygonIndex | None = None,
-    round_to: int = 6,
 ) -> DataFrame:
     """Distance-to-polygon join (nearest-feature matching): one row per
-    (point, polygon) with grid distance <= radius — dist = 0.0 for
-    contained points, else the minimum distance to any polygon edge
-    (rounded to `round_to` dp; multi-ring geometries measure to shell AND
-    hole edges, so a point inside a hole gets its hole-boundary
-    distance).  Compose with a top-1 window for "nearest polygon".
+    (point, polygon) with grid distance <= radius — `keep_cols` +
+    polygon_id + dist, where dist = 0.0 for contained points, else the
+    minimum distance to any polygon edge (see `_dist_pairs`; rounded to
+    DIST_DECIMALS dp).  Points with a null or off-grid coordinate match
+    nothing.  Compose with a top-1 window for "nearest polygon".
 
-    Physical plan (the pip_join recipe extended by a radius collar):
-      1. prune — each classified-cover cell (full|boundary, i.e. cells
-         the polygon actually intersects) explodes to its Chebyshev-k
-         neighborhood, k = ceil(radius / cell_side), and broadcasts;
-         any point within `radius` of the polygon lies in that
-         neighborhood, so the point side is never shuffled;
-      2. exact — ONE vectorized numpy pass per Arrow batch over the
-         broadcast padded edge tensors computes crossings (even-odd,
-         containment) AND the min point-to-segment distance together;
-         padding rows are masked via the index's per-polygon edge count.
-
-    Determinism: per-edge squared distances are computed in float64 with
-    the identical projection formula the DuckDB mirror uses (integer
-    inputs < 2^17, products exact; the one division rounds once) and
-    rounded to `round_to` BEFORE the min, so engine and oracle agree at
-    ties and at the radius boundary.
+    Physical plan: a null filter and ONE mapInArrow over the points, no
+    join and no exchange.  Per Arrow batch, in numpy:
+      1. prune — `_cover_pairs` probes the index's broadcast sorted cover
+         at every cell of the point's Chebyshev-k neighbourhood,
+         k = ceil(radius / cell_side).  A point within `radius` of a
+         polygon lies within k cells of a cell the polygon intersects (a
+         FULL or BOUNDARY cover cell), so no pair is lost; np.unique
+         keeps one candidate per (point, polygon);
+      2. exact — `_dist_pairs` computes containment and edge distance
+         over the broadcast padded edge tensors; pairs within `radius`
+         gather their `keep_cols` with Arrow `take`.
 
     Reference correspondence: the 2-D metric generalization of the
     deepest-containing-scope join (scope.go:96-130) — containment is the
     dist=0 case; the collar adds the near-miss band.
     """
-    from ..config import GRID_BITS
-    from .geo import kring_offsets
-
     if radius < 1:
         raise ValueError(f"radius must be >= 1, got {radius}")
-    spark = points.sparkSession
-    idx = index if index is not None else PolygonIndex(
-        spark, polygons, DEFAULT_COVER_RES)
-    res = idx.res
-    shift = GRID_BITS - res
-    side = 1 << shift
-    k = -(-int(radius) // side)  # ceil
-    offs = kring_offsets(k)
-    n_cells = 1 << res
+    idx = _index("polygon_distance_join", points, polygons,
+                 DEFAULT_COVER_RES, index)
+    cover_b, edges_b, ne_b, res = (idx.cover_bc, idx.edges_bc,
+                                   idx.n_edges_bc, idx.res)
+    offsets = kring_offsets(-(-int(radius) // (1 << (GRID_BITS - res))))
+    keep_cols = list(keep_cols)
+    schema = StructType([*(points.schema[c] for c in keep_cols),
+                         StructField("polygon_id", StringType()),
+                         StructField("dist", DoubleType())])
 
-    off = F.explode(F.array(*[
-        F.struct(F.lit(dy).alias("dy"), F.lit(dx).alias("dx"))
-        for dy, dx in offs
-    ])).alias("off")
-    cover = (
-        idx.cover_ix.select("polygon_id", "poly_ix", "cov_cy", "cov_cx")
-        .select("*", off)
-        .select(
-            "polygon_id", "poly_ix",
-            (F.col("cov_cy") + F.col("off.dy")).alias("cov_cy"),
-            (F.col("cov_cx") + F.col("off.dx")).alias("cov_cx"),
-        )
-        .filter((F.col("cov_cy") >= 0) & (F.col("cov_cy") < n_cells)
-                & (F.col("cov_cx") >= 0) & (F.col("cov_cx") < n_cells))
-        .distinct()
-    )
+    def near(batches):
+        ckey, cpix, _, ids = cover_b.value
+        edges, n_edges = edges_b.value, ne_b.value
+        for rb in batches:
+            la = rb.column("qlat").to_numpy(zero_copy_only=False)
+            lo = rb.column("qlon").to_numpy(zero_copy_only=False)
+            row = _on_grid(la, lo)
+            py = la[row].astype(np.int64)
+            px = lo[row].astype(np.int64)
+            rep, pos = _cover_pairs(ckey, res, py, px, offsets)
+            # one candidate per (point, polygon), however many of the
+            # polygon's cells lie in the point's neighbourhood
+            pair = np.unique(rep * len(ids) + cpix[pos])
+            rep, pix = pair // len(ids), pair % len(ids)
+            dist = _dist_pairs(edges, n_edges, pix, py[rep], px[rep])
+            ok = np.flatnonzero(dist <= radius)
+            yield pa.RecordBatch.from_arrays(
+                [*rb.select(keep_cols).take(row[rep[ok]]).columns,
+                 pa.array(ids[pix[ok]], pa.string()), pa.array(dist[ok])],
+                names=schema.names)
 
-    b = idx.edges_bc
-    ne_b = idx.n_edges_bc
-    rr = round_to
-
-    @F.pandas_udf("double")
-    def poly_dist(poly_ix: pd.Series, qlat: pd.Series,
-                  qlon: pd.Series) -> pd.Series:
-        y1, x1, y2, x2 = b.value  # int32 [P, E] edge tables
-        n_edges = ne_b.value
-        ix = poly_ix.to_numpy()
-        py = qlat.to_numpy(dtype=np.int64)
-        px = qlon.to_numpy(dtype=np.int64)
-        crossings = np.zeros(len(ix), dtype=np.int32)
-        min_d2 = np.full(len(ix), np.inf)
-        for e in range(y1.shape[1]):
-            valid = e < n_edges[ix]
-            if not valid.any():
-                continue
-            ay = y1[ix, e].astype(np.int64)
-            ax = x1[ix, e].astype(np.int64)
-            by = y2[ix, e].astype(np.int64)
-            bx = x2[ix, e].astype(np.int64)
-            # even-odd crossing (same half-open rule as pip_join)
-            straddle = (ay > py) != (by > py)
-            dy = by - ay
-            lhs = (px - ax) * dy
-            rhs = (py - ay) * (bx - ax)
-            crossings += (valid & straddle
-                          & np.where(dy > 0, lhs < rhs, lhs > rhs))
-            # point-to-segment squared distance (projection clamp)
-            l2 = (bx - ax) ** 2 + (by - ay) ** 2
-            tn = (px - ax) * (bx - ax) + (py - ay) * (by - ay)
-            d2a = (px - ax) ** 2 + (py - ay) ** 2
-            d2b = (px - bx) ** 2 + (py - by) ** 2
-            with np.errstate(divide="ignore", invalid="ignore"):
-                d2m = d2a - tn.astype(np.float64) ** 2 / l2
-            d2 = np.where((l2 == 0) | (tn <= 0), d2a,
-                          np.where(tn >= l2, d2b, d2m))
-            d2 = np.round(d2, rr)
-            min_d2 = np.where(valid, np.minimum(min_d2, d2), min_d2)
-        inside = (crossings & 1).astype(bool)
-        out = np.where(inside, 0.0,
-                       np.round(np.sqrt(np.maximum(min_d2, 0.0)), rr))
-        return pd.Series(out)
-
-    cand = points.join(
-        F.broadcast(cover),
-        (F.shiftright(points["qlat"], shift) == cover["cov_cy"])
-        & (F.shiftright(points["qlon"], shift) == cover["cov_cx"]),
-        "inner",
-    )
     return (
-        cand.withColumn(
-            "dist",
-            poly_dist("poly_ix", F.col("qlat").cast("int"),
-                      F.col("qlon").cast("int")))
-        .filter(F.col("dist") <= F.lit(float(radius)))
-        .select(*keep_cols, "polygon_id", "dist")
+        points.filter(F.col("qlat").isNotNull() & F.col("qlon").isNotNull())
+        .select(*dict.fromkeys([*keep_cols, "qlat", "qlon"]))
+        .mapInArrow(near, schema)
     )
 
 
@@ -668,8 +690,6 @@ def buffer_cover(polygons: DataFrame, res: int, k: int) -> DataFrame:
     metric (not cell-quantized) buffer use dwithin_join against the
     polygon boundary instead; this is the raster-style fast path.
     """
-    from .geo import kring_offsets
-
     if k < 0:
         raise ValueError(f"k must be >= 0, got {k}")
     n_cells = 1 << res

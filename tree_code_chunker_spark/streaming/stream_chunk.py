@@ -13,6 +13,10 @@ Reference streaming semantics to preserve (SURVEY.md §2.10):
  * No event-time/watermark semantics exist in the reference; the engine's
    resumability story is snapshot checkpointing (operators/checkpoint.py),
    and streaming checkpointing below uses Spark's own checkpointLocation.
+ * Stateless stream-static operators need no wrapper: `pip_join(stream,
+   index=...)`, and `dwithin_join` / `dwithin_geo` with `broadcast_b=True`,
+   probe each micro-batch exactly like a batch (stream == batch is pinned
+   by tests/test_checkpoint_skew_stream.py).
 """
 
 from __future__ import annotations
@@ -69,49 +73,6 @@ def run_stream_chunker(
     return writer.start()
 
 
-def stream_pip(points_stream: DataFrame, index) -> DataFrame:
-    """Streaming point-in-polygon enrichment: the north-star PIP join
-    applied to an unbounded point stream.
-
-    Stateless per-row projection, no join: the PolygonIndex (sorted
-    classified cover + packed edge tensors) is built ONCE from the static
-    polygon set and broadcast; each micro-batch probes it exactly like the
-    batch path (operators/pip.pip_join), so stream output == batch output
-    on the same rows — pinned by tests/test_checkpoint_skew_stream.py.  No
-    watermark is needed (no state accrues: each row is probed on its own
-    against a static index).
-    """
-    from ..operators.pip import pip_join
-
-    return pip_join(points_stream, index=index)
-
-
-def stream_dwithin(
-    points_stream: DataFrame,
-    queries: DataFrame,
-    radius: int,
-    a_keep: tuple[str, ...] = ("doc_id", "span_pos"),
-    b_keep: tuple[str, ...] = ("query_id",),
-    res: int | None = None,
-) -> DataFrame:
-    """Streaming radius join: an unbounded point stream against a STATIC
-    query set (geofences, sensor sites) — every (point, query) pair within
-    `radius`, exact integer d2.
-
-    Stateless stream-static equi-join: the static side is exploded to its
-    3x3 cell neighborhood and broadcast (it is the small side by
-    contract), each micro-batch probes it exactly like the batch path
-    (operators/spatial.dwithin_join), so stream output == batch output on
-    the same rows — pinned by tests/test_checkpoint_skew_stream.py.  No
-    watermark is needed (no state accrues).  Completes streaming parity
-    for the whole spatial-join surface: chunk, PIP, tiles, kNN, dwithin.
-    """
-    from ..operators.spatial import dwithin_join
-
-    return dwithin_join(points_stream, queries, radius, a_keep=a_keep,
-                        b_keep=b_keep, res=res, broadcast_b=True)
-
-
 def run_stream_knn(
     query_stream: DataFrame,
     index,
@@ -152,34 +113,6 @@ def run_stream_knn(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def stream_dwithin_geo(
-    points_stream: DataFrame,
-    queries: DataFrame,
-    radius_m: float,
-    a_keep: tuple[str, ...] = ("doc_id", "span_pos"),
-    b_keep: tuple[str, ...] = ("query_id",),
-    res: int | None = None,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
-    """Streaming GEODESIC radius join: an unbounded degree-coordinate
-    point stream against a static probe set — every pair within radius_m
-    great-circle meters (the stream twin of operators/spatial.dwithin_geo,
-    with the same latitude-aware lon widening / antimeridian wrap / pole
-    fallback).
-
-    Same stateless stream-static shape as stream_dwithin: the static side
-    explodes to its candidate cells and broadcasts, each micro-batch
-    probes it exactly like the batch path, so stream output == batch
-    output on the same rows (pinned by test).  No watermark; no state.
-    """
-    from ..operators.spatial import dwithin_geo
-
-    return dwithin_geo(points_stream, queries, radius_m, a_keep=a_keep,
-                       b_keep=b_keep, res=res, broadcast_b=True,
-                       lat_col=lat_col, lon_col=lon_col)
 
 
 def run_stream_asof(
