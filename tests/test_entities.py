@@ -316,34 +316,6 @@ def test_per_row_option_merge_all_six_fields(spark):
     assert all(len(r["siblings"]) == 0 for r in by["override"])
 
 
-def test_chunk_bytes_matches_string_path(spark):
-    """S2 ChunkBytes (codechunk.go:52-58): a bytes-sourced doc chunks
-    identically to the same content arriving as a text span."""
-    from tree_code_chunker_spark.operators.chunker import (
-        chunk_documents,
-        chunk_documents_binary,
-    )
-
-    text = "\n".join(f"line {i} of the payload body" for i in range(60))
-    bin_df = spark.createDataFrame(
-        [("d1", bytearray(text.encode("utf-8")))],
-        "doc_id string, payload binary",
-    )
-    str_df = spark.createDataFrame(
-        [("d1", [{"kind": "text", "text": text, "media_ref": "",
-                  "offset": 0}])],
-        "doc_id string, spans array<struct<kind:string,text:string,"
-        "media_ref:string,offset:int>>",
-    )
-    cols = ["doc_id", "chunk_index", "total_chunks", "text", "byte_start",
-            "byte_end", "line_start", "line_end", "nws_size", "is_partial"]
-    got = [tuple(r[c] for c in cols)
-           for r in chunk_documents_binary(bin_df, max_size=200).collect()]
-    want = [tuple(r[c] for c in cols)
-            for r in chunk_documents(str_df, max_size=200).collect()]
-    assert sorted(got) == sorted(want) and len(got) > 1
-
-
 def test_detect_language_col_agrees_with_python(spark):
     """S6: the JVM column classifier and the Python heuristic agree on the
     shared hint patterns."""
@@ -386,34 +358,6 @@ def test_context_pipeline_error_isolation(spark):
     assert rows["good"]["contextualized_text"]
     assert rows["bad"]["error"] is not None
     assert rows["bad"]["chunk_index"] == -1
-
-
-def test_spark_chunker_facade_merge_quirks(spark):
-    """Chunker.Chunk merge (codechunk.go:737-758): filter_imports overrides
-    ONLY when true — unlike the batch merge's unconditional overwrite."""
-    from tree_code_chunker_spark.api import SparkChunker, is_language_supported
-    from tree_code_chunker_spark.config import ChunkOptions
-
-    c = SparkChunker(ChunkOptions(max_chunk_size=100, filter_imports=True))
-    # zero/empty/false all inherit the instance defaults
-    m = c.merged(max_chunk_size=0, context_mode="", filter_imports=False)
-    assert m.max_chunk_size == 100 and m.filter_imports is True
-    m2 = c.merged(max_chunk_size=30, language="go")
-    assert m2.max_chunk_size == 30 and m2.language == "go"
-
-    assert is_language_supported("go") and not is_language_supported("en")
-
-    code = "func a() {}\nfunc b() {}"
-    df = spark.createDataFrame(
-        [("d", [{"kind": "text", "text": code, "media_ref": "",
-                 "offset": 0}])],
-        "doc_id string, spans array<struct<kind:string,text:string,"
-        "media_ref:string,offset:int>>",
-    )
-    out = c.chunk(df, max_chunk_size=10).collect()
-    assert len(out) == 2  # tiny override produced multiple chunks
-    ctx = c.chunk_with_context(df).collect()
-    assert ctx[0]["lang"] == "go" and len(ctx[0]["entities"]) > 0
 
 
 def test_detect_language_extension_table_full():

@@ -1,37 +1,10 @@
 """Per-row error isolation (reference codechunk_test.go:297-318), per-row
-option merge (codechunk.go:342-359), entity-type inference priority
-(extract_test.go:396-434), embedding near-dup."""
+option merge (codechunk.go:342-359), embedding near-dup."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from tree_code_chunker_spark.operators.chunker import chunk_documents
 from tree_code_chunker_spark.operators.dedup import embedding_near_dup_pairs
-from tree_code_chunker_spark.operators.entities import infer_entity_type
-
-
-# reference extract_test.go:396-434 — exact map + substring priority
-@pytest.mark.parametrize(
-    "node_type,want",
-    [
-        ("function_declaration", "function"),
-        ("method_definition", "method"),
-        ("class_declaration", "class"),
-        ("trait_item", "interface"),
-        ("type_alias_declaration", "type"),
-        ("enum_item", "enum"),
-        ("use_declaration", "import"),
-        ("export_statement", "export"),
-        # substring fallback with priority: 'function' beats 'type' etc.
-        ("weird_function_thing", "function"),
-        ("some_typedef_node", "type"),     # unknown containing 'type' -> type
-        ("my_class_like", "class"),
-        ("nothing_matches_here", None),
-        ("interface_function_x", "function"),  # function outranks interface
-    ],
-)
-def test_infer_entity_type(node_type, want):
-    assert infer_entity_type(node_type) == want
 
 
 def test_chunk_error_isolation(spark):

@@ -213,39 +213,6 @@ def test_retention_semantics(spark):
     assert all(c != 3 for (c, _o) in out)  # u3 has no cohort
 
 
-# --- streaming asof twin ---
-
-
-def test_stream_asof_equals_batch(spark, tmp_path):
-    from tree_code_chunker_spark.streaming.stream_chunk import run_stream_asof
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    src = str(tmp_path / "in")
-    # two files -> two micro-batches under maxFilesPerTrigger=1
-    left_a = spark.createDataFrame(
-        [("a", 5), ("a", 25), ("b", 14)], "sym string, tts long")
-    left_b = spark.createDataFrame(
-        [("a", 40), ("a", 100), ("c", 30)], "sym string, tts long")
-    left_a.coalesce(1).write.parquet(src + "/f1")
-    left_b.coalesce(1).write.parquet(src + "/f2")
-    right = _quotes(spark)
-
-    stream = (spark.readStream.schema(left_a.schema)
-              .option("maxFilesPerTrigger", 1).parquet(src + "/*"))
-    q = run_stream_asof(stream, right, ["sym"], "tts", "qts",
-                        out_path=str(tmp_path / "out"),
-                        checkpoint_path=str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-
-    got = sorted(
-        map(tuple, spark.read.parquet(str(tmp_path / "out"))
-            .drop("_batch_id").collect()))
-    want = sorted(map(tuple, asof_join(
-        left_a.unionByName(left_b), right,
-        ["sym"], "tts", "qts").collect()))
-    assert got == want and len(got) == 6
-
-
 # --- ohlc / twa ---
 
 from tree_code_chunker_spark.operators.events import (  # noqa: E402

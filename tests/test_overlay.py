@@ -307,41 +307,6 @@ def test_hausdorff_symmetric_direction(spark):
     assert not hausdorff_join(da, db, 299, overlay_res(1000)).collect()
 
 
-def test_stream_map_match_equals_batch(spark, tmp_path):
-    from tree_code_chunker_spark.operators.overlay import snap_to_segments
-    from tree_code_chunker_spark.streaming.stream_chunk import (
-        run_stream_map_match,
-    )
-
-    rng = random.Random(SEED + 5)
-    segs = spark.createDataFrame(
-        _segs(120, rng, max_len=700),
-        "seg_id long, y1 long, x1 long, y2 long, x2 long")
-    pts = [(i, rng.randrange(0, 61000), rng.randrange(0, 61000))
-           for i in range(400)]
-    pa = spark.createDataFrame(pts[:200], "pid long, qlat long, qlon long")
-    pb = spark.createDataFrame(pts[200:], "pid long, qlat long, qlon long")
-    src = str(tmp_path / "in")
-    pa.coalesce(1).write.parquet(src + "/f1")
-    pb.coalesce(1).write.parquet(src + "/f2")
-
-    res = overlay_res(2 * 700 + 2 * 900)
-    stream = (spark.readStream.schema(pa.schema)
-              .option("maxFilesPerTrigger", 1).parquet(src + "/*"))
-    q = run_stream_map_match(stream, segs, 900, res,
-                             out_path=str(tmp_path / "out"),
-                             checkpoint_path=str(tmp_path / "ckpt"),
-                             p_keep=("pid",))
-    q.awaitTermination(120)
-
-    got = sorted(map(tuple,
-                     spark.read.parquet(str(tmp_path / "out"))
-                     .drop("_batch_id").collect()))
-    want = sorted(map(tuple, snap_to_segments(
-        pa.unionByName(pb), segs, 900, res, p_keep=("pid",)).collect()))
-    assert got == want and got
-
-
 def test_buffer_cover_dilation_and_clamp(spark):
     from tree_code_chunker_spark.operators.pip import buffer_cover, polygon_cover
 

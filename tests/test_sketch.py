@@ -154,7 +154,6 @@ from tree_code_chunker_spark.operators.sketch import (  # noqa: E402
     bloom_flags,
     bloom_flags_sql,
     bloom_positions,
-    bloom_semi_join,
 )
 
 
@@ -170,20 +169,6 @@ def test_bloom_no_false_negatives_and_duckdb_mirror(spark):
                              "doc_id", m_bits=256, k=3))
     want = sorted(map(tuple, duckdb.connect().execute(sql).fetchall()))
     got = sorted((r.item, r.bloom_pass, r.member) for r in out)
-    assert got == want
-
-
-def test_bloom_semi_join_equals_exact(spark):
-    df = spark.createDataFrame(
-        [(v, f"p{v}") for v in range(500)], "item bigint, payload string")
-    keys = spark.createDataFrame(
-        [(v,) for v in range(0, 500, 7)], "k bigint")
-    # small m_bits forces false positives INTO the prune; verify must
-    # still produce the exact semi-join
-    got = sorted((r.item, r.payload) for r in
-                 bloom_semi_join(df, "item", keys, "k",
-                                 m_bits=64, k=2).collect())
-    want = sorted((v, f"p{v}") for v in range(0, 500, 7))
     assert got == want
 
 
@@ -234,15 +219,3 @@ def test_hll_merge_idempotent_and_replay_safe(spark):
         sorted(map(tuple, regs.collect()))
 
 
-def test_bloom_semi_join_preserves_duplicate_rows(spark):
-    """ADVICE r5 (high): N identical rows used to accumulate N*k position
-    hits under a groupBy-all-columns and fail the == k check — a false
-    negative.  Duplicates must survive with multiplicity intact."""
-    df = spark.createDataFrame(
-        [(7, "a"), (7, "a"), (7, "a"), (8, "b"), (8, "b"), (9, "c")],
-        "item bigint, payload string")
-    keys = spark.createDataFrame([(7,), (8,)], "k bigint")
-    got = sorted((r.item, r.payload) for r in
-                 bloom_semi_join(df, "item", keys, "k",
-                                 m_bits=256, k=4).collect())
-    assert got == [(7, "a"), (7, "a"), (7, "a"), (8, "b"), (8, "b")]

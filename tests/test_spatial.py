@@ -550,46 +550,14 @@ def test_dwithin_geo_self_matches_bruteforce(spark):
     assert all(a != b for a, b, _ in got)
 
 
-def test_convex_hull_hand_fixture_and_global(spark):
-    """Monotone-chain hull: hand-checked vertex set (interior + collinear
-    edge points excluded, collinear-only docs reduce to endpoints),
-    grouped==global on one group, and the two-phase hull-of-hulls is
-    partition-invariant."""
-    from tree_code_chunker_spark.operators.spatial import (
-        convex_hull, convex_hull_global)
-
-    rows = (
-        # doc 1: unit-ish square + interior point + midpoint of an edge
-        [(1, 0, 0), (1, 0, 10), (1, 10, 0), (1, 10, 10), (1, 5, 5),
-         (1, 0, 5)]
-        # doc 2: all collinear -> two endpoints
-        + [(2, i, 2 * i) for i in range(5)]
-        # doc 3: single point (with a duplicate)
-        + [(3, 7, 7), (3, 7, 7)]
-    )
-    df = spark.createDataFrame(rows, "doc_id long, qlat long, qlon long")
-    got = {(r["doc_id"], r["qlat"], r["qlon"], r["n_hull"])
-           for r in convex_hull(df).collect()}
-    assert got == {
-        (1, 0, 0, 4), (1, 0, 10, 4), (1, 10, 0, 4), (1, 10, 10, 4),
-        (2, 0, 0, 2), (2, 4, 8, 2),
-        (3, 7, 7, 1),
-    }
-
-    one = df.filter(F.col("doc_id") == 1)
-    grouped = {(r["qlat"], r["qlon"], r["n_hull"])
-               for r in convex_hull(one).collect()}
-    for parts in (1, 7):
-        glob = {(r["qlat"], r["qlon"], r["n_hull"])
-                for r in convex_hull_global(one.repartition(parts)).collect()}
-        assert glob == grouped
-
-
 def test_hull_diameter_tie_break_and_single(spark):
     """Diameter witness pair is deterministic under ties (square: two
     equal diagonals -> lexicographically larger struct wins) and a
-    single-point group emits (0, p, p)."""
-    from tree_code_chunker_spark.operators.spatial import hull_diameter
+    single-point group emits (0, p, p).  The monotone-chain hull under it
+    keeps a hand-checked vertex set: interior and collinear edge points
+    are excluded, a collinear-only doc reduces to its endpoints."""
+    from tree_code_chunker_spark.operators.spatial import (
+        convex_hull, hull_diameter)
 
     rows = [(1, 0, 0), (1, 0, 10), (1, 10, 0), (1, 10, 10), (1, 5, 5),
             (2, 7, 7)]
@@ -597,6 +565,23 @@ def test_hull_diameter_tie_break_and_single(spark):
     got = {r["doc_id"]: (r["diam_sq"], r["y1"], r["x1"], r["y2"], r["x2"])
            for r in hull_diameter(df).collect()}
     assert got == {1: (200, 0, 10, 10, 0), 2: (0, 7, 7, 7, 7)}
+
+    rows = (
+        # doc 1: the square + interior point + midpoint of an edge
+        rows[:5] + [(1, 0, 5)]
+        # doc 2: single point (with a duplicate)
+        + [(2, 7, 7), (2, 7, 7)]
+        # doc 3: all collinear -> two endpoints
+        + [(3, i, 2 * i) for i in range(5)]
+    )
+    df = spark.createDataFrame(rows, "doc_id long, qlat long, qlon long")
+    got = {(r["doc_id"], r["qlat"], r["qlon"], r["n_hull"])
+           for r in convex_hull(df).collect()}
+    assert got == {
+        (1, 0, 0, 4), (1, 0, 10, 4), (1, 10, 0, 4), (1, 10, 10, 4),
+        (2, 7, 7, 1),
+        (3, 0, 0, 2), (3, 4, 8, 2),
+    }
 
 
 def test_dwithin_geo_rejects_cell_side_equal_radius(spark):

@@ -221,37 +221,6 @@ def test_st_colocate_ab_validates_args(spark):
         st_colocate_ab(pts, pts, 48, 0, b_keep=("x",))
 
 
-def test_stream_colocate_equals_batch(spark, tmp_path):
-    from tree_code_chunker_spark.streaming.stream_chunk import (
-        run_stream_colocate,
-    )
-
-    corpus = (_mkpoints(spark, 120)
-              .select(F.col("doc_id").alias("b_doc_id"),
-                      F.col("span_pos").alias("b_span_pos"),
-                      "qlat", "qlon", "t_s"))
-    new_a = _mkpoints(spark, 60).filter(F.col("span_pos") % 2 == 0)
-    new_b = (_mkpoints(spark, 60).filter(F.col("span_pos") % 2 == 1)
-             .withColumn("qlat", F.col("qlat") + 11))
-    src = str(tmp_path / "in")
-    new_a.coalesce(1).write.parquet(src + "/f1")
-    new_b.coalesce(1).write.parquet(src + "/f2")
-
-    stream = (spark.readStream.schema(new_a.schema)
-              .option("maxFilesPerTrigger", 1).parquet(src + "/*"))
-    q = run_stream_colocate(stream, corpus, 150, 1500,
-                            out_path=str(tmp_path / "out"),
-                            checkpoint_path=str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-
-    got = sorted(map(tuple,
-                     spark.read.parquet(str(tmp_path / "out"))
-                     .drop("_batch_id").collect()))
-    want = sorted(map(tuple, st_colocate_ab(
-        new_a.unionByName(new_b), corpus, 150, 1500).collect()))
-    assert got == want and got
-
-
 def test_self_joins_drop_duplicate_id_pairs(spark):
     # two DISTINCT rows sharing one id key, within radius/dt but in
     # DIFFERENT grid cells: the half-neighborhood forms must drop the

@@ -56,10 +56,6 @@ def _committed_manifest(root: str, stage: str) -> dict | None:
     return m if intact else None
 
 
-def is_committed(root: str, stage: str) -> bool:
-    return _committed_manifest(root, stage) is not None
-
-
 def commit_stage(df: DataFrame, root: str, stage: str,
                  partition_by: list[str] | None = None) -> dict:
     """Write stage output, then commit a manifest of the files written."""

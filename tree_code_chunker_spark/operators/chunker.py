@@ -696,26 +696,3 @@ def chunk_documents(
 
     return df.mapInArrow(fn, schema=CHUNK_SCHEMA)
 
-
-def chunk_documents_binary(
-    df,
-    payload_col: str = "payload",
-    max_size: int = DEFAULT_MAX_CHUNK_SIZE,
-    **kw,
-):
-    """S2 ChunkBytes analog (codechunk.go:52-58): documents arriving as a
-    raw BYTES column instead of pre-split spans.  The payload is decoded
-    (UTF-8) and wrapped as a single text span entirely in JVM column ops —
-    no extra Python pass — then flows through the same chunk fold, so a
-    bytes-sourced document produces chunks identical to the string path."""
-    from pyspark.sql import functions as F
-
-    spans = F.array(F.struct(
-        F.lit("text").alias("kind"),
-        F.decode(F.col(payload_col), "UTF-8").alias("text"),
-        F.lit("").alias("media_ref"),
-        F.lit(0).alias("offset"),
-    ))
-    docs = df.select(F.col("doc_id").cast("string").alias("doc_id"),
-                     spans.alias("spans"))
-    return chunk_documents(docs, max_size=max_size, **kw)

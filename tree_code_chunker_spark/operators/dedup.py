@@ -247,11 +247,6 @@ def _fnv1a64_tokens_np(tokens: list[bytes]) -> np.ndarray:
     return h
 
 
-def _fnv1a64(tok: str) -> int:
-    """FNV-1a 64-bit hash (public constants), as a Python int < 2^64."""
-    return int(_fnv1a64_tokens_np([tok.encode("utf-8")])[0])
-
-
 def _simhash_batch(token_lists: list[list[str]]) -> np.ndarray:
     """SimHash sketches for a batch of token lists -> int64 array.
 

@@ -60,7 +60,7 @@ _PATTERNS = {
         (re.compile(r"^(?:export\s+)?enum\s+(\w+)"), "enum"),
         (re.compile(r"^(?:export\s+)?type\s+(\w+)"), "type"),
         # arrow functions / function expressions bound to a declarator take
-        # its name (extract.go:271-306 name search); NODE_TYPE_MAP maps
+        # its name (extract.go:271-306 name search); the reference maps
         # arrow_function/function_expression -> 'function' (extract.go:66-67)
         (re.compile(r"^(?:export\s+)?(?:const|let|var)\s+(\w+)\s*=\s*"
                     r"(?:async\s+)?(?:\([^)]*\)|\w+)\s*=>"), "function"),
@@ -90,48 +90,6 @@ _PATTERNS = {
     ],
 }
 _PATTERNS["javascript"] = _PATTERNS["typescript"]
-
-# P3: node-type -> entity-type inference with substring priority (reference
-# extract.go:245-268; truth table extract_test.go:396-434 pins that unknown
-# node types containing 'type' still map to 'type', and the priority order
-# function > method > class > interface > type > enum > import > export).
-_TYPE_PRIORITY = [
-    ("function", "function"),
-    ("method", "method"),
-    ("class", "class"),
-    ("interface", "interface"),
-    ("type", "type"),
-    ("enum", "enum"),
-    ("import", "import"),
-    ("export", "export"),
-]
-
-NODE_TYPE_MAP = {
-    # 24-entry exact map (extract.go:62-103), re-expressed for the engine
-    "function_declaration": "function", "function_definition": "function",
-    "function_item": "function", "arrow_function": "function",
-    "function_expression": "function", "method_declaration": "method",
-    "method_definition": "method", "class_declaration": "class",
-    "class_definition": "class", "class_specifier": "class",
-    "struct_item": "class", "struct_specifier": "class",
-    "interface_declaration": "interface", "trait_item": "interface",
-    "type_alias_declaration": "type", "type_declaration": "type",
-    "type_item": "type", "enum_declaration": "enum", "enum_item": "enum",
-    "enum_specifier": "enum", "import_statement": "import",
-    "import_declaration": "import", "use_declaration": "import",
-    "export_statement": "export",
-}
-
-
-def infer_entity_type(node_type: str) -> str | None:
-    """Exact map first, then substring fallback in priority order."""
-    if node_type in NODE_TYPE_MAP:
-        return NODE_TYPE_MAP[node_type]
-    for needle, etype in _TYPE_PRIORITY:
-        if needle in node_type:
-            return etype
-    return None
-
 
 # S6 DetectLanguage marker heuristics, shared verbatim by three regex
 # engines: Python re (re.M), Spark/Java rlike and DuckDB RE2 (both via the

@@ -612,7 +612,6 @@ def knn_within(
     queries: DataFrame, corpus: DataFrame, k: int, radius: int,
     tie_cols: list[str] = ["doc_id", "span_pos"],
     res: int | None = None,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Bounded kNN: for each query, its k nearest corpus points WITHIN
     `radius` (fewer rows if the disk holds fewer) — the radius-capped
@@ -628,7 +627,7 @@ def knn_within(
     cand = dwithin_join(
         corpus, queries, radius,
         a_keep=tuple(tie_cols), b_keep=("query_id",),
-        res=res, broadcast_b=broadcast_queries,
+        res=res, broadcast_b=True,
     )
     return _topk(cand, k, tie_cols).select(
         "query_id", *tie_cols, "d2", "rank")

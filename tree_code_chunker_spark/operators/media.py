@@ -166,22 +166,6 @@ def extract_media_features(df: DataFrame, decode_fn=None) -> DataFrame:
     return df.mapInPandas(fn, schema=FEATURE_SCHEMA)
 
 
-def resize_meta(df: DataFrame, max_side: int = 256) -> DataFrame:
-    """Resize PLAN (pure column math on metadata): target dims preserving
-    aspect ratio, capped at max_side.  The pixel work happens inside the
-    decode_fn on a real cluster; the plan column keeps it deterministic and
-    testable here."""
-    w, h = F.col("meta.width"), F.col("meta.height")
-    scale = F.when(
-        F.greatest(w, h) > max_side,
-        max_side / F.greatest(w, h).cast("double"),
-    ).otherwise(F.lit(1.0))
-    return df.withColumns({
-        "target_width": F.floor(w * scale).cast("int"),
-        "target_height": F.floor(h * scale).cast("int"),
-    })
-
-
 def sample_frames(df: DataFrame, every_n: int = 30) -> DataFrame:
     """Frame-sampling PLAN for video rows: explode sampled frame indices
     (0, n, 2n, ...) as rows — the shuffle-free fan-out that downstream

@@ -115,93 +115,6 @@ def lsh_bucket_udf(dim: int, n_bits: int = 12, seed: int = 42):
     return bucket
 
 
-def ivf_centroids(corpus: DataFrame, dim: int, n_lists: int = 64,
-                  vec_col: str = "embedding", sample: int = 10_000,
-                  iters: int = 10, seed: int = 42,
-                  id_col: str = "vec_id") -> np.ndarray:
-    """Coarse quantizer for IVF: seeded mini k-means on a driver-side sample
-    (the standard IVF training recipe — train small, assign at scale).
-
-    The sample is the `sample` rows with smallest xxhash64(id) — a
-    deterministic pseudo-random subset that is IDENTICAL at any
-    parallelism/partitioning (an unordered .limit() is not: it takes
-    whatever rows arrive first, so centroids — and recall — silently drift
-    between runs).  TakeOrdered keeps this a top-k, not a full sort."""
-    pdf = (
-        corpus.select(
-            F.col(vec_col).cast("array<double>").alias("v"),
-            F.xxhash64(F.col(id_col)).alias("_h"),
-        )
-        .orderBy("_h").limit(sample).drop("_h").toPandas()
-    )
-    x = np.stack(pdf["v"].to_numpy())
-    rng = np.random.RandomState(seed)
-    cent = x[rng.choice(len(x), size=min(n_lists, len(x)), replace=False)]
-    for _ in range(iters):
-        d = ((x[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
-        for c in range(len(cent)):
-            m = assign == c
-            if m.any():
-                cent[c] = x[m].mean(axis=0)
-    return cent
-
-
-def _assign_udf(cent: np.ndarray, topn: int = 1):
-    from pyspark.sql.types import ArrayType
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def assign(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy())
-        d = ((m[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-        idx = np.argsort(d, axis=1)[:, :topn]
-        return pd.Series([row.tolist() for row in idx])
-
-    return assign
-
-
-def ann_ivf_topk(
-    queries: DataFrame, corpus: DataFrame, k: int, dim: int,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    n_lists: int = 64, nprobe: int = 4, seed: int = 42,
-) -> DataFrame:
-    """IVF ANN: corpus bucketed once by nearest centroid (one narrow
-    assignment pass); each query probes its nprobe nearest lists; exact
-    cosine re-rank inside the candidates.  The inverted-list equi-join is
-    the only data-sized operation — the classic IVF scale path."""
-    cent = ivf_centroids(corpus, dim, n_lists, vec_col, seed=seed,
-                         id_col=id_col)
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("cvec"),
-    ).withColumn("list_id", _assign_udf(cent, 1)(F.col("cvec"))[0])
-    q = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("qvec"),
-        )
-        .withColumn("probes", _assign_udf(cent, nprobe)(F.col("qvec")))
-        .withColumn("list_id", F.explode("probes"))
-        .drop("probes")
-    )
-    cand = F.broadcast(q).join(c, "list_id", "inner").withColumn(
-        "sim",
-        F.round(
-            _dot(F.col("qvec"), F.col("cvec"))
-            / (_norm(F.col("qvec")) * _norm(F.col("cvec"))),
-            SIM_ROUND,
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        cand.select("query_id", "vec_id", "sim").distinct()
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
 def _l2(a, b):
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
@@ -242,13 +155,12 @@ def ivf_flat_topk(
 ) -> DataFrame:
     """IVF-flat ANN with DETERMINISTIC sampled centroids: every stride-th
     corpus vector (by id) is a list centroid, with stride = ceil(N/n_lists)
-    so the LIST COUNT stays constant as the corpus grows — the same
-    inverted-list topology as ann_ivf_topk (assign once, probe nprobe
-    lists, exact re-rank inside candidates) but with a closed-form training
-    step, so the ENTIRE ANN path is oracle-expressible and driver-verified,
-    not just the brute-force baseline.  (k-means training only changes
-    WHERE the centroids sit, not the plan shape; swap ivf_centroids in when
-    recall tuning matters more than verifiability.)
+    so the LIST COUNT stays constant as the corpus grows.  The classic IVF
+    topology (assign once, probe nprobe lists, exact re-rank inside
+    candidates) with a closed-form training step, so the ENTIRE ANN path
+    is oracle-expressible and checked against DuckDB, not just the
+    brute-force baseline.  (k-means training would only change WHERE the centroids
+    sit, not the plan shape.)
 
     Determinism: assignment distance and re-rank similarity are rounded to
     6 dp before ranking with id tie-breaks, so Spark and the DuckDB mirror

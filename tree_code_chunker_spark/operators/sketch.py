@@ -329,9 +329,9 @@ SELECT item, n, cms_est FROM cms_est
 # Bloom filter (Bloom 1970, public) as a semi-join prune.  The point at
 # corpus scale: the broadcast side is AT MOST m_bits positions regardless of
 # how many keys went in — a bounded-size prune where broadcasting the raw key
-# set would not be.  False positives are possible (never negatives), so
-# bloom_semi_join verifies candidates with an exact semi-join that now sees
-# only the pruned slice.  Same portable lowbias32 buckets as the count-min
+# set would not be.  False positives are possible (never negatives), so a
+# consumer verifies bloom_pass rows with an exact semi-join that sees only
+# the pruned slice.  Same portable lowbias32 buckets as the count-min
 # sketch, so the DuckDB mirror is exactly equal.
 
 
@@ -372,42 +372,6 @@ def bloom_flags(df: DataFrame, key_col: str, keys: DataFrame,
         .select(*df.columns, "bloom_pass",
                 F.col("_mm").isNotNull().alias("member"))
     )
-
-
-def bloom_semi_join(df: DataFrame, key_col: str, keys: DataFrame,
-                    keys_col: str, m_bits: int = 4096,
-                    k: int = 4) -> DataFrame:
-    """Exact semi-join result, computed as bloom prune -> exact verify.
-
-    Bloom membership depends only on the key, so the prune tests the
-    DISTINCT keys of df and the original rows ride one final semi-join —
-    duplicate df rows keep their multiplicity (the earlier
-    groupBy-all-columns form collapsed N identical rows into one group
-    holding N*k position hits and dropped them at the == k check: a
-    false negative).  Within-row hash collisions are handled by
-    array_distinct + an all-distinct-positions-hit count.
-
-    The prune join is broadcast against <= m_bits positions; the final
-    semi-joins shuffle on key_col only (distinct-key side is the pruned
-    slice), cheaper than the corpus-wide all-columns exchange."""
-    _cms_check(m_bits, k)
-    pos_df = bloom_positions(keys, keys_col, m_bits, k)
-    x = F.col(key_col)
-    key_probe = df.select(key_col).distinct().withColumn(
-        "_bpos", F.array_distinct(F.array(*[
-            _cms_bucket_col(x, r, m_bits) for r in range(k)])))
-    passing = (
-        key_probe.select(key_col, "_bpos", F.explode("_bpos").alias("pos"))
-        .join(F.broadcast(pos_df), ["pos"], "left_semi")
-        .groupBy(key_col, "_bpos")
-        .agg(F.count("*").alias("_nhit"))
-        .filter(F.col("_nhit") == F.size(F.col("_bpos")))
-        .select(key_col)
-    )
-    verified = passing.join(
-        keys.select(F.col(keys_col).alias(key_col)).distinct(),
-        [key_col], "left_semi")
-    return df.join(verified, [key_col], "left_semi")
 
 
 def bloom_flags_sql(table: str, key_col: str, keys_table: str,

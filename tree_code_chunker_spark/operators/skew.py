@@ -1,16 +1,15 @@
-"""Explicit skew handling for hot cells (north_rule: "skew from hot cells is
-handled explicitly via salted repartitioning and AQE skew-join hints").
+"""Hot-key census.
 
-Two layers:
- 1. AQE skew-join splitting is always on (plans/session.py) — it splits
-    oversized SHUFFLE partitions of sort-merge joins at runtime.
- 2. For the broadcast-probe joins AQE can't rebalance (a hot cell key lands
-    all its rows in few tasks downstream), `salted_repartition` spreads hot
-    keys across S sub-keys, and `salted_join` replicates the small side S×
-    so `(key, salt)` equi-joins stay correct.
+Skew from hot cells is handled where it arises, from observed sizes rather
+than a caller's flag:
+ 1. AQE skew-join splitting is always on (plans/session.py): it splits
+    oversized shuffle partitions of sort-merge joins at runtime.
+ 2. kNN's fine tier (operators/knn.py): each hot histogram cell carries
+    its own unit-granularity SAT, so a query inside a dense cell plans a
+    unit-scale radius instead of the coarse cell's.
 
-Hotness comes from a cheap census (`hot_keys`) — a groupBy(count) at the
-cell resolution, tiny output (<= #cells), broadcastable.
+`hot_keys` is the census that names the hot set: a groupBy(count) at the
+key's resolution, tiny output (<= #keys), broadcastable.
 """
 
 from __future__ import annotations
@@ -25,64 +24,3 @@ def hot_keys(df: DataFrame, key: str, threshold_rows: int) -> DataFrame:
         .filter(F.col("n") > threshold_rows)
         .select(key, "n")
     )
-
-
-def with_salt(df: DataFrame, key: str, hot: DataFrame, n_salts: int,
-              salt_col: str = "_salt",
-              salt_from: list[str] | None = None) -> DataFrame:
-    """Add a salt column: 0 for cold keys, hash-spread 0..n_salts-1 for hot
-    keys (deterministic — salt from a row hash, not rand()).
-
-    salt_from: columns whose hash spreads rows WITHIN a hot key — pass a
-    narrow row-identity subset (e.g. doc_id, span_pos) instead of the default
-    all-columns hash, which needlessly hashes wide payload columns."""
-    hot_marked = F.broadcast(hot.select(key).withColumn("_is_hot", F.lit(True)))
-    salt_cols = salt_from if salt_from is not None else df.columns
-    return (
-        df.join(hot_marked, key, "left")
-        .withColumn(
-            salt_col,
-            F.when(
-                F.col("_is_hot").isNotNull(),
-                F.pmod(F.hash(*salt_cols), F.lit(n_salts)),
-            ).otherwise(F.lit(0)),
-        )
-        .drop("_is_hot")
-    )
-
-
-def replicate_for_salt(small: DataFrame, n_salts: int,
-                       salt_col: str = "_salt") -> DataFrame:
-    """Explode the (small) build side n_salts x so every (key, salt) bucket
-    finds its match."""
-    salts = F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    return small.withColumn(salt_col, salts)
-
-
-def salted_join(big: DataFrame, small: DataFrame, key: str, n_salts: int,
-                threshold_rows: int = 100_000, how: str = "inner",
-                salt_from: list[str] | None = None) -> DataFrame:
-    """big ⋈ small on `key` with hot-key salting.
-
-    Output == plain join for how in {'inner', 'left'} ONLY: the small side is
-    replicated n_salts times, so an unmatched small-side row would appear
-    n_salts times under 'right'/'full' — those modes are rejected."""
-    if how not in ("inner", "left"):
-        raise ValueError(
-            f"salted_join supports how in {{'inner','left'}}, got {how!r}: "
-            "the replicated build side would duplicate unmatched rows"
-        )
-    hot = hot_keys(big, key, threshold_rows)
-    big_s = with_salt(big, key, hot, n_salts, salt_from=salt_from)
-    small_s = replicate_for_salt(small, n_salts)
-    out = big_s.join(small_s, [key, "_salt"], how)
-    return out.drop("_salt")
-
-
-def salted_repartition(df: DataFrame, key: str, n_salts: int,
-                       threshold_rows: int = 100_000) -> DataFrame:
-    """Repartition by (key, salt) so hot cells spread over n_salts tasks —
-    use before per-cell aggregations that would otherwise bottleneck on one
-    task; follow with a second (tiny) aggregation over the partial results."""
-    hot = hot_keys(df, key, threshold_rows)
-    return with_salt(df, key, hot, n_salts).repartition(F.col(key), F.col("_salt")).drop("_salt")

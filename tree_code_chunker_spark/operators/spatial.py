@@ -11,8 +11,7 @@ the remaining classic geospatial joins a 100 TB pipeline needs:
    whose cell side >= radius, expand ONE side to its 3x3 Chebyshev
    neighborhood, equi-join on the cell key, then exact integer filter.
    Never all-pairs; the only shuffle is the cell-key equi-join, and hot
-   cells ride on AQE skew-join splitting (the key is the same cell id the
-   skew module salts).
+   cells ride on AQE skew-join splitting.
  * `zonal_stats` — per-polygon aggregates of the points each polygon
    contains (raster "zonal statistics" in vector form): composes the
    classified-cover pip_join (broadcast build side, probe never shuffled)
@@ -707,7 +706,6 @@ def idw_interpolate(
     radius: int,
     value_col: str = "value",
     res: int | None = None,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Inverse-distance-weighted (power-2) interpolation: estimate a
     surface value at each query location from the points within `radius`
@@ -730,7 +728,7 @@ def idw_interpolate(
     cand = dwithin_join(
         points, queries, radius,
         a_keep=(value_col,), b_keep=("query_id",),
-        res=res, broadcast_b=broadcast_queries,
+        res=res, broadcast_b=True,
     )
     v = F.col(value_col).cast("double")
     hit = F.col("d2") == 0
@@ -940,7 +938,6 @@ def knn_geo(
     radius_m: float,
     tie_cols: tuple[str, ...] = ("doc_id", "span_pos"),
     res: int | None = None,
-    broadcast_queries: bool = True,
     lat_col: str = "lat",
     lon_col: str = "lon",
 ) -> DataFrame:
@@ -959,7 +956,7 @@ def knn_geo(
     cand = dwithin_geo(
         corpus, queries, radius_m,
         a_keep=tuple(tie_cols), b_keep=("query_id",),
-        res=res, broadcast_b=broadcast_queries,
+        res=res, broadcast_b=True,
         lat_col=lat_col, lon_col=lon_col,
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -1123,9 +1120,7 @@ def convex_hull(points: DataFrame, by: tuple = ("doc_id",),
     oracle can match it exactly), plus the group's hull size.
 
     Scale shape: applyInPandas per group — right when groups are small
-    (a doc's span cloud); for one huge group use convex_hull_global,
-    which exploits hull(A ∪ B) = hull(hull(A) ∪ hull(B)) to reduce each
-    partition before a single tiny gather."""
+    (a doc's span cloud)."""
     import pandas as pd
 
     by = list(by)
@@ -1144,39 +1139,6 @@ def convex_hull(points: DataFrame, by: tuple = ("doc_id",),
         return out[by + [lat_col, lon_col, "n_hull"]]
 
     return points.groupBy(*by).applyInPandas(hull_one, schema)
-
-
-def convex_hull_global(points: DataFrame, lat_col: str = "qlat",
-                       lon_col: str = "qlon") -> DataFrame:
-    """Whole-table convex hull via the two-phase hull-of-hulls identity:
-    every partition reduces to its own hull vertices (mapInPandas — the
-    only full-data pass, embarrassingly parallel), then ONE tiny final
-    chain runs over the union of partial hulls (hull sizes are typically
-    O(log n)–O(sqrt(n)), so the gather is trivial even at 10^12 points).
-    Output matches convex_hull on a single constant group bit-for-bit."""
-    import pandas as pd
-
-    schema = f"{lat_col} long, {lon_col} long"
-
-    def partial(it):
-        for pdf in it:
-            arr = _hull_vertex_array(pdf[lat_col].to_numpy(),
-                                     pdf[lon_col].to_numpy())
-            yield pd.DataFrame({lat_col: arr[:, 0], lon_col: arr[:, 1]})
-
-    part = points.select(F.col(lat_col).cast("long"),
-                         F.col(lon_col).cast("long")).mapInPandas(
-        partial, schema)
-
-    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        arr = _hull_vertex_array(pdf[lat_col].to_numpy(),
-                                 pdf[lon_col].to_numpy())
-        out = pd.DataFrame({lat_col: arr[:, 0], lon_col: arr[:, 1]})
-        out["n_hull"] = len(arr)
-        return out
-
-    return part.groupBy(F.lit(0).alias("_g")).applyInPandas(
-        final, f"{schema}, n_hull int")
 
 
 def hull_diameter(points: DataFrame, by: tuple = ("doc_id",),

@@ -152,19 +152,6 @@ def fingerprint_col(text: Column) -> Column:
     )
 
 
-def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    t = F.col(text_col)
-    return df.withColumns(
-        {
-            "nws": nws_count_col(t),
-            "n_tokens": token_count_col(t),
-            "quality": quality_score_col(t),
-            "lang_guess": lang_id_col(t),
-            "fingerprint": fingerprint_col(t),
-        }
-    )
-
-
 def bpe_pair_counts(
     df: DataFrame,
     text_col: str = "text",

@@ -3,7 +3,7 @@
 Design-for-100TB notes (tested on local[N]):
  * AQE on, including skew-join splitting and partition coalescing — the
    runtime re-plan is the first line of defense against hot H3/Morton cells
-   (the explicit salting path in operators/skew.py is the second).
+   (kNN's hot-cell fine tier, operators/knn.py, is the second).
  * Arrow enabled for all pandas UDF exchange; batch size capped so pandas
    UDF memory stays bounded regardless of row width.
  * shuffle.partitions scales with cores locally; on a real cluster this is

@@ -1,225 +1,19 @@
-"""Event-time streaming operators: watermarked tumbling-window aggregation
-and a custom stateful operator via applyInPandasWithState.
+"""Event-time sessionization and incremental stream dedup.
 
-The reference has no event-time semantics (its streaming surface is
-order-insensitive result delivery — codechunk.go:395-470); these are the
-Spark-native stream forms of the engine's batch aggregations:
-
- * stream_event_windows — the streaming twin of the batch `event_windows`
-   query (__spark_entry__.q_event_windows): tumbling event-time windows per
-   event_type with a watermark bounding state for late data.  In append
-   mode a window only emits once the watermark passes its end, so state is
-   dropped deterministically at 10^12-row scale instead of growing forever.
- * sessionize_stream — gap-based sessionization per key as a CUSTOM
-   stateful operator (applyInPandasWithState): state = (session start,
-   last ts, count); a session closes when the gap exceeds session_gap or
-   the state times out at the watermark.  This is the engine's pattern slot
-   for stateful ops Spark lacks built-in.
+ * sessionize_batch — gap-based sessions per key via lag-flag-cumsum window
+   algebra (no state, no Python), at microsecond precision; the
+   `sessionize` queries() entry and its DuckDB mirror.
+ * run_stream_dedup_increment — a foreachBatch stream that runs
+   operators.dedup.dedup_increment on every micro-batch of new documents
+   against a persisted band index; the `stream_dedup` queries() entry.
 
 Both are pure event-time logic — no wall clock — so results are replayable
-and identical across retries/cluster sizes (checkpoint/resume safe).
+and identical across retries and cluster sizes.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator, Tuple
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-SESSION_SCHEMA = ("key string, session_start timestamp, session_end timestamp, "
-                  "n_events int")
-SESSION_STATE_SCHEMA = "start long, last long, n int"
-
-
-def stream_event_windows(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Streaming tumbling-window rollup (watermarked, append-safe)."""
-    w = F.window(ts_col, window)
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(w.alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-        .select(
-            F.col("w.start").cast("string").alias("window_start"),
-            "event_type", "n_events", "total_value",
-        )
-    )
-
-
-def sessionize_stream(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    session_gap_s: int = 1800,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Gap-based sessions per key via applyInPandasWithState.
-
-    Emits one row per CLOSED session (a new event further than
-    session_gap_s from the last one closes the previous session; state
-    timeout at the watermark closes the final session).  Gap comparisons
-    run at MICROsecond precision — identical to sessionize_batch, so the
-    two are true twins on any input.
-
-    KNOWN stream-only approximation (state holds ONE live session per
-    key): late-but-admitted events that form sessions EARLIER than the
-    stored one are emitted as closed immediately.  If a later batch
-    delivers another admitted event belonging to one of those
-    already-emitted early sessions, it starts a second session row, so
-    under REPEATED late arrivals into the same early session the stream
-    can split one logical session across rows where sessionize_batch
-    would merge them.  Holding every early session in state until the
-    watermark passes its end would fix it at the cost of unbounded
-    per-key state under sustained lateness; the batch pass downstream is
-    the exact answer, this stage favors bounded state (same contract as
-    stream_exact_dedup).  Single late arrivals — the common case — are
-    exact, and events within the gap of the stored session are always
-    merged exactly (min/max fold below)."""
-
-    gap_us = session_gap_s * 1_000_000
-
-    def fn(key: Tuple[str], batches: Iterable[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        k = key[0]
-        out = []
-        if state.hasTimedOut:
-            if state.exists:
-                s, last, n = state.get
-                out.append((k, s, last, n))
-                state.remove()
-        else:
-            ts_all = []
-            for pdf in batches:
-                # MICROsecond precision, matching sessionize_batch exactly
-                # (an earlier draft floored to whole seconds, which merged
-                # sessions whose gap exceeded the threshold by < 1s)
-                ts_all.extend(int(t.value // 10**3)
-                              for t in pd.to_datetime(pdf[ts_col]))
-            ts_all.sort()
-            if state.exists:
-                s, last, n = state.get
-            else:
-                s, last, n = None, None, 0
-            # late-but-admitted events more than a gap BEFORE the stored
-            # session start belong to their own earlier session(s): fold
-            # them first (ascending, so the standard gap walk applies);
-            # the final early session can never bridge to the stored one
-            # (its last < s - gap by construction), so it closes too.
-            if s is not None:
-                early = [t for t in ts_all if t < s - gap_us]
-                ts_all = ts_all[len(early):]
-                es = el = en = None
-                for t in early:
-                    if es is None:
-                        es, el, en = t, t, 1
-                    elif t - el > gap_us:
-                        out.append((k, es, el, en))
-                        es, el, en = t, t, 1
-                    else:
-                        el, en = t, en + 1
-                if es is not None:
-                    out.append((k, es, el, en))
-            for t in ts_all:
-                if s is None:
-                    s, last, n = t, t, 1
-                elif t - last > gap_us:
-                    out.append((k, s, last, n))
-                    s, last, n = t, t, 1
-                else:
-                    # late-but-admitted events within the gap of the stored
-                    # session must not move its boundary backward: a
-                    # rewound `last` would let the next on-time event
-                    # exceed the gap measured from the stale point and
-                    # spuriously split one session into two
-                    s, last, n = min(s, t), max(last, t), n + 1
-            if s is not None:
-                state.update((s, last, n))
-                state.setTimeoutTimestamp((last + gap_us) // 1000)
-        if out:
-            yield pd.DataFrame({
-                "key": [r[0] for r in out],
-                "session_start": pd.to_datetime(
-                    [r[1] for r in out], unit="us"),
-                "session_end": pd.to_datetime([r[2] for r in out], unit="us"),
-                "n_events": [r[3] for r in out],
-            })
-
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def stream_tile_rollup(
-    points: DataFrame,
-    z: int,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Streaming twin of the batch tile rollup: per event-time window, the
-    z/x/y tile histogram of an incoming point stream (watermarked, so tile
-    state for a window is dropped once the watermark passes — bounded state
-    at any ingest scale).
-
-    Tile assignment is the same pure-JVM integer math as the batch path
-    (operators/geo.tile_cols), so stream and batch rollups are bit-equal on
-    the same input — pinned by tests/test_checkpoint_skew_stream.py."""
-    from ..operators.geo import tile_cols
-
-    tx, ty = tile_cols(F.col("qlat"), F.col("qlon"), z)
-    return (
-        points.withWatermark(ts_col, watermark)
-        .groupBy(
-            F.window(ts_col, window).alias("w"),
-            tx.alias("x"), ty.alias("y"),
-        )
-        .agg(F.count("*").alias("n_points"))
-        .select(
-            F.col("w.start").cast("string").alias("window_start"),
-            F.lit(z).alias("z"), "x", "y", "n_points",
-        )
-    )
-
-
-def stream_exact_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ts",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming exact dedup for a document ingest: drop every later
-    arrival of the same content hash within the watermark horizon
-    (dropDuplicatesWithinWatermark keys state by md5, expires it once the
-    watermark passes, so state is bounded at 10^12-doc scale).
-
-    Semantics differ from batch exact_dedup on purpose: the stream keeps
-    the FIRST-ARRIVED copy (there is no 'min doc_id' until the stream
-    ends), and duplicates separated by more than the watermark horizon
-    both survive — the batch pass downstream remains the total guarantee;
-    this stage just keeps ~duplicate-free data flowing into it."""
-    return (
-        docs.withWatermark(ts_col, watermark)
-        .withColumn("_content_md5", F.md5(F.col(text_col)))
-        .dropDuplicatesWithinWatermark(["_content_md5"])
-        .drop("_content_md5")
-    )
 
 
 def sessionize_batch(
@@ -229,14 +23,13 @@ def sessionize_batch(
     session_gap_s: int = 1800,
     bucket_s: int | None = 86400,
 ) -> DataFrame:
-    """Batch twin of sessionize_stream: gap-based sessions per key via the
-    classic lag-flag-cumsum window algebra (no state, no Python).  A
-    session boundary is a gap > session_gap_s between consecutive events
-    (epoch MICROSECOND precision, so the comparison is integer-exact and
-    the result is bit-identical at any parallelism — tied timestamps
-    produce gap 0 and can never straddle a boundary, so tie order is
-    irrelevant).  Returns one row per session: key, start_us, end_us,
-    n_events.
+    """Gap-based sessions per key via the classic lag-flag-cumsum window
+    algebra (no state, no Python).  A session boundary is a gap >
+    session_gap_s between consecutive events (epoch MICROSECOND precision,
+    so the comparison is integer-exact and the result is bit-identical at
+    any parallelism — tied timestamps produce gap 0 and can never
+    straddle a boundary, so tie order is irrelevant).  Returns one row
+    per session: key, start_us, end_us, n_events.
 
     **Scale shape (bucket_s set, the default):** TWO-PHASE.  A plain
     `Window.partitionBy(key)` serializes each key's entire history into
@@ -258,7 +51,7 @@ def sessionize_batch(
         gaps > gap) can never merge with anything and pass through.
 
     The result is bit-identical to the single-window form for ANY
-    bucket_s >= 1s (equality pinned at two bucket sizes in
+    bucket_s >= 1s (equality pinned at three bucket sizes in
     tests/test_checkpoint_skew_stream.py); choose bucket_s so one key's
     bucket of events fits a task comfortably (default 1 day).
 
@@ -400,89 +193,6 @@ def run_stream_dedup_increment(
          .parquet(out_path))
 
     writer = (doc_stream.writeStream.foreachBatch(_batch)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_cell_hist(
-    points: DataFrame,
-    res: int,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Watermarked per-window cell histogram of a point stream: the
-    windowed twin of the batch `hist` input that hotspot_gi/raster_smooth
-    consume.  Cell assignment is the same shiftright integer math as the
-    batch path (16-bit qlat/qlon -> res-bit cells), so stream and batch
-    histograms are bit-equal on the same input.  In append mode a window's
-    rows emit exactly once — when the watermark passes its end — which is
-    the property run_stream_hotspot_gi relies on."""
-    sh = 16 - res
-    return (
-        points.withWatermark(ts_col, watermark)
-        .groupBy(
-            F.window(ts_col, window).alias("w"),
-            F.shiftright("qlat", sh).alias("cy"),
-            F.shiftright("qlon", sh).alias("cx"),
-        )
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").cast("string").alias("window_start"),
-                "cy", "cx", "n")
-    )
-
-
-def run_stream_hotspot_gi(
-    points: DataFrame,
-    res: int,
-    out_path: str,
-    checkpoint_path: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-    available_now: bool = True,
-):
-    """Streaming Getis-Ord Gi* hotspot surfaces, one per finalized
-    event-time window: watermarked windowed cell histogram in APPEND mode
-    -> foreachBatch applies the batch hotspot_gi grouped by window
-    (tiles.hotspot_gi(by=["window_start"])) to each batch of finalized
-    windows and writes the z-score surface to `out_path` partitioned by
-    window_start.
-
-    Why this is exact, not approximate: append mode emits a window's
-    histogram rows ONLY once the watermark passes the window end, and emits
-    the whole window in that one micro-batch — so every foreachBatch call
-    sees complete histograms for the windows it contains, and the per-window
-    Gi* (moments over that window's own histogram, N = the full grid) is
-    bit-equal to running the batch operator on that window's points.
-    Pinned by tests/test_checkpoint_skew_stream.py.
-
-    At-least-once safety: a replayed micro-batch contains the same finalized
-    windows, and the write overwrites its own window_start partitions
-    (dynamic partition overwrite) — replays rewrite identical rows.
-
-    State at scale: the windowed agg keeps one row per (open window, cell);
-    the watermark drops a window's state at finalization, so state is
-    bounded by (windows in the watermark horizon) x (occupied cells), never
-    by stream length."""
-    from ..operators.tiles import hotspot_gi
-
-    hist = stream_cell_hist(points, res, window=window,
-                            watermark=watermark, ts_col=ts_col)
-
-    def _batch(df: DataFrame, batch_id: int) -> None:
-        if df.isEmpty():
-            return
-        (hotspot_gi(df, res, by=("window_start",))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("window_start")
-         .parquet(out_path))
-
-    writer = (hist.writeStream.foreachBatch(_batch)
-              .outputMode("append")
               .option("checkpointLocation", checkpoint_path))
     if available_now:
         writer = writer.trigger(availableNow=True)
