@@ -1,7 +1,6 @@
 """Checkpoint/resume, sessionization, and stream-equals-batch parity for
 the stream-capable operators — Spark-side tests."""
 
-import json
 import os
 
 import pytest

@@ -2,8 +2,6 @@
 empty doc, single-word doc, media-only doc, zero-match polygon set, kNN
 query in an empty region (ring expansion must widen and terminate)."""
 
-from pyspark.sql import functions as F
-
 from tree_code_chunker_spark.operators.chunker import chunk_documents
 from tree_code_chunker_spark.operators.knn import knn_ring
 from tree_code_chunker_spark.operators.pip import pip_join

@@ -1,8 +1,6 @@
 """Per-row error isolation (reference codechunk_test.go:297-318), per-row
 option merge (codechunk.go:342-359), embedding near-dup."""
 
-from pyspark.sql import functions as F
-
 from tree_code_chunker_spark.operators.chunker import chunk_documents
 from tree_code_chunker_spark.operators.dedup import embedding_near_dup_pairs
 

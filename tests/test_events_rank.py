@@ -4,8 +4,6 @@ plus DuckDB cross-engine equality on the gate tables."""
 import duckdb
 import pytest
 
-from pyspark.sql import functions as F
-
 from tree_code_chunker_spark.operators.events import (
     asof_join,
     funnel,

@@ -1,7 +1,6 @@
 """Integer-exact PageRank vs a pure-python fixed-point mirror."""
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from tree_code_chunker_spark.operators.graph import (
     SCALE,

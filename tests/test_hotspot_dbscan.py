@@ -10,7 +10,6 @@ import math
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from tree_code_chunker_spark.operators.spatial import dbscan
 from tree_code_chunker_spark.operators.tiles import hotspot_gi

@@ -417,7 +417,6 @@ def test_embedding_lsh_candidates_prune(spark):
     """The banded candidate set must be a small fraction of all pairs —
     the reason the LSH form is the scale default (measured ~2% at
     n_bits=32/bands=4 on the fixture)."""
-    from tree_code_chunker_spark.operators.dedup import minhash_bands  # noqa: F401
     from tree_code_chunker_spark.operators.similarity import lsh_bucket_col
 
     aug = _planted_twin_vectors(spark).cache()

@@ -247,7 +247,6 @@ def test_determinism_across_parallelism(spark):
 
 def _brute_hausdorff(pa, pb, threshold):
     """pa/pb: dict id -> list[(y, x)] — directed max-min, symmetric max."""
-    import itertools
     out = {}
     t2 = threshold * threshold
     for ai, aps in pa.items():

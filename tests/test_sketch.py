@@ -6,7 +6,6 @@ rounded 3 places — covering BOTH estimator branches (linear counting for
 small groups, raw harmonic mean for large)."""
 
 import duckdb
-import pytest
 
 from pyspark.sql import functions as F
 

@@ -7,17 +7,12 @@ from pyspark.sql import functions as F
 
 from tests.oracle_fold import oracle_chunks
 from tree_code_chunker_spark.operators.chunker import chunk_documents
-from tree_code_chunker_spark.operators.geo import (
-    cell_np,
-    derive_point_cols,
-    quantize_np,
-)
+from tree_code_chunker_spark.operators.geo import derive_point_cols
 from tree_code_chunker_spark.operators.knn import knn_bruteforce, knn_ring
 from tree_code_chunker_spark.operators.pip import (
     _collect_polygon_pack,
     ray_cast_rings_np,
     pip_join,
-    ray_cast_np,
 )
 from tree_code_chunker_spark.sources.datagen import (
     gen_documents,

@@ -9,7 +9,6 @@ reference implementation and its endpoint/epsilon contracts.
 
 import itertools
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 

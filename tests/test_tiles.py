@@ -33,6 +33,27 @@ def test_assignment_matches_numpy(spark):
         assert 0 <= r["in_y"] < (1 << (16 - r["z"]))
 
 
+def test_assign_tiles_replaces_same_named_columns(spark):
+    """Points columns named x or in_y are replaced in place, not kept
+    beside the tile columns (the `withColumns` contract)."""
+    rows = [(f"d{i}", i, -1, (i * 733) % 65536, (i * 577) % 65536, -2)
+            for i in range(50)]
+    pts = spark.createDataFrame(
+        rows, "doc_id string, span_pos long, x long, qlat long, qlon long, "
+              "in_y long")
+    got = assign_tiles(pts, zooms=(4, 12))
+    assert got.columns == ["doc_id", "span_pos", "x", "qlat", "qlon", "in_y",
+                           "z", "y", "in_x"]
+    out = got.collect()
+    assert len(out) == 100
+    for r in out:
+        x, y = tile_np(np.array([r["qlat"]]), np.array([r["qlon"]]), r["z"])
+        mask = (1 << (16 - r["z"])) - 1
+        assert (r["x"], r["y"]) == (int(x[0]), int(y[0]))
+        assert (r["in_x"], r["in_y"]) == (r["qlon"] & mask,
+                                          (65535 - r["qlat"]) & mask)
+
+
 def test_vector_tiles_cap_and_accounting(spark, monkeypatch):
     # all points in ONE tile at z=4 -> cap must kick in with exact accounting
     monkeypatch.setattr(tiles, "MAX_FEATURES_PER_TILE", 100)
@@ -58,6 +79,24 @@ def test_raster_counts_conserved(spark):
         for p in r["pixels"]:
             assert 0 <= p["px"] < 256 and 0 <= p["py"] < 256
     assert by_zoom == {4: 400, 8: 400}
+
+
+def test_vector_tiles_exact_for_null_and_off_grid_points(spark):
+    """A point with a null coordinate or off the grid lands in the same
+    tile with the same in-tile offsets as assign_tiles gives it: the
+    offsets' packing for the shuffle round-trips for every input."""
+    rows = [("a", 0, 100, 200), ("b", 1, None, 300), ("c", 2, 400, None),
+            ("d", 3, None, None), ("e", 4, 1 << 40, -5),
+            ("f", 5, -7, 65536 + 9)]
+    pts = spark.createDataFrame(
+        rows, "doc_id string, span_pos long, qlat long, qlon long")
+    want = defaultdict(list)
+    for r in assign_tiles(pts, zooms=(4, 12)).collect():
+        want[(r["z"], r["x"], r["y"])].append(
+            (r["doc_id"], r["span_pos"], r["in_x"], r["in_y"]))
+    got = {(r["z"], r["x"], r["y"]): [tuple(f) for f in r["features"]]
+           for r in vector_tiles(pts, zooms=(4, 12)).collect()}
+    assert got == {k: sorted(v) for k, v in want.items()}
 
 
 def test_tiles_deterministic_across_parallelism(spark):
@@ -109,6 +148,19 @@ def test_vector_tiles_plan_is_one_shuffle_one_window(spark, plan_nodes):
     assert nodes.count("Exchange") == 1, nodes
     assert "BroadcastExchange" not in nodes, nodes
     assert nodes.count("Window") == 1, nodes
+
+
+def test_tile_plans_scan_points_once(spark, plan_nodes, tmp_path):
+    """Every zoom comes from one scan of the points table, and each tile
+    stage shuffles once: no per-zoom union, no second aggregate exchange."""
+    path = str(tmp_path / "points")
+    _pts(spark).write.parquet(path)
+    pts = spark.read.parquet(path)
+    for op in (vector_tiles, raster_tiles):
+        nodes = plan_nodes(op(pts, zooms=(4, 8, 12)))
+        assert nodes.count("FileScan") == 1, (op.__name__, nodes)
+        assert nodes.count("Exchange") == 1, (op.__name__, nodes)
+        assert "Union" not in nodes, (op.__name__, nodes)
 
 
 def test_raster_to_vector_roundtrip_conserves_counts(spark):

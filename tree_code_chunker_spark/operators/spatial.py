@@ -1129,7 +1129,7 @@ def convex_hull(points: DataFrame, by: tuple = ("doc_id",),
         for f in points.schema if f.name in by)
     schema = f"{fields}, {lat_col} long, {lon_col} long, n_hull int"
 
-    def hull_one(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def hull_one(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         arr = _hull_vertex_array(pdf[lat_col].to_numpy(),
                                  pdf[lon_col].to_numpy())
         out = pd.DataFrame({lat_col: arr[:, 0], lon_col: arr[:, 1]})
@@ -1213,7 +1213,7 @@ def rdp_simplify(
               f"{lat_col} long, {lon_col} long")
     eps2 = int(epsilon) * int(epsilon)
 
-    def simplify_one(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def simplify_one(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order_col)
         ys = [int(v) for v in pdf[lat_col]]
         xs = [int(v) for v in pdf[lon_col]]

@@ -2,25 +2,30 @@
 
 north_star: "raster<->vector tile materialization at fixed zoom levels with
 deterministic tile assignment".  Assignment is pure integer column math
-(geo.tile_cols — whole-stage codegen, bit-exact).  Every zoom is a
-projection of the same point scan; the zooms are unioned and materialized
-together on the (z, x, y) key:
+(geo.tile_cols — whole-stage codegen, bit-exact).  Each stage reads the
+points once: one projection builds an array holding one struct per zoom and
+`inline` turns it into one row per (point, zoom), so every zoom comes from
+the same scan.  Each stage then shuffles once, on the (z, x, y) key:
 
  * **vector tiles**: per (z,x,y), the list of features (doc_id, span_pos,
    in-tile quantized coords), capped at MAX_FEATURES_PER_TILE by the
    deterministic order (doc_id, span_pos) — the cap bounds tile payload
-   size; dropped counts are reported, never silent.  One row_number window
-   and one aggregate: a single shuffle for all zooms.
+   size; dropped counts are reported, never silent.  The row_number window
+   and the aggregate share the window's exchange; a point's two in-tile
+   offsets cross it packed in one long.
  * **raster tiles**: per (z,x,y), a count grid of 2^min(RASTER_SUB_BITS,
    GRID_BITS - z) pixels per side (the rasterization), stored sparse as
    (px, py, count) triples — dense arrays would be mostly zeros at high
-   zooms.  Two aggregates: per pixel, then per tile.
+   zooms.  The rows are hash-partitioned on (z, x, y) first, so the
+   per-pixel and the per-tile aggregates both run on that partitioning.
 
-Scale: a tile is ranked by the one task that owns its window partition, so
-a tile's row count bounds that task; AQE handles moderate skew across tiles.
+Scale: a tile is aggregated by the one task that owns its partition, so a
+tile's row count bounds that task; AQE handles moderate skew across tiles.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
@@ -29,6 +34,7 @@ from .geo import tile_cols
 
 MAX_FEATURES_PER_TILE = 10_000  # features kept per vector tile; rest counted
 RASTER_SUB_BITS = 8  # raster side cap: 2^RASTER_SUB_BITS pixels per tile
+_TILE_COLS = ("z", "x", "y", "in_x", "in_y")
 
 
 def _tile_exprs(z: int) -> dict[str, Column]:
@@ -44,32 +50,69 @@ def _tile_exprs(z: int) -> dict[str, Column]:
     }
 
 
-def _union(parts: list[DataFrame]) -> DataFrame:
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+def _per_zoom(fields: Callable[[int], dict[str, Column]],
+              zooms: tuple[int, ...]) -> Column:
+    """Generator column: one row per zoom, with the columns `fields(z)`
+    names, from the one input row — every zoom out of a single scan."""
+    return F.inline(F.array(*[
+        F.struct(*[c.alias(n) for n, c in fields(z).items()]) for z in zooms
+    ]))
 
 
 def assign_tiles(points: DataFrame, zooms: tuple[int, ...] = TILE_ZOOMS) -> DataFrame:
     """points(qlat, qlon, ...) -> one row per (point, zoom) with z/x/y and
-    in-tile pixel offsets."""
-    return _union([points.withColumns(_tile_exprs(z)) for z in zooms])
+    in-tile pixel offsets.  A points column named like one of these is
+    replaced in place, as `withColumns` would."""
+    taken = {c.lower() for c in points.columns}
+    keep = [c for c in points.columns if c.lower() not in _TILE_COLS]
+    order = points.columns + [n for n in _TILE_COLS if n not in taken]
+    return points.select(*keep, _per_zoom(_tile_exprs, zooms)).select(*order)
+
+
+# vector_tiles ships a point's in-tile offsets through its shuffle as one
+# long, in_x << _OFF_BITS | in_y.  Offsets are below 2^GRID_BITS for every
+# input, so _NO_OFF = 2^GRID_BITS stands for a null one and the packing is
+# exact for null and off-grid points too.
+_OFF_BITS = GRID_BITS + 1
+_NO_OFF = 1 << GRID_BITS
+
+
+def _feature_exprs(z: int) -> dict[str, Column]:
+    """z/x/y and the packed in-tile offsets `_off`: each shuffled row is one
+    long narrower than with in_x and in_y apart."""
+    e = _tile_exprs(z)
+    none = F.lit(_NO_OFF).cast("long")
+    return {
+        "z": e["z"], "x": e["x"], "y": e["y"],
+        "_off": F.shiftleft(F.coalesce(e["in_x"], none), _OFF_BITS)
+        .bitwiseOR(F.coalesce(e["in_y"], none)),
+    }
+
+
+def _offset(bits: Column) -> Column:
+    """One unpacked in-tile offset: `bits`, or null where it is _NO_OFF."""
+    return F.when(bits != _NO_OFF, bits)
 
 
 def vector_tiles(points: DataFrame, zooms: tuple[int, ...] = TILE_ZOOMS) -> DataFrame:
     """(z, x, y, features array<struct>, n_features, n_dropped).
 
     features holds a tile's first MAX_FEATURES_PER_TILE points by
-    (doc_id, span_pos), sorted; n_dropped counts the rest.  One window ranks
-    each tile's rows and the aggregate on the same key collects the ranked
-    rows under the cap and counts them all, so it needs no second shuffle.
+    (doc_id, span_pos), sorted; n_dropped counts the rest.  One scan of
+    points yields every zoom's rows, keeping only the columns a feature
+    needs; one window ranks each tile's rows and the aggregate on the same
+    key collects the ranked rows under the cap and counts them all, so the
+    stage has one exchange.
     """
     cap = MAX_FEATURES_PER_TILE
     w = Window.partitionBy("z", "x", "y").orderBy("doc_id", "span_pos")
-    feature = F.struct("doc_id", "span_pos", "in_x", "in_y")
+    feature = F.struct(
+        "doc_id", "span_pos",
+        _offset(F.shiftright("_off", _OFF_BITS)).alias("in_x"),
+        _offset(F.col("_off").bitwiseAND((1 << _OFF_BITS) - 1)).alias("in_y"),
+    )
     return (
-        assign_tiles(points, zooms)
+        points.select("doc_id", "span_pos", _per_zoom(_feature_exprs, zooms))
         .withColumn("_rn", F.row_number().over(w))
         .groupBy("z", "x", "y")
         .agg(
@@ -85,25 +128,34 @@ def vector_tiles(points: DataFrame, zooms: tuple[int, ...] = TILE_ZOOMS) -> Data
     )
 
 
+def _pixel_exprs(z: int) -> dict[str, Column]:
+    """z/x/y and the point's raster pixel at z: in-tile offsets shifted
+    down to at most 2^RASTER_SUB_BITS pixels per side."""
+    e = _tile_exprs(z)
+    down = max(GRID_BITS - z - RASTER_SUB_BITS, 0)
+    return {
+        "z": e["z"], "x": e["x"], "y": e["y"],
+        "px": F.shiftright(e["in_x"], down).cast("int"),
+        "py": F.shiftright(e["in_y"], down).cast("int"),
+    }
+
+
 def raster_tiles(points: DataFrame, zooms: tuple[int, ...] = TILE_ZOOMS) -> DataFrame:
     """(z, x, y, pixels array<struct<px:int,py:int,n:bigint>>, n_points) —
     sparse count raster per tile, 2^min(RASTER_SUB_BITS, GRID_BITS - z)
     = 2^min(8, 16 - z) pixels per side: in-tile offsets are down-sampled to
     the raster grid, and tiles at zooms whose offsets already fit it keep
-    full resolution."""
-    parts = []
-    for z in zooms:
-        e = _tile_exprs(z)
-        down = max(GRID_BITS - z - RASTER_SUB_BITS, 0)
-        parts.append(points.select(
-            e["z"].alias("z"), e["x"].alias("x"), e["y"].alias("y"),
-            F.shiftright(e["in_x"], down).cast("int").alias("px"),
-            F.shiftright(e["in_y"], down).cast("int").alias("py"),
-        ))
-    pix = _union(parts).groupBy("z", "x", "y", "px", "py") \
-        .agg(F.count("*").alias("n"))
+    full resolution.
+
+    One scan of points yields every zoom's pixels; they are hash-partitioned
+    on (z, x, y), and the per-pixel count and the per-tile aggregate both
+    run on that partitioning, so the stage has one exchange."""
     return (
-        pix.groupBy("z", "x", "y")
+        points.select(_per_zoom(_pixel_exprs, zooms))
+        .repartition("z", "x", "y")
+        .groupBy("z", "x", "y", "px", "py")
+        .agg(F.count("*").alias("n"))
+        .groupBy("z", "x", "y")
         .agg(
             F.sort_array(
                 F.collect_list(F.struct("px", "py", "n"))

@@ -8,6 +8,15 @@ Design-for-100TB notes (tested on local[N]):
    UDF memory stays bounded regardless of row width.
  * shuffle.partitions scales with cores locally; on a real cluster this is
    set to ~2-3x total executor cores via spark-submit conf.
+ * DataFrame debugging off (spark.python.sql.dataFrameDebugging.enabled).
+   With it on, PySpark wraps every Column and DataFrame call in an origin
+   capture: a Python stack walk plus several JVM calls, so that an
+   analysis error can name the Python line that built the failing
+   expression.  The engine builds each plan from hundreds of Column calls:
+   on a 4-CPU host an F.col took 1.4-1.7 ms with the capture and 0.55-0.62
+   ms without it, a `col + 5` 1.2-1.4 ms against 0.21 ms.  Errors still
+   raise with the same class and message; only the Python call-site
+   fragment of the error context is gone.
 """
 
 from __future__ import annotations
@@ -49,6 +58,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_confs or {}).items():
         b = b.config(k, v)
