@@ -41,7 +41,6 @@ from tree_code_chunker_spark.operators.geo import (
     cell_sql,
     derive_point_cols,
     derive_point_sql,
-    tile_cols,
     tile_sql,
 )
 from tree_code_chunker_spark.operators.knn import knn_ring
@@ -60,6 +59,7 @@ from tree_code_chunker_spark.operators.textstats import (
     token_count_col,
     token_count_sql,
 )
+from tree_code_chunker_spark.operators.tiles import assign_tiles
 from tree_code_chunker_spark.sources.adapter import (
     spanify,
     spanify_exploded,
@@ -238,15 +238,9 @@ FROM points
 
 
 def q_tile_rollup(spark, sf_dir):
-    p = _points(spark, sf_dir)
-    parts = []
-    for z in (4, 8, 12):
-        tx, ty = tile_cols(F.col("qlat"), F.col("qlon"), z)
-        parts.append(
-            p.select(F.lit(z).alias("z"), tx.alias("x"), ty.alias("y"))
-        )
-    allz = parts[0].unionByName(parts[1]).unionByName(parts[2])
-    return allz.groupBy("z", "x", "y").agg(F.count("*").alias("n_points"))
+    # every zoom from one scan of the points
+    return (assign_tiles(_points(spark, sf_dir), (4, 8, 12))
+            .groupBy("z", "x", "y").agg(F.count("*").alias("n_points")))
 
 
 def _tile_union_sql():

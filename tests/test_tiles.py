@@ -163,6 +163,26 @@ def test_tile_plans_scan_points_once(spark, plan_nodes, tmp_path):
         assert "Union" not in nodes, (op.__name__, nodes)
 
 
+def test_tile_rollup_entry_scans_points_once(spark, plan_nodes, sf_dir):
+    """The tile_rollup gate entry takes every zoom from one scan of the
+    points, with the values and types of the per-zoom union it replaced."""
+    import __spark_entry__ as em
+    from tree_code_chunker_spark.operators.geo import tile_cols
+
+    got = em.q_tile_rollup(spark, sf_dir)
+    nodes = plan_nodes(got)
+    assert nodes.count("FileScan") == 1, nodes
+    assert "Union" not in nodes, nodes
+
+    p = em._points(spark, sf_dir)
+    parts = [p.select(F.lit(z).alias("z"), *(c.alias(n) for n, c in zip(
+        "xy", tile_cols(F.col("qlat"), F.col("qlon"), z)))) for z in (4, 8, 12)]
+    want = (parts[0].unionByName(parts[1]).unionByName(parts[2])
+            .groupBy("z", "x", "y").agg(F.count("*").alias("n_points")))
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
 def test_raster_to_vector_roundtrip_conserves_counts(spark):
     from pyspark.sql import functions as F
 

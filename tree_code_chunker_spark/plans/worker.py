@@ -1,4 +1,4 @@
-"""Per-process set-up of a Python worker that runs engine code.
+"""Per-process set-up of the Python workers that run a job's Python code.
 
 A reused PySpark worker pays two fixed costs on every task, before and
 after the UDF body:
@@ -12,9 +12,20 @@ after the UDF body:
 * The daemon runs a full ``gc.collect()`` after each task, which walks
   every tracked object, including the import-time heap.
 
-``setup_python_worker`` removes both, once per process.  The package
-``__init__`` calls it; it acts only inside a Python worker, never on the
-driver.  See PLANS.md § Python worker per-task cost.
+``setup_process`` removes both, once per process, in one of two places:
+
+* the PySpark daemon of every ``get_spark`` session (``plans/daemon.py``),
+  once, before it forks the first worker.  Every worker inherits the
+  patched ``zipimporter`` and the frozen heap, whatever code it runs: the
+  identity ``map`` behind a list-built ``createDataFrame``, or a UDF that
+  never imports the engine;
+* otherwise, in a session the engine did not build, each worker that
+  imports the package: its ``__init__`` calls ``setup_python_worker``,
+  which acts only inside a Python worker, never on the driver.  Under a
+  ``get_spark`` daemon the package is already imported before the fork,
+  so that hook never runs a second time in a worker.
+
+See PLANS.md § Python worker per-task cost.
 """
 
 from __future__ import annotations
@@ -45,12 +56,10 @@ def invalidate_changed_zip(self: zipimport.zipimporter) -> None:
         self._read_key = key
 
 
-def setup_python_worker() -> None:
+def setup_process() -> None:
     """Install the stat-guarded zip invalidation (where the stdlib still
     re-reads eagerly) and freeze the import-time heap out of the per-task
-    ``gc.collect()``.  Does nothing outside a Python worker."""
-    if TaskContext.get() is None:
-        return
+    ``gc.collect()``."""
     if sys.version_info < (3, 13):
         zipimport.zipimporter.invalidate_caches = invalidate_changed_zip
     # Every engine UDF is an Arrow/pandas UDF over numpy, and the package
@@ -61,3 +70,9 @@ def setup_python_worker() -> None:
     import pyarrow  # noqa: F401
 
     gc.freeze()
+
+
+def setup_python_worker() -> None:
+    """``setup_process`` inside a Python worker; nothing on the driver."""
+    if TaskContext.get() is not None:
+        setup_process()
