@@ -161,9 +161,87 @@ def test_checkpoint_empty_stage_commits_and_reads_back(spark, tmp_path,
                       partition_by)
     assert empty.count() == 0 and empty.schema == full.schema
     assert pipeline_lineage(root)[0]["n_rows"] == 0
+    assert pipeline_lineage(root)[0]["files"] == []
 
     again = run_stage(spark, root, "empty", _no_rebuild, partition_by)
     assert again.count() == 0 and again.schema == full.schema
+
+
+@pytest.mark.parametrize("partition_by", [None, ["z"]])
+def test_checkpoint_stage_dir_holds_only_named_files(spark, tmp_path,
+                                                     partition_by):
+    """A committed stage directory is the manifest plus the parquet files
+    it names: no _SUCCESS, no .crc, no _temporary."""
+    root = str(tmp_path / "ckpt")
+    m = commit_stage(_stage_df(spark), root, "s", partition_by)
+    stage_dir = os.path.join(root, "s")
+    on_disk = {os.path.relpath(os.path.join(d, fn), stage_dir)
+               for d, _dirs, names in os.walk(stage_dir) for fn in names}
+    assert on_disk == {"_manifest.json"} | {f["path"] for f in m["files"]}
+    assert len(m["files"]) > 1
+
+
+def test_checkpoint_partition_paths_match_spark_writer(spark, tmp_path):
+    """Partition directories are named as Spark's writer names them (null
+    and '' as __HIVE_DEFAULT_PARTITION__, escaped '/', '=', '%') and read
+    back the same rows."""
+    vals = [None, "", "a/b=c%d e", "x y", "plain", "é:#?"]
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(vals * 3)],
+                               "id long, k string")
+    root = str(tmp_path / "ckpt")
+    df.write.partitionBy("k").parquet(str(tmp_path / "spark"))
+    m = commit_stage(df, root, "s", ["k"])
+    assert {f["path"].split("/")[0] for f in m["files"]} == {
+        d for d in os.listdir(tmp_path / "spark") if d.startswith("k=")}
+    got = run_stage(spark, root, "s", _no_rebuild, ["k"])
+    want = spark.read.parquet(str(tmp_path / "spark"))
+    assert got.schema == want.schema
+    assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+
+
+_ALL_TYPES = """i bigint, n int, d double, b boolean, s string,
+    a array<bigint>, sa array<struct<x: bigint, y: string>>, ts timestamp,
+    dt date, dec decimal(12,3), m map<string, bigint>, bin binary"""
+
+
+@pytest.mark.parametrize("partition_by", [None, ["n"]])
+def test_checkpoint_type_round_trip(spark, tmp_path, partition_by):
+    """Every type the jobs write, plus timestamp, date, decimal, map and
+    binary, reads back row-equal and schema-equal (nulls included)."""
+    import datetime as dt
+    from decimal import Decimal
+
+    rows = [(i, i % 2, i / 3, i % 3 == 0, f"s{i}", list(range(i % 4)),
+             [(i, "x"), (-i, None)],
+             dt.datetime(2024, 1, 1, 12, 30, i % 60, 123456),
+             dt.date(1999, 12, 31) + dt.timedelta(days=i),
+             Decimal(i) / 8, {"k": i, "j": -i}, bytes([i % 256, 0]))
+            for i in range(40)]
+    rows.append((None,) * 12)
+    df = spark.createDataFrame(rows, _ALL_TYPES)
+    root = str(tmp_path / "ckpt")
+    commit_stage(df, root, "s", partition_by)
+    got = run_stage(spark, root, "s", _no_rebuild, partition_by)
+    cols = [c for c in df.columns if c not in (partition_by or [])] \
+        + (partition_by or [])
+    assert got.schema == df.select(*cols).schema
+    assert sorted(got.select(*df.columns).collect(), key=repr) \
+        == sorted(df.collect(), key=repr)
+    # the files alone carry the same types, without the manifest's schema
+    inferred = spark.read.parquet(os.path.join(root, "s"))
+    assert inferred.select(*cols).schema == df.select(*cols).schema
+
+
+@pytest.mark.parametrize("col", [
+    "INTERVAL '1' DAY", "make_interval(0, 1)", "NULL"])
+def test_checkpoint_unwritable_type_names_column(spark, tmp_path, col):
+    """A column no checkpoint can hold fails the commit by name, before
+    the committed snapshot is touched."""
+    root = str(tmp_path / "ckpt")
+    m = commit_stage(_stage_df(spark), root, "s")
+    with pytest.raises(TypeError, match="'bad'"):
+        commit_stage(_stage_df(spark).withColumn("bad", F.expr(col)), root, "s")
+    assert _committed_manifest(root, "s")["snapshot_id"] == m["snapshot_id"]
 
 
 def test_rebuild_text_empty_window():
