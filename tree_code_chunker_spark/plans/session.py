@@ -33,11 +33,29 @@ Design-for-100TB notes (tested on local[N]):
    without it a spark-submit run from outside the checkout fails in the
    daemon with "No module named 'tree_code_chunker_spark'".  The master
    is always local, so the driver's path is valid for the workers.
+ * Every JVM <-> Python exchange over Unix domain sockets
+   (spark.python.unix.domain.socket.enabled): the daemon's listening
+   socket and each task's data stream, the list-built createDataFrame's
+   Python RDD, collect() result serving and the accumulator server.  Over
+   loopback TCP (PySpark sets no TCP_NODELAY) each Python task waited a
+   fixed ~44 ms: the slowest task's UDF body in an identity mapInArrow
+   over 4 parquet files took 43.7 ms (IQR 42.7-44.5) over TCP and 13.2
+   ms (11.6-18.6) over Unix sockets on a 4-CPU host, and the job 146
+   against 115 ms.  The sockets go in socket_dir(), not Spark's default
+   java.io.tmpdir: a socket path holds at most 107 bytes and the name
+   Spark gives each socket takes 43 of them, so a long temp dir fails
+   session start with "AF_UNIX path too long".  The directory is private
+   (mode 0700): these sockets carry no auth secret, only file
+   permissions guard them.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -47,6 +65,16 @@ DAEMON_MODULE = "tree_code_chunker_spark.plans.daemon"
 # the directory the package is imported from, or the zip holding it
 IMPORT_ROOT = os.path.dirname(
     os.path.dirname(os.path.abspath(tree_code_chunker_spark.__file__)))
+
+
+@functools.cache
+def socket_dir() -> str:
+    """This process's directory for its sessions' Unix domain sockets:
+    made once, mode 0700, under /tmp so that a socket path stays short,
+    and removed when the process that made it exits."""
+    path = tempfile.mkdtemp(prefix="tcc-", dir="/tmp")
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def get_spark(
@@ -83,6 +111,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.python.daemon.module", DAEMON_MODULE)
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", socket_dir())
     )
     for k, v in (extra_confs or {}).items():
         b = b.config(k, v)
