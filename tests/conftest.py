@@ -13,7 +13,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 def spark():
     from tree_code_chunker_spark.plans.session import get_spark
 
-    s = get_spark("tcc-tests", cores=8, shuffle_partitions=8)
+    s = get_spark("tcc-tests", cores=8)
     yield s
     s.stop()
 

@@ -60,6 +60,36 @@ def test_pagerank_duckdb_mirror(spark):
     assert got == want
 
 
+def test_pagerank_over_cap_shuffle_plan_matches(spark, monkeypatch):
+    """Above BROADCAST_NODES_CAP no node-sized side is broadcast: same
+    ranks as the broadcast plan and as pagerank_int_sql in DuckDB."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from tree_code_chunker_spark.operators import graph
+
+    rng = np.random.RandomState(71)
+    edges = _rand_edges(rng, n_nodes=30, n_edges=120)
+    df = spark.createDataFrame(edges, "src bigint, dst bigint")
+    real, hinted = F.broadcast, []
+    monkeypatch.setattr(F, "broadcast", lambda d: hinted.append(d) or real(d))
+
+    def ranks():
+        hinted.clear()
+        return sorted(map(tuple, pagerank_int(df, iters=4).collect()))
+
+    broadcast = ranks()
+    assert hinted
+    monkeypatch.setattr(graph, "BROADCAST_NODES_CAP", 0)
+    shuffled = ranks()
+    assert not hinted
+    vals = ", ".join(f"({s}, {d})" for s, d in edges)
+    sql = (f"WITH e(src, dst) AS (VALUES {vals}), "
+           + pagerank_int_sql("e", iters=4))
+    want = sorted(map(tuple, duckdb.connect().execute(sql).fetchall()))
+    assert shuffled == broadcast == want
+
+
 def test_pagerank_sink_concentrates_rank(spark):
     # star graph: every spoke points at the hub -> hub rank dominates
     edges = [(i, 99) for i in range(1, 20)]

@@ -299,28 +299,35 @@ def test_cc_deep_path_converges(spark):
         connected_components(path, max_iter=5, method="label")
 
 
-def test_lsh_bucket_jvm_matches_pandas(spark):
-    """The codegen bucket expression and the Arrow/numpy bucket UDF must
-    produce identical bit patterns (both sign on the 6dp-rounded dot)."""
+def test_lsh_bucket_matches_numpy_sign_bits(spark):
+    """lsh_bucket_udf against a per-row numpy reference: bit i is set iff
+    the 6dp-rounded dot with hyperplane i is positive.  A null vector and
+    one whose length is not dim get a null bucket."""
     import numpy as np
 
     from tree_code_chunker_spark.operators.similarity import (
-        lsh_bucket_col,
+        SIM_ROUND,
+        _hyperplanes,
         lsh_bucket_udf,
     )
 
     rng = np.random.RandomState(21)
     vecs = rng.standard_normal((200, 24))
+    planes = _hyperplanes(24, 10, seed=42)
+    want = {i: sum(1 << b for b in range(10)
+                   if np.round(np.dot(vecs[i], planes[b]), SIM_ROUND) > 0)
+            for i in range(200)}
+    want.update({200: None, 201: None})
     df = spark.createDataFrame(
-        [(i, vecs[i].tolist()) for i in range(200)],
+        [(i, vecs[i].tolist()) for i in range(200)]
+        + [(200, None), (201, [1.0, 2.0])],
         "vec_id long, embedding array<double>")
-    got = df.select(
+    got = {r["vec_id"]: r["b"] for r in df.select(
         "vec_id",
-        lsh_bucket_col(F.col("embedding"), dim=24, n_bits=10).alias("a"),
         lsh_bucket_udf(dim=24, n_bits=10)(F.col("embedding")).alias("b"),
-    ).collect()
-    assert all(r["a"] == r["b"] for r in got)
-    assert len({r["a"] for r in got}) > 1  # buckets actually vary
+    ).collect()}
+    assert got == want
+    assert len(set(want.values())) > 2  # buckets actually vary
 
 
 def test_minhash_est_jaccard_scores_candidates(spark):
@@ -417,45 +424,59 @@ def test_embedding_lsh_candidates_prune(spark):
     """The banded candidate set must be a small fraction of all pairs —
     the reason the LSH form is the scale default (measured ~2% at
     n_bits=32/bands=4 on the fixture)."""
-    from tree_code_chunker_spark.operators.similarity import lsh_bucket_col
+    from tree_code_chunker_spark.operators.dedup import (
+        embedding_lsh_candidates,
+    )
 
     aug = _planted_twin_vectors(spark).cache()
     n = aug.count()
-    r = 32 // 4
-    mask = (1 << r) - 1
-    sk = aug.withColumn("sk", lsh_bucket_col(F.col("v"), 64, 32, 42))
-    banded = sk.select(
-        "vec_id",
-        F.posexplode(F.array(*[
-            F.shiftright("sk", b * r).bitwiseAND(F.lit(mask))
-            for b in range(4)
-        ])).alias("band_id", "band_key"),
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    n_cand = (
-        a.join(b, (F.col("a.band_id") == F.col("b.band_id"))
-               & (F.col("a.band_key") == F.col("b.band_key"))
-               & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .select("a.vec_id", "b.vec_id").distinct().count()
-    )
+    n_cand = embedding_lsh_candidates(aug, "vec_id", "v", 64).count()
     all_pairs = n * (n - 1) // 2
     assert n_cand < all_pairs * 0.10, (n_cand, all_pairs)
     aug.unpersist()
 
 
-def test_embedding_exact_near_dup_row_guard(spark):
-    """The O(n^2) exact form refuses oversized inputs and points at the
-    LSH path; force=True overrides."""
-    from tree_code_chunker_spark.operators.dedup import embedding_near_dup_pairs
+def test_lsh_paths_skip_null_and_short_vectors(spark):
+    """A null vector and one shorter than dim get no LSH bucket: the job
+    completes, neither row is paired, probed or answered, and every good
+    row's answer is unchanged."""
+    from tree_code_chunker_spark.operators.dedup import (
+        embedding_near_dup_pairs_lsh,
+    )
 
+    good = _planted_twin_vectors(spark)
+    bad = spark.createDataFrame([(900001, None), (900002, [0.5, 0.25, 0.125])],
+                                "vec_id long, v array<double>")
+    mixed = good.unionByName(bad)
+
+    def pairs(df):
+        return sorted(map(tuple, embedding_near_dup_pairs_lsh(
+            df, "vec_id", "v", dim=64, threshold=0.99).collect()))
+
+    got = pairs(mixed)
+    assert got and got == pairs(good)
+    queries = mixed.filter((F.col("vec_id") < 5) | (F.col("vec_id") > 900000))
+
+    def ann(corpus):
+        return sorted(map(tuple, ann_lsh_topk(
+            queries, corpus, k=3, dim=64, vec_col="v", n_bits=8).collect()))
+
+    got = ann(mixed)
+    assert got and got == ann(good)
+    assert not {900001, 900002} & {x for r in got for x in r[:2]}
+
+
+def test_embedding_exact_near_dup_row_guard(spark, monkeypatch):
+    """The O(n^2) exact form refuses inputs past MAX_EXACT_ROWS and points
+    at the LSH path."""
+    from tree_code_chunker_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "MAX_EXACT_ROWS", 10)
     df = spark.range(30).select(
         F.col("id").alias("vec_id"),
         F.array(F.lit(1.0), F.col("id").cast("double")).alias("v"))
     with pytest.raises(ValueError, match="embedding_near_dup_pairs_lsh"):
-        embedding_near_dup_pairs(df, "vec_id", "v", max_rows=10)
-    assert embedding_near_dup_pairs(
-        df, "vec_id", "v", threshold=0.999, max_rows=10, force=True
-    ).count() >= 0
+        dedup.embedding_near_dup_pairs(df, "vec_id", "v")
 
 
 def test_dedup_increment_equals_full_recompute(spark, tmp_path):
@@ -785,3 +806,31 @@ class TestLmQuality:
         a = sorted(map(tuple, lm_quality(df.repartition(1)).collect()))
         b = sorted(map(tuple, lm_quality(df.repartition(17)).collect()))
         assert a == b
+
+    def test_over_cap_shuffle_plan_matches(self, spark, monkeypatch):
+        """Above MODEL_BROADCAST_CAP the count model joins unhinted: same
+        rows as the broadcast plan and as lm_quality_sql in DuckDB."""
+        import duckdb
+
+        from tree_code_chunker_spark.operators import textstats
+
+        path = "/root/testdata/sf0.001/documents.parquet"
+        df = spark.read.parquet(path).select("doc_id", "text")
+        real, hinted = F.broadcast, []
+        monkeypatch.setattr(F, "broadcast",
+                            lambda d: hinted.append(d) or real(d))
+
+        def rows():
+            hinted.clear()
+            return sorted(map(tuple, textstats.lm_quality(df).collect()))
+
+        broadcast = rows()
+        assert len(hinted) == 3  # c3, c2 and the one-row alphabet size
+        monkeypatch.setattr(textstats, "MODEL_BROADCAST_CAP", 0)
+        shuffled = rows()
+        assert len(hinted) == 1  # only the one-row alphabet size
+        sql = (f"WITH documents AS (SELECT * FROM '{path}'), "
+               + textstats.lm_quality_sql("documents"))
+        want = sorted(map(tuple, duckdb.connect().execute(sql).fetchall()))
+        assert shuffled == broadcast == want
+        assert len(want) > 100

@@ -10,9 +10,14 @@ package-level definitions they reach.  It is name-based, so it errs toward
 ORACLES lists the test oracles and fixtures: reference implementations and
 data generators that only tests call by design.  Whatever they reach counts
 as reached too.  Stdlib ``ast`` only; no Spark.
+
+The knob guard applies the same roots to options: a defaulted parameter
+whose name marks a plan or threshold choice (KNOBS) must be set by some
+call outside tests/, so an option only tests set cannot grow back.
 """
 
 import ast
+import fnmatch
 import pathlib
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
@@ -27,6 +32,9 @@ ORACLES = {
     "gen_documents",                               # sources.datagen
 }
 DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+KNOBS = ("res", "res_hist", "bucket_impl", "force", "max_rows",
+         "shuffle_partitions", "broadcast_*", "*_cap")
 
 
 def _files(path):
@@ -75,3 +83,105 @@ def test_oracle_allowlist_is_exact():
     defs, entry = _scan()
     assert not ORACLES - defs.keys(), sorted(ORACLES - defs.keys())
     assert not ORACLES & _reach(defs, entry), sorted(ORACLES & _reach(defs, entry))
+
+
+def _params(fn, skip):
+    """(name, positional index or None, has default) of fn's parameters,
+    `skip` leading ones (self) dropped."""
+    a = fn.args
+    pos = (a.posonlyargs + a.args)[skip:]
+    first_default = len(pos) - len(a.defaults)
+    return ([(p.arg, i, i >= first_default) for i, p in enumerate(pos)]
+            + [(p.arg, None, d is not None)
+               for p, d in zip(a.kwonlyargs, a.kw_defaults)])
+
+
+def _callables():
+    """Every package function and method by the name a call uses (a
+    class's constructor by the class name) -> [(params, public)]."""
+    out = {}
+    for f in _files(PKG):
+        for st in ast.parse(f.read_text()).body:
+            if isinstance(st, FUNCS):
+                out.setdefault(st.name, []).append(
+                    (_params(st, 0), not st.name.startswith("_")))
+            elif isinstance(st, ast.ClassDef):
+                for m in st.body:
+                    if not isinstance(m, FUNCS):
+                        continue
+                    name = st.name if m.name == "__init__" else m.name
+                    out.setdefault(name, []).append(
+                        (_params(m, 1), not name.startswith("_")))
+    return out
+
+
+def _supplied(call, params):
+    """The parameters a call passes, by keyword or position, each with the
+    expression it passes.  Nothing is read through a ** mapping; a *args
+    splat passes every parameter from its position on."""
+    got = {k.arg: k.value for k in call.keywords if k.arg is not None}
+    for i, a in enumerate(call.args):
+        for name, pos, _ in params:
+            if pos is not None and (pos == i or isinstance(a, ast.Starred)
+                                    and pos >= i):
+                got.setdefault(name, a)
+    return got
+
+
+def _package_calls(callables):
+    """Each call outside tests/ to a package callable, with the enclosing
+    functions' (name, parameter names), innermost first."""
+    out = []
+
+    def visit(node, scopes, cls=None):
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name in callables:
+                out.append((name, node, scopes))
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.ClassDef):
+                visit(child, scopes, child.name)
+            elif isinstance(child, FUNCS):
+                fn = cls if cls and child.name == "__init__" else child.name
+                params = {p for p, _, _ in _params(child, 0)}
+                visit(child, [(fn, params), *scopes])
+            else:
+                visit(child, scopes)
+
+    for root in [PKG] + [ROOT / e for e in ENTRY]:
+        for f in _files(root):
+            visit(ast.parse(f.read_text()), [])
+    return out
+
+
+def _unset_knobs():
+    """Knob-named defaulted parameters of public package callables that no
+    call outside tests/ sets.  A call passing an enclosing package
+    function's own parameter through sets the callee's only if that
+    parameter is set in turn (a required parameter of a public callable
+    always is; a private one's is set by its callers)."""
+    callables = _callables()
+    params = [(name, p, default) for name, sigs in callables.items()
+              for ps, public in sigs if public for p, _, default in ps]
+    knobs = {(name, p) for name, p, default in params if default
+             and any(fnmatch.fnmatchcase(p, k) for k in KNOBS)}
+    is_set = {(name, p) for name, p, default in params if not default}
+    through = set()
+    for name, call, scopes in _package_calls(callables):
+        for ps, _ in callables[name]:
+            for p, value in _supplied(call, ps).items():
+                owner = isinstance(value, ast.Name) and next(
+                    (fn for fn, names in scopes if value.id in names), None)
+                if owner in callables:
+                    through.add(((owner, value.id), (name, p)))
+                else:
+                    is_set.add((name, p))
+    while more := {dst for src, dst in through if src in is_set} - is_set:
+        is_set |= more
+    return sorted(f"{name}({p}=)" for name, p in knobs - is_set)
+
+
+def test_every_plan_option_is_set_outside_tests():
+    unset = _unset_knobs()
+    assert not unset, f"options only tests set (or nothing sets): {unset}"

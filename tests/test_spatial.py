@@ -92,14 +92,6 @@ def test_dwithin_join_broadcast_and_parallelism_invariant(spark):
     assert base == bc == rp
 
 
-def test_dwithin_join_rejects_too_coarse_radius_for_res(spark):
-    a = spark.createDataFrame([(1, 0, 0, 0)],
-                              "doc_id bigint, span_pos bigint, qlat bigint, qlon bigint")
-    with pytest.raises(ValueError, match="3x3 neighborhood"):
-        dwithin_join(a, a.withColumnRenamed("doc_id", "query_id"),
-                     radius=5000, res=16)
-
-
 # ------------------------------------------------------------ trajectory ----
 
 
@@ -504,22 +496,13 @@ def test_knn_geo_equator_agrees_pole_differs(spark):
     assert ranks == {1: 1, 2: 2}
 
 
-def test_dwithin_geo_res_guards(spark):
-    from tree_code_chunker_spark.operators.spatial import (
-        dwithin_geo,
-        dwithin_geo_res,
-    )
+def test_dwithin_geo_res_guards():
+    from tree_code_chunker_spark.operators.spatial import dwithin_geo_res
 
     with pytest.raises(ValueError, match="> 0"):
         dwithin_geo_res(0)
     with pytest.raises(ValueError, match="2500 km"):
         dwithin_geo_res(5_000_000)
-    a = spark.createDataFrame([(1, 0.0, 0.0)],
-                              "pid bigint, lat double, lon double")
-    b = spark.createDataFrame([(2, 0.0, 0.0)],
-                              "query_id bigint, lat double, lon double")
-    with pytest.raises(ValueError, match="grid quantum"):
-        dwithin_geo(a, b, 100_000, a_keep=("pid",), res=14)
 
 
 def test_dwithin_geo_self_matches_bruteforce(spark):
@@ -587,8 +570,7 @@ def test_hull_diameter_tie_break_and_single(spark):
 def test_dwithin_geo_rejects_cell_side_equal_radius(spark):
     """ADVICE r5 (low): a lat cell side exactly equal to radius_m (plus
     quantization/rounding epsilons) can put a boundary pair 2 lat cells
-    apart; the guard must reject equality, and the auto-chooser must
-    never pick such a res."""
+    apart; the auto-chooser must never pick such a res."""
     import math as _math
 
     from tree_code_chunker_spark.operators.spatial import (
@@ -599,11 +581,6 @@ def test_dwithin_geo_rejects_cell_side_equal_radius(spark):
 
     res = 10
     side_m = 180.0 * M_PER_DEG / (1 << res)
-    a = spark.createDataFrame([(1, 10.0, 20.0)], "pid long, lat double, lon double")
-    b = spark.createDataFrame([(2, 10.1, 20.0)], "qid long, lat double, lon double")
-    with pytest.raises(ValueError, match="grid quantum"):
-        dwithin_geo(a, b, side_m, a_keep=("pid",), b_keep=("qid",),
-                    res=res).collect()
     # auto-chooser: for any radius the chosen res leaves > one-quantum slack
     for radius in (side_m, side_m * 0.999, 5_000.0, 123_456.0):
         r = dwithin_geo_res(radius)

@@ -100,8 +100,6 @@ def test_st_colocate_validates_args(spark):
     pts = _mkpoints(spark, n=10)
     with pytest.raises(ValueError):
         st_colocate_join(pts, 48, 0)
-    with pytest.raises(ValueError):
-        st_colocate_join(pts, 100, 60, res=12)  # side 16 < radius
 
 
 # ------------------------------------------------------------------ RDP ----

@@ -27,6 +27,8 @@ from pyspark.sql.types import ArrayType, LongType
 
 MERSENNE_P = (1 << 61) - 1
 N_PERM_DEFAULT = 64
+# embedding_near_dup_pairs refuses inputs past this many rows (O(n^2))
+MAX_EXACT_ROWS = 100_000
 
 _P61 = np.uint64(MERSENNE_P)
 
@@ -437,28 +439,28 @@ def _cc_star(pairs: DataFrame, id_a: str, id_b: str,
 
 def embedding_near_dup_pairs(
     df: DataFrame, id_col: str, vec_col: str, threshold: float = 0.95,
-    round_to: int = 6, max_rows: int = 100_000, force: bool = False,
+    round_to: int = 6,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, sim >= threshold).
 
     Exact all-pairs via a self cross join with JVM-side higher-order
     functions — the oracle-checkable baseline for gold sets and build
-    sides.  O(n^2) by construction, so it REFUSES inputs past `max_rows`
-    (one bounded limit+count probe): at corpus scale use
-    embedding_near_dup_pairs_lsh — banded LSH candidates + the same exact
-    cosine verify, identical output whenever every >=threshold pair is
-    within the band Hamming bound (pinned by test on the gold fixture).
-    Pass force=True to run the quadratic form anyway."""
+    sides.  O(n^2) by construction, so it REFUSES inputs past
+    MAX_EXACT_ROWS, read at call time (one bounded limit+count probe): at
+    corpus scale use embedding_near_dup_pairs_lsh — banded LSH candidates
+    + the same exact cosine verify, identical output whenever every
+    >=threshold pair is within the band Hamming bound (pinned by test on
+    the gold fixture)."""
     from .similarity import _dot, _norm
 
-    if not force:
-        n = df.limit(max_rows + 1).count()
-        if n > max_rows:
-            raise ValueError(
-                f"embedding_near_dup_pairs is O(n^2) all-pairs and the "
-                f"input exceeds max_rows={max_rows}: use "
-                f"embedding_near_dup_pairs_lsh (banded candidates + exact "
-                f"verify) for the scale path, or pass force=True")
+    max_rows = MAX_EXACT_ROWS
+    n = df.limit(max_rows + 1).count()
+    if n > max_rows:
+        raise ValueError(
+            f"embedding_near_dup_pairs is O(n^2) all-pairs and the "
+            f"input exceeds MAX_EXACT_ROWS={max_rows}: use "
+            f"embedding_near_dup_pairs_lsh (banded candidates + exact "
+            f"verify) for the scale path")
     a = df.select(F.col(id_col).alias("id_a"),
                   F.col(vec_col).cast("array<double>").alias("va"))
     b = df.select(F.col(id_col).alias("id_b"),
@@ -479,7 +481,6 @@ def embedding_near_dup_pairs(
 def embedding_lsh_candidates(
     df: DataFrame, id_col: str, vec_col: str, dim: int,
     n_bits: int = 32, bands: int = 4, seed: int = 42,
-    bucket_impl: str = "pandas",
 ) -> DataFrame:
     """(id_a, id_b) banded hyperplane-LSH candidate pairs (id_a < id_b,
     distinct) — the prune stage of embedding_near_dup_pairs_lsh, exposed
@@ -489,19 +490,14 @@ def embedding_lsh_candidates(
     6dp-rounded dot); bands = contiguous bit slices; candidates = pairs
     agreeing exactly on >= 1 slice (equi-join on (band_id, band_key)).
     Pigeonhole: any pair within Hamming distance bands-1 is ALWAYS a
-    candidate."""
-    from .similarity import lsh_bucket_col, lsh_bucket_udf
+    candidate.  A row lsh_bucket_udf cannot sketch (null or wrong-length
+    vector) has null band keys and joins nothing."""
+    from .similarity import lsh_bucket_udf
 
     if n_bits % bands != 0:
         raise ValueError(f"n_bits={n_bits} not divisible by bands={bands}")
     r = n_bits // bands
-    if bucket_impl == "jvm":
-        def bucket(col):
-            return lsh_bucket_col(col, dim, n_bits, seed)
-    elif bucket_impl == "pandas":
-        bucket = lsh_bucket_udf(dim, n_bits, seed)
-    else:
-        raise ValueError(f"unknown bucket_impl {bucket_impl!r}")
+    bucket = lsh_bucket_udf(dim, n_bits, seed)
     base = df.select(F.col(id_col).alias("id"),
                      F.col(vec_col).cast("array<double>").alias("v"))
     mask = (1 << r) - 1
@@ -529,7 +525,7 @@ def embedding_lsh_candidates(
 def embedding_near_dup_pairs_lsh(
     df: DataFrame, id_col: str, vec_col: str, dim: int,
     threshold: float = 0.95, n_bits: int = 32, bands: int = 4,
-    seed: int = 42, round_to: int = 6, bucket_impl: str = "pandas",
+    seed: int = 42, round_to: int = 6,
 ) -> DataFrame:
     """Scale path for embedding near-dup: banded hyperplane-LSH candidate
     join + exact cosine verify.  Same output columns as
@@ -563,19 +559,16 @@ def embedding_near_dup_pairs_lsh(
     (relevant imports, codechunk.go:691-720): cheap candidate set first,
     exact predicate second, output == the exact form's.
 
-    bucket_impl defaults to 'pandas' (one fused Arrow-batched numpy matmul
-    per batch): measured 2.4x faster than the 'jvm' form at n_bits=32 —
-    32 chained aggregate-fold lambda expressions evaluate interpreted
-    (NamedLambdaVariable, the same contention measured in the PIP unrolled
-    path), so staying "JVM-side" loses here.  Both impls take signs on the
-    6dp-rounded dot and produce identical buckets (pinned by
-    test_lsh_bucket_jvm_matches_pandas)."""
+    The sketch is lsh_bucket_udf (one fused Arrow-batched numpy matmul per
+    batch): measured 2.4x faster at n_bits=32 than the same signs as JVM
+    column expressions, whose 32 chained aggregate-fold lambdas evaluate
+    interpreted (NamedLambdaVariable)."""
     from .similarity import _dot, _norm
 
     base = df.select(F.col(id_col).alias("id"),
                      F.col(vec_col).cast("array<double>").alias("v"))
     cand = embedding_lsh_candidates(base, "id", "v", dim, n_bits, bands,
-                                    seed, bucket_impl)
+                                    seed)
     va = base.select(F.col("id").alias("id_a"), F.col("v").alias("va"))
     vb = base.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
     return (

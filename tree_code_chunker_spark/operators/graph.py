@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 SCALE = 1_000_000
+# pagerank_int broadcasts the node-sized sides at or under this many nodes
+BROADCAST_NODES_CAP = 4_000_000
 
 
 def pagerank_int(
@@ -38,7 +40,6 @@ def pagerank_int(
     dangling: str = "drop",
     deltas_out: list | None = None,
     tol: int | None = None,
-    broadcast_nodes_cap: int | None = 4_000_000,
 ) -> DataFrame:
     """edges(src, dst) directed -> (node, rank) after `iters` iterations.
 
@@ -66,7 +67,7 @@ def pagerank_int(
     once the L1 delta <= tol scale units; the returned vector is the
     first one meeting the tolerance.
 
-    broadcast_nodes_cap (r7): when the node count is at or under the cap,
+    Plan: when the node count is at or under BROADCAST_NODES_CAP,
     every node-sized side (rank, degree, the gathered contributions, the
     delta comparison) rides as an explicit broadcast, so the EDGE LIST —
     the data-sized input — is never shuffled: the only exchange per
@@ -76,7 +77,7 @@ def pagerank_int(
     exchanges/iteration un-hinted vs 1 with the cap).  Graphs with more
     nodes than the cap keep the all-shuffle plan, which scales without a
     memory-resident node vector; results are bit-identical either way
-    (integer sums are order-independent).  None/0 disables.
+    (integer sums are order-independent).
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
@@ -107,9 +108,7 @@ def pagerank_int(
     track = deltas_out is not None or tol is not None
     # node-vector broadcast regime: one count() (materializes the seed
     # checkpoint that every iteration reuses anyway) decides the plan
-    bcast = False
-    if broadcast_nodes_cap:
-        bcast = rank.count() <= broadcast_nodes_cap
+    bcast = rank.count() <= BROADCAST_NODES_CAP
 
     def b(df):
         return F.broadcast(df) if bcast else df

@@ -103,7 +103,7 @@ def _self_key(tie_cols: list[str]) -> Column:
 
 def knn_bruteforce(
     queries: DataFrame, corpus: DataFrame, k: int,
-    tie_cols: list[str] = ["doc_id", "span_pos"],
+    tie_cols: tuple[str, ...] = ("doc_id", "span_pos"),
     exclude_self: bool = False,
 ) -> DataFrame:
     """Exact baseline: broadcast queries x full corpus + window top-k.
@@ -460,7 +460,7 @@ class KnnIndex:
 
     def __init__(self, corpus: DataFrame,
                  res: int = DEFAULT_CELL_RES,
-                 tie_cols: list[str] = ["doc_id", "span_pos"],
+                 tie_cols: tuple[str, ...] = ("doc_id", "span_pos"),
                  res_hist: int | None = None):
         if res_hist is None:
             # coarse is better for small probes: rh=7 -> a 16k-cell
@@ -515,7 +515,7 @@ class KnnIndex:
 def knn_ring(
     queries: DataFrame, corpus: DataFrame = None, k: int = 5,
     res: int = DEFAULT_CELL_RES,
-    tie_cols: list[str] = ["doc_id", "span_pos"],
+    tie_cols: tuple[str, ...] = ("doc_id", "span_pos"),
     index: KnnIndex | None = None,
     exclude_self: bool = False,
 ) -> DataFrame:
@@ -575,7 +575,7 @@ def knn_ring(
 def knn_self_join(
     corpus: DataFrame, k: int = 5,
     res: int = DEFAULT_CELL_RES,
-    tie_cols: list[str] = ["doc_id", "span_pos"],
+    tie_cols: tuple[str, ...] = ("doc_id", "span_pos"),
     index: KnnIndex | None = None,
 ) -> DataFrame:
     """Corpus-vs-corpus kNN: every corpus point probes for its k nearest
@@ -610,8 +610,7 @@ def knn_self_join(
 
 def knn_within(
     queries: DataFrame, corpus: DataFrame, k: int, radius: int,
-    tie_cols: list[str] = ["doc_id", "span_pos"],
-    res: int | None = None,
+    tie_cols: tuple[str, ...] = ("doc_id", "span_pos"),
 ) -> DataFrame:
     """Bounded kNN: for each query, its k nearest corpus points WITHIN
     `radius` (fewer rows if the disk holds fewer) — the radius-capped
@@ -626,8 +625,7 @@ def knn_within(
 
     cand = dwithin_join(
         corpus, queries, radius,
-        a_keep=tuple(tie_cols), b_keep=("query_id",),
-        res=res, broadcast_b=True,
+        a_keep=tuple(tie_cols), b_keep=("query_id",), broadcast_b=True,
     )
     return _topk(cand, k, tie_cols).select(
         "query_id", *tie_cols, "d2", "rank")

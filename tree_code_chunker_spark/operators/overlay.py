@@ -325,7 +325,6 @@ def snap_to_segments(
     p_keep: tuple[str, ...] = ("doc_id", "span_pos"),
     seg_id: str = "seg_id",
     nearest_only: bool = True,
-    broadcast_segs: bool = True,
 ) -> DataFrame:
     """Map-matching: snap each point to its nearest segment within `radius`.
 
@@ -350,15 +349,13 @@ def snap_to_segments(
     (extent/side + 2r/side + 2)^2 — pick res via
     overlay_res(max_seg_extent + 2 * radius) to bound it at 4.
 
-    broadcast_segs (r7): the segment layer is the reference side of a
-    map-matching join (a road network, orders of magnitude smaller than
-    the point stream), but Catalyst's size estimate for the exploded
-    cover regularly exceeds the auto-broadcast threshold and the planner
-    then SHUFFLES the full point side into a sort-merge join (measured:
-    8.2s vs 4.4s broadcast on the bench's 9.2M x 29k stage, identical
-    rows).  Default True forces the broadcast; pass False for segment
-    layers too large to broadcast (continent-scale networks), which
-    restores the shuffled-join plan.
+    Plan: the segment side always broadcasts.  The segment layer is the
+    reference side of a map-matching join (a road network, orders of
+    magnitude smaller than the point stream), but Catalyst's size
+    estimate for the exploded cover regularly exceeds the auto-broadcast
+    threshold and the planner then SHUFFLES the full point side into a
+    sort-merge join (measured: 8.2s vs 4.4s broadcast on the bench's 9.2M
+    x 29k stage, identical rows).
     """
     if radius < 1:
         raise ValueError(f"radius must be >= 1, got {radius}")
@@ -426,10 +423,8 @@ def snap_to_segments(
     # join condition AND again in the projection.  The simple
     # join -> project -> filter below keeps the distance expression
     # evaluated exactly once per candidate.
-    if broadcast_segs:
-        s_side = F.broadcast(s_side)
     cand = (
-        p_side.join(s_side, ["cy", "cx"])
+        p_side.join(F.broadcast(s_side), ["cy", "cx"])
         .withColumn("dist2_e6", d2e6)
         .filter(F.col("dist2_e6")
                 <= F.lit(int(radius) * int(radius) * SNAP_SCALE))

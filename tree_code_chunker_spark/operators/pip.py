@@ -7,10 +7,10 @@ the 2-D generalization of the reference's point-in-interval scope join
 
 Physical plan, designed for 10^12 points x 10^3..10^5 polygons:
  1. **Cover** (build side, once per PolygonIndex): every polygon's bbox
-    cells at coarse resolution `res`, classified in one vectorized numpy
-    pass as FULL (all corners inside, no edge crossing it) or BOUNDARY
-    (fully-outside cells dropped), sorted by the packed cell key and
-    broadcast once together with the padded edge tensors.
+    cells at the coarse resolution DEFAULT_COVER_RES, classified in one
+    vectorized numpy pass as FULL (all corners inside, no edge crossing
+    it) or BOUNDARY (fully-outside cells dropped), sorted by the packed
+    cell key and broadcast once together with the padded edge tensors.
  2. **Prune**: one narrow pass over the points — no join, no exchange.
     `_cover_pairs` packs each point's res-cell key (plus, for the
     distance join, its Chebyshev-k neighbour cells) and `searchsorted`s
@@ -441,8 +441,8 @@ class PolygonIndex:
     reference's parser-pool/grammar-cache pattern, applied to geometry.)
     """
 
-    def __init__(self, spark, polygons: DataFrame, res: int = DEFAULT_COVER_RES):
-        self.res = res
+    def __init__(self, spark, polygons: DataFrame):
+        self.res = res = DEFAULT_COVER_RES
         self._spark = spark
         self.pack = _collect_polygon_pack(polygons)
         ids, Y1, X1, Y2, X2 = _edge_tensor(self.pack)
@@ -487,19 +487,18 @@ class PolygonIndex:
         )
 
 
-def build_polygon_index(polygons: DataFrame,
-                        res: int = DEFAULT_COVER_RES) -> PolygonIndex:
-    return PolygonIndex(polygons.sparkSession, polygons, res)
+def build_polygon_index(polygons: DataFrame) -> PolygonIndex:
+    return PolygonIndex(polygons.sparkSession, polygons)
 
 
-def _index(op: str, points: DataFrame, polygons: DataFrame | None, res: int,
+def _index(op: str, points: DataFrame, polygons: DataFrame | None,
            index: PolygonIndex | None) -> PolygonIndex:
     if index is not None:
         return index
     if polygons is None:
         raise ValueError(f"{op} needs a build side: pass polygons= "
                          "and/or index=")
-    return PolygonIndex(points.sparkSession, polygons, res)
+    return PolygonIndex(points.sparkSession, polygons)
 
 
 def _hits(idx: PolygonIndex):
@@ -535,7 +534,6 @@ def _hits(idx: PolygonIndex):
 def pip_join(
     points: DataFrame,
     polygons: DataFrame = None,
-    res: int = DEFAULT_COVER_RES,
     keep_cols: tuple[str, ...] = ("doc_id", "span_pos"),
     index: PolygonIndex | None = None,
 ) -> DataFrame:
@@ -551,7 +549,7 @@ def pip_join(
     broadcast across probe batches (it is polygon-only, independent of
     the points).
     """
-    hits = _hits(_index("pip_join", points, polygons, res, index))
+    hits = _hits(_index("pip_join", points, polygons, index))
     return (
         points.filter(F.col("qlat").isNotNull() & F.col("qlon").isNotNull())
         .select(*keep_cols, F.explode(hits("qlat", "qlon")).alias("polygon_id"),
@@ -562,7 +560,6 @@ def pip_join(
 def pip_anti_join(
     points: DataFrame,
     polygons: DataFrame = None,
-    res: int = DEFAULT_COVER_RES,
     index: PolygonIndex | None = None,
 ) -> DataFrame:
     """Points contained in NO polygon — the spatial filter-out (mask out
@@ -575,7 +572,7 @@ def pip_anti_join(
     through with all of `points`' columns, in their order.  A point with a
     null or off-grid coordinate is in no polygon, so it is kept.
     """
-    hits = _hits(_index("pip_anti_join", points, polygons, res, index))
+    hits = _hits(_index("pip_anti_join", points, polygons, index))
     return points.filter(F.size(hits("qlat", "qlon")) == 0)
 
 
@@ -611,8 +608,7 @@ def polygon_distance_join(
     """
     if radius < 1:
         raise ValueError(f"radius must be >= 1, got {radius}")
-    idx = _index("polygon_distance_join", points, polygons,
-                 DEFAULT_COVER_RES, index)
+    idx = _index("polygon_distance_join", points, polygons, index)
     cover_b, edges_b, ne_b, res = (idx.cover_bc, idx.edges_bc,
                                    idx.n_edges_bc, idx.res)
     offsets = kring_offsets(-(-int(radius) // (1 << (GRID_BITS - res))))

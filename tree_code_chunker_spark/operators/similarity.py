@@ -79,38 +79,31 @@ def _hyperplanes(dim: int, n_bits: int, seed: int = 42) -> np.ndarray:
     return rng.standard_normal((n_bits, dim))
 
 
-def lsh_bucket_col(vec, dim: int, n_bits: int = 12, seed: int = 42):
-    """JVM column form of the hyperplane bucket: per plane, a zip_with/
-    aggregate dot product, sign taken on the 6dp-rounded value, OR'd into
-    the bit pattern — whole-stage-codegen end to end, no Python worker in
-    the bucketing pass (the pandas-UDF form remains for wide dims where
-    one fused numpy matmul beats n_bits separate fold expressions)."""
-    planes = _hyperplanes(dim, n_bits, seed)
-    out = F.lit(0).cast("long")
-    for i, row in enumerate(planes.tolist()):
-        plane = F.array(*[F.lit(float(x)) for x in row])
-        dot = F.aggregate(
-            F.zip_with(vec, plane, lambda x, y: x * y),
-            F.lit(0.0), lambda acc, v: acc + v)
-        out = out + F.when(F.round(dot, SIM_ROUND) > 0,
-                           F.lit(1 << i).cast("long")).otherwise(F.lit(0))
-    return out
-
-
 def lsh_bucket_udf(dim: int, n_bits: int = 12, seed: int = 42):
+    """Scalar pandas UDF array<double> -> bigint: the sign-bit pattern of
+    each vector against `n_bits` seeded hyperplanes, one fused numpy
+    matmul per Arrow batch.  A null vector, one whose length is not `dim`
+    or one with a non-finite dot gets a null bucket, so it matches
+    nothing."""
     planes = _hyperplanes(dim, n_bits, seed)
 
     @F.pandas_udf(LongType())
     def bucket(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy())
+        ok = np.array([v is not None and len(v) == dim for v in vecs],
+                      dtype=bool)
+        m = np.zeros((len(vecs), dim))
+        if ok.any():
+            m[ok] = np.stack(vecs[ok].to_numpy())
         # round before taking the sign so the bucket id is oracle-stable:
         # a SQL mirror summing the dot in a different order must land on
         # the same bit pattern
-        signs = np.round(m @ planes.T, SIM_ROUND) > 0
+        dots = np.round(m @ planes.T, SIM_ROUND)
+        ok &= np.isfinite(dots).all(axis=1)
+        signs = dots > 0
         out = np.zeros(len(m), dtype=np.int64)
         for i in range(n_bits):
             out |= signs[:, i].astype(np.int64) << i
-        return pd.Series(out)
+        return pd.Series(pd.array(out, dtype="Int64")).mask(~ok)
 
     return bucket
 
@@ -214,21 +207,13 @@ def ivf_flat_topk(
 def ann_lsh_topk(
     queries: DataFrame, corpus: DataFrame, k: int, dim: int,
     id_col: str = "vec_id", vec_col: str = "embedding",
-    n_bits: int = 12, seed: int = 42, bucket_impl: str = "jvm",
+    n_bits: int = 12, seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k: LSH bucket join (multi-probe Hamming-1), exact
-    cosine re-rank within candidates.
-
-    bucket_impl='jvm' (default) computes the sign-bit buckets as codegen
-    column expressions — the corpus bucketing pass (the data-sized side)
-    never leaves the JVM.  'pandas' uses the Arrow-batched numpy matmul —
-    same bit patterns (both take signs on the 6dp-rounded dot); kept for
-    very wide dims where one fused matmul wins."""
-    if bucket_impl == "jvm":
-        def bucket(col):
-            return lsh_bucket_col(col, dim, n_bits, seed)
-    else:
-        bucket = lsh_bucket_udf(dim, n_bits, seed)
+    cosine re-rank within candidates.  Buckets come from lsh_bucket_udf;
+    a row it cannot bucket (null or wrong-length vector) is neither a
+    candidate nor answered."""
+    bucket = lsh_bucket_udf(dim, n_bits, seed)
     c = corpus.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).cast("array<double>").alias("cvec"),

@@ -61,28 +61,21 @@ def dwithin_join(
     radius: int,
     a_keep: tuple[str, ...] = ("doc_id", "span_pos"),
     b_keep: tuple[str, ...] = ("query_id",),
-    res: int | None = None,
     broadcast_b: bool = False,
 ) -> DataFrame:
     """All (a, b) pairs with (a.qlat-b.qlat)^2 + (a.qlon-b.qlon)^2 <= radius^2.
 
     a(qlat, qlon, *a_keep) x b(qlat, qlon, *b_keep) -> one row per pair with
     a_keep + b_keep + d2 (bigint).  Exact by construction: the 3x3 cell
-    neighborhood at `res` (cell side >= radius) is a superset of the disk.
+    neighborhood at dwithin_res(radius) (cell side >= radius) is a
+    superset of the disk.
 
     Scale shape: b is exploded 9x (choose the smaller side as b) and
     equi-joined on the cell key — one bounded shuffle, no cartesian.  Pass
     broadcast_b=True when b (x9) fits in a broadcast; otherwise AQE handles
     hot-cell skew on the join key.
     """
-    if res is None:
-        res = dwithin_res(radius)
-    # at res 0 the single in-grid cell holds every point, so the join is
-    # exact for ANY radius; only a finer res can under-cover the disk
-    if res >= 1 and (1 << (GRID_BITS - res)) < radius:
-        raise ValueError(
-            f"cell side {1 << (GRID_BITS - res)} at res={res} is smaller "
-            f"than radius={radius}: the 3x3 neighborhood would miss pairs")
+    res = dwithin_res(radius)
     shift = GRID_BITS - res
     n_cells = 1 << res
 
@@ -132,7 +125,6 @@ def zonal_stats(
     points: DataFrame,
     polygons: DataFrame = None,
     value: Column | str | None = None,
-    res: int | None = None,
     index: PolygonIndex | None = None,
     keep_cols: tuple[str, ...] = ("doc_id", "span_pos"),
 ) -> DataFrame:
@@ -144,12 +136,11 @@ def zonal_stats(
     `value` is given — sum/min/max of the value expression (integer-exact
     when the value is integer).
     """
-    kw = {} if res is None else {"res": res}
     if isinstance(value, str) and value not in keep_cols:
         # pip_join projects keep_cols + polygon_id + qlat/qlon only; the
         # value column must ride through the join
         keep_cols = (*keep_cols, value)
-    matched = pip_join(points, polygons, index=index, keep_cols=keep_cols, **kw)
+    matched = pip_join(points, polygons, index=index, keep_cols=keep_cols)
     if value is None:
         return matched.groupBy("polygon_id").agg(F.count("*").alias("n_points"))
     v = F.col(value) if isinstance(value, str) else value
@@ -359,7 +350,6 @@ def dwithin_self_join(
     points: DataFrame,
     radius: int,
     id_cols: tuple[str, ...] = ("doc_id", "span_pos"),
-    res: int | None = None,
 ) -> DataFrame:
     """Spatial near-duplicate pairs: all UNORDERED pairs of distinct points
     within `radius` (the location analogue of the content near-dup
@@ -378,12 +368,7 @@ def dwithin_self_join(
     scale shape otherwise: explode rides the cell-key equi-join; never
     all-pairs.
     """
-    if res is None:
-        res = dwithin_res(radius)
-    if res >= 1 and (1 << (GRID_BITS - res)) < radius:
-        raise ValueError(
-            f"cell side {1 << (GRID_BITS - res)} at res={res} is smaller "
-            f"than radius={radius}: the 3x3 neighborhood would miss pairs")
+    res = dwithin_res(radius)
     shift = GRID_BITS - res
     n_cells = 1 << res
 
@@ -448,7 +433,6 @@ def st_colocate_join(
     dt: int,
     id_cols: tuple[str, ...] = ("doc_id", "span_pos"),
     t_col: str = "t_s",
-    res: int | None = None,
 ) -> DataFrame:
     """Spatiotemporal co-location self-join (contact detection): all
     UNORDERED pairs of distinct points with squared grid distance
@@ -493,12 +477,7 @@ def st_colocate_join(
     """
     if dt < 1:
         raise ValueError(f"dt must be >= 1, got {dt}")
-    if res is None:
-        res = dwithin_res(radius)
-    if res >= 1 and (1 << (GRID_BITS - res)) < radius:
-        raise ValueError(
-            f"cell side {1 << (GRID_BITS - res)} at res={res} is smaller "
-            f"than radius={radius}: the 3x3 neighborhood would miss pairs")
+    res = dwithin_res(radius)
     shift = GRID_BITS - res
     n_cells = 1 << res
 
@@ -581,7 +560,6 @@ def st_colocate_ab(
     b_keep: tuple[str, ...] = ("b_doc_id", "b_span_pos"),
     t_col: str = "t_s",
     b_t_col: str | None = None,
-    res: int | None = None,
 ) -> DataFrame:
     """Two-sided spatiotemporal co-location join: every (a, b) pair with
     squared grid distance <= radius^2 AND |t_a - t_b| <= dt.  The
@@ -606,12 +584,7 @@ def st_colocate_ab(
             f"a_keep and b_keep overlap: {set(a_keep) & set(b_keep)}")
     if b_t_col is None:
         b_t_col = t_col
-    if res is None:
-        res = dwithin_res(radius)
-    if res >= 1 and (1 << (GRID_BITS - res)) < radius:
-        raise ValueError(
-            f"cell side {1 << (GRID_BITS - res)} at res={res} is smaller "
-            f"than radius={radius}: the 3x3 neighborhood would miss pairs")
+    res = dwithin_res(radius)
     shift = GRID_BITS - res
     n_cells = 1 << res
 
@@ -705,7 +678,6 @@ def idw_interpolate(
     queries: DataFrame,
     radius: int,
     value_col: str = "value",
-    res: int | None = None,
 ) -> DataFrame:
     """Inverse-distance-weighted (power-2) interpolation: estimate a
     surface value at each query location from the points within `radius`
@@ -728,7 +700,7 @@ def idw_interpolate(
     cand = dwithin_join(
         points, queries, radius,
         a_keep=(value_col,), b_keep=("query_id",),
-        res=res, broadcast_b=True,
+        broadcast_b=True,
     )
     v = F.col(value_col).cast("double")
     hit = F.col("d2") == 0
@@ -830,7 +802,6 @@ def dwithin_geo(
     radius_m: float,
     a_keep: tuple[str, ...] = ("doc_id", "span_pos"),
     b_keep: tuple[str, ...] = ("query_id",),
-    res: int | None = None,
     broadcast_b: bool = False,
     lat_col: str = "lat",
     lon_col: str = "lon",
@@ -860,14 +831,7 @@ def dwithin_geo(
     cells (typically 3x3, more only near the poles), one cell-key
     equi-join, exact filter in the join projection.  No Python anywhere.
     """
-    if res is None:
-        res = dwithin_geo_res(radius_m)
-    elif 180.0 * M_PER_DEG / (1 << res) <= radius_m + _LAT_QUANTUM_M:
-        raise ValueError(
-            f"lat cell side at res={res} is not greater than radius_m="
-            f"{radius_m} plus one grid quantum ({_LAT_QUANTUM_M:.1f} m): "
-            "the +-1 lat neighborhood could miss boundary pairs under "
-            "floor quantization / distance rounding")
+    res = dwithin_geo_res(radius_m)
     shift = GRID_BITS - res
     n_cells = 1 << res
     rad_deg = radius_m / M_PER_DEG
@@ -937,7 +901,6 @@ def knn_geo(
     k: int,
     radius_m: float,
     tie_cols: tuple[str, ...] = ("doc_id", "span_pos"),
-    res: int | None = None,
     lat_col: str = "lat",
     lon_col: str = "lon",
 ) -> DataFrame:
@@ -956,7 +919,7 @@ def knn_geo(
     cand = dwithin_geo(
         corpus, queries, radius_m,
         a_keep=tuple(tie_cols), b_keep=("query_id",),
-        res=res, broadcast_b=True,
+        broadcast_b=True,
         lat_col=lat_col, lon_col=lon_col,
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -972,7 +935,6 @@ def dwithin_geo_self(
     points: DataFrame,
     radius_m: float,
     id_cols: tuple[str, ...] = ("doc_id", "span_pos"),
-    res: int | None = None,
     lat_col: str = "lat",
     lon_col: str = "lon",
 ) -> DataFrame:
@@ -988,7 +950,7 @@ def dwithin_geo_self(
     pairs = dwithin_geo(points, b, radius_m,
                         a_keep=id_cols,
                         b_keep=tuple(f"b_{c}" for c in id_cols),
-                        res=res, lat_col=lat_col, lon_col=lon_col)
+                        lat_col=lat_col, lon_col=lon_col)
     a_key = F.struct(*[F.col(c) for c in id_cols])
     b_key = F.struct(*[F.col(f"b_{c}") for c in id_cols])
     return pairs.filter(a_key < b_key)
@@ -999,7 +961,6 @@ def dbscan(
     eps: int,
     min_pts: int,
     id_col: str = "pid",
-    res: int | None = None,
 ) -> DataFrame:
     """Grid DBSCAN: density-based spatial clustering on the integer grid.
 
@@ -1028,7 +989,7 @@ def dbscan(
     b = points.select(F.col(id_col).alias("_b_pid"), "qlat", "qlon")
     nbr = (
         dwithin_join(points, b, eps,
-                     a_keep=(id_col,), b_keep=("_b_pid",), res=res)
+                     a_keep=(id_col,), b_keep=("_b_pid",))
         .filter(F.col(id_col) != F.col("_b_pid"))
         .select(F.col(id_col).alias("_pid"), "_b_pid")
         .localCheckpoint()
@@ -1259,7 +1220,6 @@ def dwell_time(
     id_col: str = "doc_id",
     ts_col: str = "t_s",
     gap_s: int = 1800,
-    res: int | None = None,
 ) -> DataFrame:
     """Geofence dwell: per (entity, polygon) VISITS — maximal runs of an
     entity's consecutive in-polygon pings with inter-ping gap <= gap_s —
@@ -1281,9 +1241,8 @@ def dwell_time(
 
     if gap_s < 0:
         raise ValueError(f"gap_s must be >= 0, got {gap_s}")
-    kw = {} if res is None else {"res": res}
     inside = pip_join(points, polygons, index=index,
-                      keep_cols=(id_col, ts_col), **kw)
+                      keep_cols=(id_col, ts_col))
     w = Window.partitionBy(id_col, "polygon_id") \
         .orderBy(F.col(ts_col).cast("long").asc())
     t = F.col(ts_col).cast("long")
@@ -1306,7 +1265,6 @@ def zonal_mode(
     polygons: DataFrame = None,
     value: str = "doc_id",
     index=None,
-    res: int | None = None,
 ) -> DataFrame:
     """Majority (modal) value of `value` among the points each polygon
     contains — the categorical companion to zonal_stats (land-cover
@@ -1318,9 +1276,7 @@ def zonal_mode(
     order the DuckDB mirror `arg_max(v, (n, v))` uses.  Returns
     polygon_id, mode_value, mode_count, n_points.
     """
-    kw = {} if res is None else {"res": res}
-    matched = pip_join(points, polygons, index=index,
-                       keep_cols=(value,), **kw)
+    matched = pip_join(points, polygons, index=index, keep_cols=(value,))
     per_val = (matched.groupBy("polygon_id", F.col(value).alias("v"))
                .agg(F.count("*").alias("n")))
     pick = F.struct(F.col("n"), F.col("v"))
@@ -1338,7 +1294,6 @@ def st_colocate_anti(
     a_keep: tuple[str, ...] = ("doc_id", "span_pos"),
     t_col: str = "t_s",
     b_t_col: str | None = None,
-    res: int | None = None,
 ) -> DataFrame:
     """Isolation query: the A rows with NO space-time contact in B —
     no b within `radius` grid units AND `dt` time units (the complement
@@ -1362,6 +1317,6 @@ def st_colocate_anti(
             F.col(t_col if b_t_col is None else b_t_col).alias("_bt"),
             "qlat", "qlon"),
         radius, dt, a_keep=a_keep, b_keep=("_bt",),
-        t_col=t_col, b_t_col="_bt", res=res)
+        t_col=t_col, b_t_col="_bt")
         .select(*a_keep).distinct())
     return a.join(hit, list(a_keep), "left_anti")

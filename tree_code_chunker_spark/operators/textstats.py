@@ -20,6 +20,9 @@ LANG_MARKERS = {
     "es": ["el", "la", "los", "que", "de"],
 }
 
+# lm_quality broadcasts its trigram count model at or under this many rows
+MODEL_BROADCAST_CAP = 5_000_000
+
 
 def nws_count_col(text: Column) -> Column:
     """NWS chars (reference rule: byte value > 32; ASCII-safe column form)."""
@@ -378,8 +381,7 @@ SELECT rank, a, b, cab, pmi FROM pmi_ranked WHERE rank <= {int(topk)}"""
 
 
 def lm_quality(df: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text",
-               model_broadcast_cap: int | None = 5_000_000) -> DataFrame:
+               text_col: str = "text") -> DataFrame:
     """Character-trigram language-model quality score per document: the
     average add-one-smoothed trigram log-probability
     avg_i ln((C3(t_i) + 1) / (C2(ctx_i) + V)), with counts taken from the
@@ -405,13 +407,12 @@ def lm_quality(df: DataFrame, id_col: str = "doc_id",
     Output: (id, n_tri, logp_avg), one row per document with >= 3 chars
     (shorter documents have no trigram and no row).
 
-    model_broadcast_cap (r7, advisor finding): the "bounded by ALPHABET^3"
-    broadcast claim only holds for small alphabets — a large-unicode
-    corpus can grow the distinct-trigram table to hundreds of millions of
-    rows.  When the cap is set, one count of the model table picks the
-    plan: at or under the cap the counts broadcast (today's fast path);
+    Plan: the "bounded by ALPHABET^3" broadcast claim only holds for small
+    alphabets — a large-unicode corpus can grow the distinct-trigram
+    table to hundreds of millions of rows.  One count of the model table
+    picks the plan: at or under MODEL_BROADCAST_CAP the counts broadcast;
     above it they join as ordinary shuffle joins, which scale without a
-    memory-resident model.  None skips the count and always broadcasts.
+    memory-resident model.
     """
     tris = (df.select(F.col(id_col).alias("id"),
                       F.col(text_col).alias("_t"))
@@ -428,7 +429,7 @@ def lm_quality(df: DataFrame, id_col: str = "doc_id",
         F.log((F.col("c3") + 1).cast("double")
               / (F.col("c2") + F.col("v")).cast("double")),
         6).cast("decimal(18,6)")
-    bcast = model_broadcast_cap is None or c3.count() <= model_broadcast_cap
+    bcast = c3.count() <= MODEL_BROADCAST_CAP
 
     def b(d):
         return F.broadcast(d) if bcast else d

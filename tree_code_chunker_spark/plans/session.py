@@ -80,19 +80,16 @@ def socket_dir() -> str:
 def get_spark(
     app_name: str = "tree-code-chunker-spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_confs: dict | None = None,
 ) -> SparkSession:
     if cores is None:
         # the CPUs this process may run on, unless SPARK_GRAFT_CPUS says
         cores = int(os.environ.get("SPARK_GRAFT_CPUS")
                     or len(os.sched_getaffinity(0)))
-    if shuffle_partitions is None:
-        shuffle_partitions = max(cores, 8)
     b = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(cores, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
