@@ -2709,7 +2709,7 @@ def q_st_contacts(spark, sf_dir):
     """Spatiotemporal co-location (contact detection): unordered pairs of
     distinct points within SELF_RADIUS grid units AND within ST_DT seconds
     of each other on a derived integer day-clock.  Engine side prunes on a
-    (cell_y, cell_x, t DIV dt) 27-bucket neighborhood equi-join; the
+    (cell_y, cell_x, t DIV dt) half-neighborhood (14 of 27) equi-join; the
     oracle brute-forces with a BETWEEN prune — the prune must be a pure
     optimization."""
     from tree_code_chunker_spark.operators.spatial import st_colocate_join
@@ -2819,18 +2819,8 @@ def q_pagerank(spark, sf_dir):
     directions).  Fixed-point integer arithmetic makes the iterative
     result bit-exact at any parallelism and CTE-mirrorable."""
     from tree_code_chunker_spark.operators.graph import pagerank_int
-    from tree_code_chunker_spark.operators.spatial import dwithin_join
 
-    pts = _points(spark, sf_dir)
-    b = pts.select(F.col("doc_id").alias("b_doc_id"), "qlat", "qlon")
-    edges = (
-        dwithin_join(pts, b, SELF_RADIUS,
-                     a_keep=("doc_id",), b_keep=("b_doc_id",))
-        .filter(F.col("doc_id") != F.col("b_doc_id"))
-        .select(F.col("doc_id").alias("src"),
-                F.col("b_doc_id").alias("dst"))
-        .distinct()
-    )
+    edges = _graph_edges(spark, sf_dir)
     return pagerank_int(edges, iters=PR_ITERS).select(
         F.col("node").cast("string").alias("node"),
         F.col("rank").cast("long").alias("rank"))
@@ -3349,18 +3339,8 @@ def q_triangles(spark, sf_dir):
     plain id-ordered triangle join matches because the triangle set is
     orientation-invariant."""
     from tree_code_chunker_spark.operators.graph import triangle_counts
-    from tree_code_chunker_spark.operators.spatial import dwithin_join
 
-    pts = _points(spark, sf_dir)
-    b = pts.select(F.col("doc_id").alias("b_doc_id"), "qlat", "qlon")
-    edges = (
-        dwithin_join(pts, b, SELF_RADIUS,
-                     a_keep=("doc_id",), b_keep=("b_doc_id",))
-        .filter(F.col("doc_id") != F.col("b_doc_id"))
-        .select(F.col("doc_id").alias("src"),
-                F.col("b_doc_id").alias("dst"))
-        .distinct()
-    )
+    edges = _graph_edges(spark, sf_dir)
     return triangle_counts(edges).select(
         F.col("node").cast("long").alias("node"), "deg", "n_tri", "cc")
 
@@ -3447,18 +3427,8 @@ def q_kcore(spark, sf_dir):
     """k-core of the spatial proximity graph: survivors of the
     synchronized peel with their in-core degree."""
     from tree_code_chunker_spark.operators.graph import k_core
-    from tree_code_chunker_spark.operators.spatial import dwithin_join
 
-    pts = _points(spark, sf_dir)
-    b = pts.select(F.col("doc_id").alias("b_doc_id"), "qlat", "qlon")
-    edges = (
-        dwithin_join(pts, b, SELF_RADIUS,
-                     a_keep=("doc_id",), b_keep=("b_doc_id",))
-        .filter(F.col("doc_id") != F.col("b_doc_id"))
-        .select(F.col("doc_id").alias("src"),
-                F.col("b_doc_id").alias("dst"))
-        .distinct()
-    )
+    edges = _graph_edges(spark, sf_dir)
     return k_core(edges, KCORE_K).select(
         F.col("node").cast("long").alias("node"), "core_deg")
 

@@ -277,26 +277,24 @@ def test_cc_star_matches_label_on_random_graphs(spark):
         star = {r["node"]: r["label"] for r in
                 connected_components(df, method="star").collect()}
         label = {r["node"]: r["label"] for r in
-                 connected_components(df, method="label").collect()}
+                 connected_components(df, method="auto").collect()}
         assert star == want, f"trial {trial}: star != union-find"
-        assert label == want, f"trial {trial}: label != union-find"
+        assert label == want, f"trial {trial}: auto != union-find"
 
 
-def test_cc_deep_path_converges(spark):
-    """A path graph with diameter > max_iter previously raised under
-    min-label; method='star' converges in O(log^2 n) rounds and
-    method='auto' degrades to it instead of failing."""
-    import pytest as _pytest
+def test_cc_deep_path_converges(spark, monkeypatch):
+    """A path graph with diameter > LABEL_MAX_ITER does not converge under
+    min-label; method='auto' restarts with star, which converges in
+    O(log^2 n) rounds."""
+    from tree_code_chunker_spark.operators import dedup
 
-    from tree_code_chunker_spark.operators.dedup import connected_components
-
+    monkeypatch.setattr(dedup, "LABEL_MAX_ITER", 5)
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "id_a long, id_b long")
-    got = {r["node"]: r["label"] for r in
-           connected_components(path, max_iter=5, method="auto").collect()}
-    assert got == {i: 0 for i in range(41)}
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(path, max_iter=5, method="label")
+    for method in ("auto", "star"):
+        got = {r["node"]: r["label"] for r in
+               dedup.connected_components(path, method=method).collect()}
+        assert got == {i: 0 for i in range(41)}, method
 
 
 def test_lsh_bucket_matches_numpy_sign_bits(spark):
@@ -355,7 +353,7 @@ def test_cc_star_keeps_self_pair_only_nodes(spark):
     star = {r["node"]: r["label"] for r in
             connected_components(pairs, method="star").collect()}
     label = {r["node"]: r["label"] for r in
-             connected_components(pairs, method="label").collect()}
+             connected_components(pairs, method="auto").collect()}
     assert star == label == {1: 1, 2: 1, 5: 5}
     with pytest.raises(ValueError, match="method"):
         connected_components(pairs, method="stars")

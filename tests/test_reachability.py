@@ -34,7 +34,7 @@ ORACLES = {
 DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
 KNOBS = ("res", "res_hist", "bucket_impl", "force", "max_rows",
-         "shuffle_partitions", "broadcast_*", "*_cap")
+         "shuffle_partitions", "broadcast_*", "*_cap", "max_iter", "method")
 
 
 def _files(path):

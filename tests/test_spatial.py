@@ -330,18 +330,67 @@ def test_dwithin_self_join_unordered_unique_pairs(spark):
 
     rng = np.random.RandomState(47)
     n = 150
-    lat, lon = rng.randint(0, 2000, n), rng.randint(0, 2000, n)
-    pts = _points_df(spark, (np.arange(n), np.zeros(n)), lat, lon)
-    rows = dwithin_self_join(pts, 300).collect()
-    pairs = [((r.doc_id, r.span_pos), (r.b_doc_id, r.b_span_pos), r.d2)
-             for r in rows]
-    # each unordered pair exactly once, ordered a < b, no self-pairs
-    assert all(a < b for a, b, _ in pairs)
-    assert len({(a, b) for a, b, _ in pairs}) == len(pairs)
-    want = _brute_pairs(lat, lon, lat, lon, 300)
-    want = {(i, j, d) for i, j, d in want if i < j}
-    got = {(int(a[0]), int(b[0]), d) for a, b, d in pairs}
-    assert got == want and len(got) > 0
+    interior = rng.randint(0, 2000, n), rng.randint(0, 2000, n)
+    # clusters in the four grid corners, the corners themselves included:
+    # their off-grid neighbour cells must be dropped, not clamped
+    near = [np.where(rng.rand(n) < 0.5, rng.randint(0, 600, n),
+                     65535 - rng.randint(0, 600, n)) for _ in range(2)]
+    corners = (np.concatenate([[0, 0, 65535, 65535], near[0]]),
+               np.concatenate([[0, 65535, 0, 65535], near[1]]))
+    for lat, lon in (interior, corners):
+        m = len(lat)
+        pts = _points_df(spark, (np.arange(m), np.zeros(m)), lat, lon)
+        rows = dwithin_self_join(pts, 300).collect()
+        pairs = [((r.doc_id, r.span_pos), (r.b_doc_id, r.b_span_pos), r.d2)
+                 for r in rows]
+        # each unordered pair exactly once, ordered a < b, no self-pairs
+        assert all(a < b for a, b, _ in pairs)
+        assert len({(a, b) for a, b, _ in pairs}) == len(pairs)
+        want = _brute_pairs(lat, lon, lat, lon, 300)
+        want = {(i, j, d) for i, j, d in want if i < j}
+        got = {(int(a[0]), int(b[0]), d) for a, b, d in pairs}
+        assert got == want and len(got) > 0
+
+
+def test_radius_joins_explode_the_neighbour_offsets(spark):
+    """The B side of each radius join explodes 9 (dwithin_join), 5
+    (dwithin_self_join), 27 (st_colocate_ab) or 14 (st_colocate_join)
+    neighbour offsets and joins once on the cell key: the halved self-join
+    shuffle, which output equality cannot see."""
+    import re
+
+    from tree_code_chunker_spark.operators.spatial import (
+        dwithin_self_join,
+        st_colocate_ab,
+        st_colocate_join,
+    )
+
+    pts = spark.createDataFrame(
+        [(1, 0, 100, 200, 5), (2, 1, 120, 210, 9)],
+        "doc_id bigint, span_pos bigint, qlat bigint, qlon bigint, t_s bigint")
+    b = pts.select(F.col("doc_id").alias("b_doc_id"),
+                   F.col("span_pos").alias("b_span_pos"), "qlat", "qlon", "t_s")
+    cases = [
+        (dwithin_join(pts, b, 50, b_keep=("b_doc_id", "b_span_pos")), 9, 2),
+        (dwithin_self_join(pts, 50), 5, 2),
+        (st_colocate_ab(pts, b, 50, 10), 27, 3),
+        (st_colocate_join(pts, 50, 10), 14, 3),
+    ]
+    key = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        plans = [df._jdf.queryExecution().executedPlan().toString()
+                 for df, _, _ in cases]
+    finally:
+        spark.conf.set(key, old)
+    for plan, (_, n_off, n_key) in zip(plans, cases):
+        offsets = re.findall(r"Generate explode\((\[.*?\]\])\)", plan)
+        assert len(offsets) == 1, plan
+        assert offsets[0].count("[") - 1 == n_off, (n_off, offsets[0])
+        joins = re.findall(r"Join \[([^\]]*)\]", plan)
+        assert len(joins) == 1, plan
+        assert len(joins[0].split(",")) == n_key, joins
 
 
 def test_od_matrix_vs_python(spark):

@@ -1,10 +1,11 @@
 """Spatiotemporal co-location join + RDP simplification.
 
-st_colocate_join is pinned against an all-pairs brute force (the 27-bucket
-prune must be a pure optimization), against dwithin_self_join when the time
-tolerance is vacuous, and on exact boundary pairs (dt inclusive, bucket
-straddle).  rdp_simplify is pinned against an independent recursive
-reference implementation and its endpoint/epsilon contracts.
+st_colocate_join is pinned against an all-pairs brute force (the 14-offset
+half-neighbourhood prune must be a pure optimization, grid corners
+included), against dwithin_self_join when the time tolerance is vacuous,
+and on exact boundary pairs (dt inclusive, bucket straddle).  rdp_simplify
+is pinned against an independent recursive reference implementation and
+its endpoint/epsilon contracts.
 """
 
 import itertools
@@ -53,14 +54,31 @@ def _spark_pairs(df):
     return set(map(tuple, df.collect()))
 
 
+def _mkcorners(spark, n=120):
+    """Points clustered in the four grid corners, the corners included:
+    their off-grid neighbour cells must be dropped, not clamped."""
+    rows = [("c", i, (0, 0, 65535, 65535)[i], (0, 65535, 0, 65535)[i], 0)
+            for i in range(4)]
+    for i in range(4, n):
+        dy, dx = (i * 37) % 300, (i * 53) % 300
+        rows.append((str(i // 7), i,
+                     dy if i % 2 else 65535 - dy,
+                     dx if (i // 2) % 2 else 65535 - dx,
+                     (i * 97) % 3000))
+    return spark.createDataFrame(
+        rows, "doc_id string, span_pos long, qlat long, qlon long, t_s long")
+
+
 def test_st_colocate_matches_brute_force(spark):
-    pts = _mkpoints(spark)
-    pdf = pts.toPandas()
-    for radius, dt in [(200, 2000), (50, 900), (300, 100)]:
-        got = _spark_pairs(st_colocate_join(pts, radius, dt))
-        want = _brute_pairs(pdf, radius, dt)
-        assert got == want, (radius, dt, len(got), len(want))
-    assert _brute_pairs(pdf, 200, 2000)  # non-vacuous fixture
+    for pts in (_mkpoints(spark), _mkcorners(spark)):
+        pdf = pts.toPandas()
+        for radius, dt in [(200, 2000), (50, 900), (300, 100)]:
+            rows = st_colocate_join(pts, radius, dt).collect()
+            got = set(map(tuple, rows))
+            assert len(rows) == len(got), (radius, dt)  # each pair once
+            want = _brute_pairs(pdf, radius, dt)
+            assert got == want, (radius, dt, len(got), len(want))
+        assert _brute_pairs(pdf, 200, 2000)  # non-vacuous fixture
 
 
 def test_st_colocate_time_vacuous_equals_dwithin_self(spark):

@@ -287,31 +287,34 @@ def simhash_sketches(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return df.select(F.col(id_col).alias("id"), sk(F.col(text_col)).alias("simhash"))
 
 
+# min-label rounds before connected_components(method='auto') restarts
+# with large-star/small-star; read at call time
+LABEL_MAX_ITER = 20
+
+
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
-                         id_b: str = "id_b", max_iter: int = 20,
+                         id_b: str = "id_b",
                          method: str = "auto") -> DataFrame:
     """Connected components of the near-dup pair graph -> (node, label)
     with label = min node id in the component (the canonical duplicate to
     KEEP; everything else in the cluster is droppable).
 
     method:
-      'label' — min-label propagation: each round every node takes the min
-        of its own and its neighbors' labels, so convergence needs
-        component-DIAMETER rounds (near-dup clusters are shallow); raises
-        past max_iter.
+      'auto'  — min-label propagation first: each round every node takes
+        the min of its own and its neighbors' labels, so convergence needs
+        component-DIAMETER rounds (near-dup clusters are shallow, and a
+        round is cheaper than a star round); if it hasn't converged after
+        LABEL_MAX_ITER rounds, restart with 'star'.
       'star'  — alternating large-star/small-star contraction (Kiveris et
         al., "Connected Components in MapReduce and Beyond"): O(log^2 n)
         rounds REGARDLESS of diameter — the 10^12-node path for chain-
         shaped dup graphs.
-      'auto'  — min-label first (cheaper per round on shallow graphs);
-        if it hasn't converged after max_iter rounds, restart with 'star'
-        instead of failing.
 
     localCheckpoint cuts the per-round lineage — the round-1 kNN lesson:
     an iterative loop of joins otherwise re-evaluates its whole history
     every action.
     """
-    if method not in ("label", "star", "auto"):
+    if method not in ("star", "auto"):
         raise ValueError(f"unknown method {method!r}")
     if method == "star":
         return _cc_star(pairs, id_a, id_b)
@@ -329,7 +332,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
         .withColumn("label", F.col("node"))
         .localCheckpoint()
     )
-    for _ in range(max_iter):
+    for _ in range(LABEL_MAX_ITER):
         prop = (
             edges.join(labels.select(F.col("node").alias("src"),
                                      F.col("label").alias("src_label")), "src")
@@ -356,13 +359,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
             "node", F.col("new_label").alias("label"))
         if changed == 0:
             return labels
-    if method == "auto":
-        return _cc_star(pairs, id_a, id_b)
-    # a silent non-converged return would hand back labels that are NOT
-    # component minima — fail loudly instead (raise max_iter, or use
-    # method='star' for graphs with diameter > max_iter)
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds")
+    return _cc_star(pairs, id_a, id_b)
 
 
 def _cc_star(pairs: DataFrame, id_a: str, id_b: str,
@@ -381,7 +378,7 @@ def _cc_star(pairs: DataFrame, id_a: str, id_b: str,
     """
     raw = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
     # node universe BEFORE dropping self-pairs: a node appearing only as
-    # (x, x) must still come back as its own root, matching method='label'
+    # (x, x) must still come back as its own root, as in the min-label rounds
     all_nodes = (
         raw.select(F.col("u").alias("node"))
         .union(raw.select("v"))

@@ -5,13 +5,15 @@ DDA line rasterization.
 These extend the core PIP/kNN/tile operators (SURVEY.md §2.4 targets) with
 the remaining classic geospatial joins a 100 TB pipeline needs:
 
- * `dwithin_join` — all pairs (a, b) with squared grid distance <= radius^2.
-   Same prune-then-exact shape as the reference's 1-D interval overlap join
-   (codechunk.go:631-651) lifted to 2-D: bucket both sides at a resolution
-   whose cell side >= radius, expand ONE side to its 3x3 Chebyshev
-   neighborhood, equi-join on the cell key, then exact integer filter.
-   Never all-pairs; the only shuffle is the cell-key equi-join, and hot
-   cells ride on AQE skew-join splitting.
+ * `dwithin_join`, `dwithin_self_join`, `st_colocate_join`,
+   `st_colocate_ab` — radius joins (space, or space and time) through one
+   kernel, `_grid_pairs`: the reference's 1-D interval-overlap join
+   (codechunk.go:631-651) lifted to a 2-D or 3-D cell key.  Bucket both
+   sides at a resolution whose cell side >= radius, expand ONE side to
+   its neighbour cells (the canonical half for a self-join), equi-join on
+   the cell key, then exact integer filter.  Never all-pairs; the only
+   shuffle is the cell-key equi-join, and hot cells ride on AQE skew-join
+   splitting.
  * `zonal_stats` — per-polygon aggregates of the points each polygon
    contains (raster "zonal statistics" in vector form): composes the
    classified-cover pip_join (broadcast build side, probe never shuffled)
@@ -34,25 +36,141 @@ i*d/steps with one shared formula (exact in float64: |numerator| < 2^34).
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..config import GRID_BITS
-from .geo import kring_offsets
 from .pip import PolygonIndex, pip_join
-
-NEIGHBOR_OFFSETS = kring_offsets(1)  # the 3x3 Chebyshev-1 disk
 
 
 def dwithin_res(radius: int) -> int:
     """Finest resolution whose cell side (2^(GRID_BITS-res)) >= radius.
 
     With side >= radius, every point within `radius` of a point in cell C
-    lies in C's 3x3 Chebyshev-1 neighborhood, so 9 candidate cells suffice.
+    lies in C's 3x3 Chebyshev-1 neighborhood, so 9 candidate cells suffice
+    (_grid_pairs).
     """
     if radius < 1:
         raise ValueError(f"radius must be >= 1, got {radius}")
     side_bits = max((radius - 1).bit_length(), 1)  # smallest b: 2^b >= radius
     return max(GRID_BITS - side_bits, 0)
+
+
+def _grid_pairs(
+    a: DataFrame,
+    b: DataFrame,
+    radius: int,
+    a_keep: tuple[str, ...],
+    b_keep: tuple[str, ...],
+    *,
+    dt: int | None = None,
+    a_t: str | None = None,
+    b_t: str | None = None,
+    self_pairs: bool = False,
+    broadcast_b: bool = False,
+) -> DataFrame:
+    """The one radius-join kernel: (a, b) row pairs with squared grid
+    distance (a.qlat-b.qlat)^2 + (a.qlon-b.qlon)^2 <= radius^2 and, when
+    `dt` is given, |a[a_t] - b[b_t]| <= dt -> a_keep + b_keep + d2 (bigint),
+    plus dt_s when timed.
+
+    The prune is the reference's 1-D interval-overlap join
+    (codechunk.go:631-651) lifted to a 2-D cell key (cell_y, cell_x), or
+    3-D with t DIV dt.  Cells are dwithin_res(radius) cells, whose side is
+    >= radius, and time buckets are dt wide, so a pair within radius (and
+    dt) lies in cells at most one apart on every axis.  b is exploded to
+    the 3^n cells around its own (9 or 27 offsets) and equi-joined on the
+    cell key, which finds every such pair; the exact integer filter drops
+    the rest.  Neighbour cells off the spatial grid can never match an a
+    cell and are dropped (clamping would repeat a cell); time buckets are
+    unbounded.  Never all-pairs: the only shuffle is the cell-key
+    equi-join, hot cells ride AQE skew-join splitting, and broadcast_b
+    broadcasts the exploded b side instead.  Times are cast to bigint and
+    must be nonnegative (truncating div is floor division only there).
+
+    self_pairs (b is a, and b_keep names b's copy of a_keep): every
+    UNORDERED pair of distinct rows, once, with the lesser a_keep on the
+    left.  b explodes only the canonical half of the neighbourhood: the
+    zero offset plus the lexicographically positive ones (5 of 9, 14 of
+    27).  A cross-cell pair's cell delta d has exactly one of d and -d
+    lex-positive, so it joins under exactly one (side, offset) role
+    assignment; it is kept and swapped so the lesser id lands left.  A
+    same-cell pair joins under the zero offset in both orientations and
+    keeps a < b.  The output equals the full-neighbourhood join filtered
+    to a < b, from 5/9 or 14/27 of the exploded b rows.
+    """
+    if dt is not None and dt < 1:
+        raise ValueError(f"dt must be >= 1, got {dt}")
+    res = dwithin_res(radius)
+    shift = GRID_BITS - res
+    n_cells = 1 << res
+
+    key = ["ccy", "ccx"]
+    a_pos = [F.col("qlat").alias("a_qlat"), F.col("qlon").alias("a_qlon")]
+    b_pos = [F.col("qlat").alias("b_qlat"), F.col("qlon").alias("b_qlon")]
+    a_cell = [F.shiftright("qlat", shift).alias("ccy"),
+              F.shiftright("qlon", shift).alias("ccx")]
+    b_cell = [(F.shiftright("b_qlat", shift) + F.col("off.dy")).alias("ccy"),
+              (F.shiftright("b_qlon", shift) + F.col("off.dx")).alias("ccx")]
+    if dt is not None:
+        key.append("ctb")
+        a_pos.append(F.col(a_t).cast("long").alias("a_t"))
+        b_pos.append(F.col(b_t).cast("long").alias("b_t"))
+        a_cell.append(
+            F.expr(f"CAST(`{a_t}` AS BIGINT) div {int(dt)}").alias("ctb"))
+        b_cell.append(
+            (F.expr(f"b_t div {int(dt)}") + F.col("off.db")).alias("ctb"))
+
+    axes = ("dy", "dx", "db")[:len(key)]
+    offsets = list(itertools.product((-1, 0, 1), repeat=len(axes)))
+    zero = (0,) * len(axes)
+    o0 = []
+    if self_pairs:
+        offsets = [zero] + [o for o in offsets if o > zero]
+        o0 = [F.col("off.o0").alias("o0")]
+    off = F.explode(F.array(*[
+        F.struct(*[F.lit(v).alias(n) for v, n in zip(o, axes)],
+                 *([F.lit(int(o == zero)).alias("o0")] if self_pairs else []))
+        for o in offsets
+    ])).alias("off")
+
+    a_side = a.select(*a_keep, *a_pos, *a_cell)
+    b_rows = b.select(*([F.col(c).alias(n) for c, n in zip(a_keep, b_keep)]
+                        if self_pairs else b_keep), *b_pos)
+    b_side = (
+        b_rows.select("*", off)
+        .select(*b_rows.columns, *o0, *b_cell)
+        .filter(
+            (F.col("ccy") >= 0) & (F.col("ccy") < n_cells)
+            & (F.col("ccx") >= 0) & (F.col("ccx") < n_cells)
+        )
+    )
+    if broadcast_b:
+        b_side = F.broadcast(b_side)
+    d2 = (
+        (F.col("a_qlat") - F.col("b_qlat")) * (F.col("a_qlat") - F.col("b_qlat"))
+        + (F.col("a_qlon") - F.col("b_qlon")) * (F.col("a_qlon") - F.col("b_qlon"))
+    )
+    pairs = a_side.join(b_side, key, "inner").withColumn("d2", d2)
+    keep = F.col("d2") <= F.lit(int(radius) * int(radius))
+    measures = ["d2"]
+    if dt is not None:
+        pairs = pairs.withColumn("dt_s", F.abs(F.col("a_t") - F.col("b_t")))
+        keep = keep & (F.col("dt_s") <= F.lit(int(dt)))
+        measures.append("dt_s")
+    out = [*a_keep, *b_keep]
+    if self_pairs:
+        a_key = F.struct(*[F.col(c) for c in a_keep])
+        b_key = F.struct(*[F.col(c) for c in b_keep])
+        keep = keep & ((F.col("o0") == 1) & (a_key < b_key)
+                       | (F.col("o0") == 0) & (a_key != b_key))
+        swap = (F.col("o0") == 0) & (b_key < a_key)
+        out = ([F.when(swap, F.col(bc)).otherwise(F.col(ac)).alias(ac)
+                for ac, bc in zip(a_keep, b_keep)]
+               + [F.when(swap, F.col(ac)).otherwise(F.col(bc)).alias(bc)
+                  for ac, bc in zip(a_keep, b_keep)])
+    return pairs.filter(keep).select(*out, *measures)
 
 
 def dwithin_join(
@@ -66,59 +184,85 @@ def dwithin_join(
     """All (a, b) pairs with (a.qlat-b.qlat)^2 + (a.qlon-b.qlon)^2 <= radius^2.
 
     a(qlat, qlon, *a_keep) x b(qlat, qlon, *b_keep) -> one row per pair with
-    a_keep + b_keep + d2 (bigint).  Exact by construction: the 3x3 cell
-    neighborhood at dwithin_res(radius) (cell side >= radius) is a
-    superset of the disk.
-
-    Scale shape: b is exploded 9x (choose the smaller side as b) and
-    equi-joined on the cell key — one bounded shuffle, no cartesian.  Pass
-    broadcast_b=True when b (x9) fits in a broadcast; otherwise AQE handles
-    hot-cell skew on the join key.
+    a_keep + b_keep + d2 (bigint).  b explodes to all 9 neighbour cells
+    (_grid_pairs), so pass the smaller side as b; broadcast_b=True when b
+    (x9) fits in a broadcast.
     """
-    res = dwithin_res(radius)
-    shift = GRID_BITS - res
-    n_cells = 1 << res
+    return _grid_pairs(a, b, radius, a_keep, b_keep, broadcast_b=broadcast_b)
 
-    a_side = a.select(
-        *a_keep,
-        F.col("qlat").alias("a_qlat"), F.col("qlon").alias("a_qlon"),
-        F.shiftright("qlat", shift).alias("ccy"),
-        F.shiftright("qlon", shift).alias("ccx"),
-    )
-    off = F.explode(F.array(*[
-        F.struct(F.lit(dy).alias("dy"), F.lit(dx).alias("dx"))
-        for dy, dx in NEIGHBOR_OFFSETS
-    ])).alias("off")
-    b_side = (
-        b.select(
-            *b_keep,
-            F.col("qlat").alias("b_qlat"), F.col("qlon").alias("b_qlon"),
-        )
-        .select("*", off)
-        .select(
-            *b_keep, "b_qlat", "b_qlon",
-            (F.shiftright("b_qlat", shift) + F.col("off.dy")).alias("ccy"),
-            (F.shiftright("b_qlon", shift) + F.col("off.dx")).alias("ccx"),
-        )
-        # out-of-grid neighbor cells can never match an a-side cell; dropping
-        # them (rather than clamping) keeps the 9 candidate cells distinct
-        .filter(
-            (F.col("ccy") >= 0) & (F.col("ccy") < n_cells)
-            & (F.col("ccx") >= 0) & (F.col("ccx") < n_cells)
-        )
-    )
-    if broadcast_b:
-        b_side = F.broadcast(b_side)
-    d2 = (
-        (F.col("a_qlat") - F.col("b_qlat")) * (F.col("a_qlat") - F.col("b_qlat"))
-        + (F.col("a_qlon") - F.col("b_qlon")) * (F.col("a_qlon") - F.col("b_qlon"))
-    )
-    return (
-        a_side.join(b_side, ["ccy", "ccx"], "inner")
-        .withColumn("d2", d2)
-        .filter(F.col("d2") <= F.lit(int(radius) * int(radius)))
-        .select(*a_keep, *b_keep, "d2")
-    )
+
+def dwithin_self_join(
+    points: DataFrame,
+    radius: int,
+    id_cols: tuple[str, ...] = ("doc_id", "span_pos"),
+) -> DataFrame:
+    """Spatial near-duplicate pairs: all UNORDERED pairs of distinct points
+    within `radius` (the location analogue of the content near-dup
+    operators in operators/dedup.py — co-located records are duplicate
+    candidates for a geocoded corpus).
+
+    id_cols + b_<id_cols> + d2, each pair once with the lesser id on the
+    left: the self-pair form of dwithin_join, exploding 5 of the 9
+    neighbour cells (_grid_pairs).
+    """
+    return _grid_pairs(points, points, radius, id_cols,
+                       tuple(f"b_{c}" for c in id_cols), self_pairs=True)
+
+
+def st_colocate_join(
+    points: DataFrame,
+    radius: int,
+    dt: int,
+    id_cols: tuple[str, ...] = ("doc_id", "span_pos"),
+    t_col: str = "t_s",
+) -> DataFrame:
+    """Spatiotemporal co-location self-join (contact detection): all
+    UNORDERED pairs of distinct points with squared grid distance
+    <= radius^2 AND |t_a - t_b| <= dt.
+
+    id_cols + b_<id_cols> + d2 + dt_s, each pair once with the lesser id
+    on the left: the self-pair form of st_colocate_ab, keyed on (cell_y,
+    cell_x, t DIV dt) and exploding 14 of the 27 neighbour cells
+    (_grid_pairs).  Timestamps must be nonnegative integers.
+
+    With dt at or past the data's whole time span every row lands in one
+    or two time buckets, but the key's spatial parts still spread the join
+    like dwithin_self_join's, so a hot time bucket cannot serialize it
+    onto one partition (pinned by test); call dwithin_self_join directly
+    when no time limit is meant, and skip the time expansion.
+    """
+    return _grid_pairs(points, points, radius, id_cols,
+                       tuple(f"b_{c}" for c in id_cols),
+                       dt=dt, a_t=t_col, b_t=t_col, self_pairs=True)
+
+
+def st_colocate_ab(
+    a: DataFrame,
+    b: DataFrame,
+    radius: int,
+    dt: int,
+    a_keep: tuple[str, ...] = ("doc_id", "span_pos"),
+    b_keep: tuple[str, ...] = ("b_doc_id", "b_span_pos"),
+    t_col: str = "t_s",
+    b_t_col: str | None = None,
+) -> DataFrame:
+    """Two-sided spatiotemporal co-location join: every (a, b) pair with
+    squared grid distance <= radius^2 AND |t_a - t_b| <= dt ->
+    a_keep + b_keep + d2 + dt_s.  Roles are semantic (e.g. new events vs
+    a reference corpus), so every match is emitted once per (a, b) row
+    pair, uncanonicalized, and b explodes all 27 neighbour cells of the
+    (cell_y, cell_x, t DIV dt) key (_grid_pairs).  Timestamps must be
+    nonnegative integers.
+
+    ``b_keep`` names must already exist on ``b`` (pre-aliased by the
+    caller, as for dwithin_join) and be disjoint from ``a_keep``.
+    ``b_t_col`` defaults to ``t_col``.
+    """
+    if set(a_keep) & set(b_keep):
+        raise ValueError(
+            f"a_keep and b_keep overlap: {set(a_keep) & set(b_keep)}")
+    return _grid_pairs(a, b, radius, a_keep, b_keep, dt=dt, a_t=t_col,
+                       b_t=t_col if b_t_col is None else b_t_col)
 
 
 def zonal_stats(
@@ -343,295 +487,6 @@ def polygon_stats(polygons: DataFrame) -> DataFrame:
         .alias("min_qlon"),
         F.expr("CAST(array_max(transform(ring, r -> r.qlon)) AS BIGINT)")
         .alias("max_qlon"),
-    )
-
-
-def dwithin_self_join(
-    points: DataFrame,
-    radius: int,
-    id_cols: tuple[str, ...] = ("doc_id", "span_pos"),
-) -> DataFrame:
-    """Spatial near-duplicate pairs: all UNORDERED pairs of distinct points
-    within `radius` (the location analogue of the content near-dup
-    operators in operators/dedup.py — co-located records are duplicate
-    candidates for a geocoded corpus).
-
-    Plans like dwithin_join with both sides the same set, but explodes
-    only the CANONICAL HALF of the 3x3 neighborhood — the zero offset
-    plus the 4 lexicographically positive ones.  A cross-cell pair's
-    cell delta has exactly one lex-positive orientation, so it joins
-    under a unique (side, offset) role assignment; same-cell pairs join
-    under offset 0 and keep the a < b orientation; cross-cell survivors
-    are canonically swapped so the lesser id lands left.  Output is
-    identical to the full 9-offset + a < b form (pinned by brute-force
-    tests and the DuckDB oracle) at 6x/10x the shuffled rows.  Same
-    scale shape otherwise: explode rides the cell-key equi-join; never
-    all-pairs.
-    """
-    res = dwithin_res(radius)
-    shift = GRID_BITS - res
-    n_cells = 1 << res
-
-    a_side = points.select(
-        *id_cols,
-        F.col("qlat").alias("a_qlat"), F.col("qlon").alias("a_qlon"),
-        F.shiftright("qlat", shift).alias("ccy"),
-        F.shiftright("qlon", shift).alias("ccx"),
-    )
-    half = [(0, 0)] + [(dy, dx) for dy, dx in NEIGHBOR_OFFSETS
-                       if (dy, dx) > (0, 0)]
-    off = F.explode(F.array(*[
-        F.struct(F.lit(dy).alias("dy"), F.lit(dx).alias("dx"),
-                 F.lit(1 if (dy, dx) == (0, 0) else 0).alias("o0"))
-        for dy, dx in half
-    ])).alias("off")
-    b_side = (
-        points.select(
-            *[F.col(c).alias(f"b_{c}") for c in id_cols],
-            F.col("qlat").alias("b_qlat"), F.col("qlon").alias("b_qlon"),
-        )
-        .select("*", off)
-        .select(
-            *[f"b_{c}" for c in id_cols], "b_qlat", "b_qlon",
-            F.col("off.o0").alias("o0"),
-            (F.shiftright("b_qlat", shift) + F.col("off.dy")).alias("ccy"),
-            (F.shiftright("b_qlon", shift) + F.col("off.dx")).alias("ccx"),
-        )
-        .filter(
-            (F.col("ccy") >= 0) & (F.col("ccy") < n_cells)
-            & (F.col("ccx") >= 0) & (F.col("ccx") < n_cells)
-        )
-    )
-    d2 = (
-        (F.col("a_qlat") - F.col("b_qlat")) * (F.col("a_qlat") - F.col("b_qlat"))
-        + (F.col("a_qlon") - F.col("b_qlon")) * (F.col("a_qlon") - F.col("b_qlon"))
-    )
-    a_key = F.struct(*[F.col(c) for c in id_cols])
-    b_key = F.struct(*[F.col(f"b_{c}") for c in id_cols])
-    need_swap = (F.col("o0") == 0) & (b_key < a_key)
-    out_cols = (
-        [F.when(need_swap, F.col(f"b_{c}")).otherwise(F.col(c)).alias(c)
-         for c in id_cols]
-        + [F.when(need_swap, F.col(c)).otherwise(F.col(f"b_{c}"))
-           .alias(f"b_{c}") for c in id_cols]
-    )
-    return (
-        a_side.join(b_side, ["ccy", "ccx"], "inner")
-        .withColumn("d2", d2)
-        .filter(
-            (F.col("d2") <= F.lit(int(radius) * int(radius)))
-            & ((F.col("o0") == 1) & (a_key < b_key)
-               | (F.col("o0") == 0) & (a_key != b_key))
-        )
-        .select(*out_cols, "d2")
-    )
-
-
-def st_colocate_join(
-    points: DataFrame,
-    radius: int,
-    dt: int,
-    id_cols: tuple[str, ...] = ("doc_id", "span_pos"),
-    t_col: str = "t_s",
-) -> DataFrame:
-    """Spatiotemporal co-location self-join (contact detection): all
-    UNORDERED pairs of distinct points with squared grid distance
-    <= radius^2 AND |t_a - t_b| <= dt.
-
-    The dwithin cell-bucket prune lifted to 3-D: bucket on (cell_y,
-    cell_x, t DIV dt) with cell side >= radius and time-bucket width dt,
-    expand ONE side to the CANONICAL HALF of its 3x3x3 neighborhood —
-    the zero offset plus the 13 lexicographically positive ones.  For an
-    unordered self-join that finds every pair exactly once: a
-    cross-bucket pair's bucket delta d has exactly one of d / -d
-    lex-positive, so it joins under a unique (side, offset) role
-    assignment; same-bucket pairs join under offset 0 and keep the
-    a < b orientation.  Cross-bucket survivors are canonically swapped
-    so the lesser id always lands in the left columns — output is
-    IDENTICAL to the full 27-offset form, at 15x/28x the shuffled rows
-    (~1.9x less shuffle volume, the dominant cost at corpus scale).
-    Equi-join on the composite key, then exact integer filter.  Never
-    all-pairs; the only shuffle is the 3-part-key equi-join, and hot
-    space-time buckets ride AQE skew-join splitting like dwithin.
-
-    Timestamps must be nonnegative integers (epoch seconds / micros):
-    the bucket id uses truncating integer division, which equals floor
-    division only for t >= 0.
-
-    DEGENERATE-dt REGIME (dt >= the data's whole time span, e.g. "same
-    day" over one day of data): every row lands in one or two time
-    buckets, so the time part of the key stops discriminating — but the
-    join key stays the full 3-part (cell_y, cell_x, t_bucket) composite,
-    whose SPATIAL parts keep partitions distributed exactly like
-    dwithin_self_join's 2-D key; a hot time bucket therefore cannot
-    serialize the join onto one partition (pinned by test: all-equal
-    timestamps + vacuous dt == the pure spatial self-join, with a
-    bounded max-bucket share).  The time prune being vacuous DOES grow
-    the candidate set to the spatial prune's — if that is the intended
-    query, call dwithin_self_join directly and skip the 27/14-offset
-    time expansion entirely.
-
-    Reference correspondence: the 3-D lift of the reference's 1-D
-    interval-overlap prune (codechunk.go:631-651), as dwithin_join is
-    the 2-D lift (SURVEY.md §2.4 J3).
-    """
-    if dt < 1:
-        raise ValueError(f"dt must be >= 1, got {dt}")
-    res = dwithin_res(radius)
-    shift = GRID_BITS - res
-    n_cells = 1 << res
-
-    a_side = points.select(
-        *id_cols,
-        F.col("qlat").alias("a_qlat"), F.col("qlon").alias("a_qlon"),
-        F.col(t_col).cast("long").alias("a_t"),
-        F.shiftright("qlat", shift).alias("ccy"),
-        F.shiftright("qlon", shift).alias("ccx"),
-        F.expr(f"CAST(`{t_col}` AS BIGINT) div {int(dt)}").alias("ctb"),
-    )
-    half = [(0, 0, 0)] + [
-        (dy, dx, db)
-        for dy in (-1, 0, 1) for dx in (-1, 0, 1) for db in (-1, 0, 1)
-        if (dy, dx, db) > (0, 0, 0)
-    ]
-    off = F.explode(F.array(*[
-        F.struct(F.lit(dy).alias("dy"), F.lit(dx).alias("dx"),
-                 F.lit(db).alias("db"),
-                 F.lit(1 if (dy, dx, db) == (0, 0, 0) else 0).alias("o0"))
-        for dy, dx, db in half
-    ])).alias("off")
-    b_side = (
-        points.select(
-            *[F.col(c).alias(f"b_{c}") for c in id_cols],
-            F.col("qlat").alias("b_qlat"), F.col("qlon").alias("b_qlon"),
-            F.col(t_col).cast("long").alias("b_t"),
-        )
-        .select("*", off)
-        .select(
-            *[f"b_{c}" for c in id_cols], "b_qlat", "b_qlon", "b_t",
-            F.col("off.o0").alias("o0"),
-            (F.shiftright("b_qlat", shift) + F.col("off.dy")).alias("ccy"),
-            (F.shiftright("b_qlon", shift) + F.col("off.dx")).alias("ccx"),
-            (F.expr(f"b_t div {int(dt)}") + F.col("off.db")).alias("ctb"),
-        )
-        # out-of-grid neighbor cells can never match; time buckets are
-        # unbounded so only the spatial axes are range-filtered
-        .filter(
-            (F.col("ccy") >= 0) & (F.col("ccy") < n_cells)
-            & (F.col("ccx") >= 0) & (F.col("ccx") < n_cells)
-        )
-    )
-    d2 = (
-        (F.col("a_qlat") - F.col("b_qlat")) * (F.col("a_qlat") - F.col("b_qlat"))
-        + (F.col("a_qlon") - F.col("b_qlon")) * (F.col("a_qlon") - F.col("b_qlon"))
-    )
-    a_key = F.struct(*[F.col(c) for c in id_cols])
-    b_key = F.struct(*[F.col(f"b_{c}") for c in id_cols])
-    # same-bucket (o0) pairs appear in both orientations: keep a < b.
-    # Cross-bucket pairs appear exactly once with geometry-chosen roles:
-    # keep all, then swap so the lesser id is always on the left.
-    need_swap = (F.col("o0") == 0) & (b_key < a_key)
-    out_cols = (
-        [F.when(need_swap, F.col(f"b_{c}")).otherwise(F.col(c)).alias(c)
-         for c in id_cols]
-        + [F.when(need_swap, F.col(c)).otherwise(F.col(f"b_{c}"))
-           .alias(f"b_{c}") for c in id_cols]
-    )
-    return (
-        a_side.join(b_side, ["ccy", "ccx", "ctb"], "inner")
-        .withColumn("d2", d2)
-        .withColumn("dt_s", F.abs(F.col("a_t") - F.col("b_t")))
-        .filter(
-            (F.col("d2") <= F.lit(int(radius) * int(radius)))
-            & (F.col("dt_s") <= F.lit(int(dt)))
-            & ((F.col("o0") == 1) & (a_key < b_key)
-               | (F.col("o0") == 0) & (a_key != b_key))
-        )
-        .select(*out_cols, "d2", "dt_s")
-    )
-
-
-def st_colocate_ab(
-    a: DataFrame,
-    b: DataFrame,
-    radius: int,
-    dt: int,
-    a_keep: tuple[str, ...] = ("doc_id", "span_pos"),
-    b_keep: tuple[str, ...] = ("b_doc_id", "b_span_pos"),
-    t_col: str = "t_s",
-    b_t_col: str | None = None,
-) -> DataFrame:
-    """Two-sided spatiotemporal co-location join: every (a, b) pair with
-    squared grid distance <= radius^2 AND |t_a - t_b| <= dt.  The
-    asymmetric sibling of st_colocate_join — roles are semantic (e.g.
-    new events vs a reference corpus), so every match is emitted once
-    per (a, b) row pair with no pair-order canonicalization.
-
-    Same 3-D prune: bucket both sides on (cell_y, cell_x, t DIV dt),
-    expand the B side to its full 3x3x3 neighborhood (27 offsets — the
-    half-neighborhood trick needs the self-join's exchangeable roles),
-    one composite-key equi-join, exact integer filter.  Timestamps must
-    be nonnegative integers.
-
-    ``b_keep`` names must already exist on ``b`` (pre-aliased by the
-    caller, mirroring dwithin_join's contract) and be disjoint from
-    ``a_keep``.  ``b_t_col`` defaults to ``t_col``.
-    """
-    if dt < 1:
-        raise ValueError(f"dt must be >= 1, got {dt}")
-    if set(a_keep) & set(b_keep):
-        raise ValueError(
-            f"a_keep and b_keep overlap: {set(a_keep) & set(b_keep)}")
-    if b_t_col is None:
-        b_t_col = t_col
-    res = dwithin_res(radius)
-    shift = GRID_BITS - res
-    n_cells = 1 << res
-
-    a_side = a.select(
-        *a_keep,
-        F.col("qlat").alias("a_qlat"), F.col("qlon").alias("a_qlon"),
-        F.col(t_col).cast("long").alias("a_t"),
-        F.shiftright("qlat", shift).alias("ccy"),
-        F.shiftright("qlon", shift).alias("ccx"),
-        F.expr(f"CAST(`{t_col}` AS BIGINT) div {int(dt)}").alias("ctb"),
-    )
-    off = F.explode(F.array(*[
-        F.struct(F.lit(dy).alias("dy"), F.lit(dx).alias("dx"),
-                 F.lit(db).alias("db"))
-        for dy in (-1, 0, 1) for dx in (-1, 0, 1) for db in (-1, 0, 1)
-    ])).alias("off")
-    b_side = (
-        b.select(
-            *b_keep,
-            F.col("qlat").alias("b_qlat"), F.col("qlon").alias("b_qlon"),
-            F.col(b_t_col).cast("long").alias("b_t"),
-        )
-        .select("*", off)
-        .select(
-            *b_keep, "b_qlat", "b_qlon", "b_t",
-            (F.shiftright("b_qlat", shift) + F.col("off.dy")).alias("ccy"),
-            (F.shiftright("b_qlon", shift) + F.col("off.dx")).alias("ccx"),
-            (F.expr(f"b_t div {int(dt)}") + F.col("off.db")).alias("ctb"),
-        )
-        .filter(
-            (F.col("ccy") >= 0) & (F.col("ccy") < n_cells)
-            & (F.col("ccx") >= 0) & (F.col("ccx") < n_cells)
-        )
-    )
-    d2 = (
-        (F.col("a_qlat") - F.col("b_qlat")) * (F.col("a_qlat") - F.col("b_qlat"))
-        + (F.col("a_qlon") - F.col("b_qlon")) * (F.col("a_qlon") - F.col("b_qlon"))
-    )
-    return (
-        a_side.join(b_side, ["ccy", "ccx", "ctb"], "inner")
-        .withColumn("d2", d2)
-        .withColumn("dt_s", F.abs(F.col("a_t") - F.col("b_t")))
-        .filter(
-            (F.col("d2") <= F.lit(int(radius) * int(radius)))
-            & (F.col("dt_s") <= F.lit(int(dt)))
-        )
-        .select(*a_keep, *b_keep, "d2", "dt_s")
     )
 
 

@@ -168,9 +168,11 @@ def bpe_pair_counts(
     boundary, GPT-2-style); pairing is pure JVM higher-order functions
     (split -> explode words -> transform(sequence) -> explode pairs), so
     the only shuffle is the final (lhs, rhs) count aggregation, whose
-    cardinality is bounded by the alphabet squared — the top-k window runs
-    on that small aggregate, not on the corpus.  Deterministic total order
-    (n_pairs DESC, lhs, rhs) makes the top-k cut reproducible.
+    cardinality is bounded by the alphabet squared.  The top-k cut is an
+    orderBy + limit (per-partition top-k, tiny driver merge) and the rank
+    window numbers only its <= top_k survivors.  Deterministic total order
+    (n_pairs DESC, lhs, rhs; (lhs, rhs) is unique) makes the cut
+    reproducible.
     """
     from pyspark.sql import Window
 
@@ -186,10 +188,11 @@ def bpe_pair_counts(
         )).alias("p")
     ).select("p.lhs", "p.rhs")
     agg = pairs.groupBy("lhs", "rhs").agg(F.count("*").alias("n_pairs"))
-    w = Window.orderBy(F.col("n_pairs").desc(), "lhs", "rhs")
+    order = (F.col("n_pairs").desc(), F.col("lhs"), F.col("rhs"))
     return (
-        agg.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= top_k)
+        agg.orderBy(*order).limit(int(top_k))
+        .withColumn("rank", F.row_number().over(Window.orderBy(*order))
+                    .cast("long"))
     )
 
 
